@@ -175,16 +175,28 @@ object Splits {
       key: String = "image_id", knownCount: Option[Long] = None): DataFrame = {
     Reserved.requireFreeColumns(df, Seq("split"), "testDevSplit",
       "it appends the split assignment column")
+    val (ranked, _, nTest) =
+      testDevRanked(df, testPercent, seed, key, knownCount)
+    ranked
+      .withColumn("split", when(col("_idx") < nTest, "test").otherwise("dev"))
+      .drop("_idx")
+  }
+
+  /** The order behind [[testDevSplit]]: `df` with its 0-based rank `_idx`
+    * in the split's seeded order, the row count n and the test size
+    * `max(1, floor(n * testPercent))`. Rows ranked below the test size are
+    * the test split; a row's position within its split is its rank minus
+    * the split's first rank.
+    */
+  def testDevRanked(df: DataFrame, testPercent: Double, seed: Long,
+      key: String, knownCount: Option[Long] = None): (DataFrame, Long, Long) = {
     // n falls out of the index's own count pass — no separate count() job
     val (indexed, counted) =
       withGlobalIndexCounted(df, Seq(rand(seed), col(key)))
     val n = knownCount.getOrElse(counted)
     require(n > 1,
       s"cannot split $n rows into test/dev (reference errors on n <= 1)")
-    val nTest = math.max(1L, math.floor(n * testPercent).toLong)
-    indexed
-      .withColumn("split", when(col("_idx") < nTest, "test").otherwise("dev"))
-      .drop("_idx")
+    (indexed, n, math.max(1L, math.floor(n * testPercent).toLong))
   }
 
   /** P3: seeded k-fold assignment, fold sizes balanced within 1 (ntile

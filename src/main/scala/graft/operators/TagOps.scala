@@ -20,27 +20,40 @@ object TagOps {
 
   val UntaggedTag = "untagged"
 
+  /** The `meta_*.json` fields the tag matrix reads, pinned so that no scan
+    * runs a schema-inference job. Tags read as strings: a numeric or boolean
+    * tag keeps its JSON text, as a cast of the inferred type would give.
+    */
+  val MetadataSchema = "tags ARRAY<STRING>"
+
   /** S1 metadata scan: read per-image `meta_<id>.json` sidecars into
     * `(image_id, tags)`. Missing/empty tag lists become `['untagged']`
     * (filters.py:50-52 contract). One JSON document per file (multiLine),
-    * filename predicate pushed to the file listing (F3).
+    * filename predicate pushed to the file listing (F3). FAILFAST: a file
+    * whose `tags` is not an array (or that is not JSON) fails the read
+    * instead of silently becoming untagged.
     */
-  def loadMetadata(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read
+  def loadMetadata(spark: SparkSession, dir: String): DataFrame =
+    metadataRows(spark.read
+      .schema(MetadataSchema)
+      .option("mode", "FAILFAST")
       .option("multiLine", "true")
       .option("pathGlobFilter", "meta_*.json")
-      .json(dir)
-    val tagsCol =
-      if (raw.columns.contains("tags")) col("tags").cast("array<string>")
-      else lit(null).cast("array<string>")
+      .json(dir))
+
+  /** `(image_id, tags)` from raw [[MetadataSchema]] rows — the id from the
+    * file name, missing/empty tags as `['untagged']`. Shared by the batch
+    * scan and [[graft.streaming.Streams.tagStream]].
+    */
+  private[graft] def metadataRows(raw: DataFrame): DataFrame =
     raw
       .withColumn("image_id",
         regexp_extract(input_file_name(), "meta_([^/]+?)\\.json$", 1))
       .withColumn("tags",
-        when(tagsCol.isNull || size(tagsCol) === 0, array(lit(UntaggedTag)))
-          .otherwise(tagsCol))
+        when(col("tags").isNull || size(col("tags")) === 0,
+          array(lit(UntaggedTag)))
+          .otherwise(col("tags")))
       .select("image_id", "tags")
-  }
 
   /** F1: keep rows having ALL of `filterTags` (intersection semantics). */
   def andFilter(tagged: DataFrame, filterTags: Seq[String],

@@ -6,18 +6,21 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.DatasetShim
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
 /** Sharded TFRecord dataset sink (SURVEY.md W1): each row's byte payload is
-  * framed into TFRecord entries, round-robined across `n/shardSize + 1`
-  * shard files (the reference's formula, `jigsaw/write_dataset.py:185,196`),
-  * plus a `.numexamples` count sidecar.
+  * framed into TFRecord entries, row i going to shard i mod numShards of
+  * `n/shardSize + 1` shard files (the reference's formula,
+  * `jigsaw/write_dataset.py:185,196`), plus a `.numexamples` count sidecar.
   *
-  * Scale: one `repartition(numShards)` round-robin shuffle, then every task
-  * streams its shard straight to the (distributed) filesystem — no driver
-  * collection, no per-row small files.
+  * Scale: one shuffle keyed by shard file, then every task streams its shard
+  * straight to the (distributed) filesystem — no driver collection, no
+  * per-row small files. One job writes every shard of several outputs.
   */
 object Sinks {
   /** Spark's Hadoop configuration when a session is active (carries
@@ -54,60 +57,124 @@ object Sinks {
 
 object TFRecordSink {
 
+  /** One sharded output of [[writeShards]]: `count` records under `dir` as
+    * `<prefix>-SSSSS.tfrecord` in the reference's `count / shardSize + 1`
+    * shards, plus a `<prefix>.numexamples` count sidecar.
+    */
+  final case class ShardedOutput(dir: String, prefix: String, count: Long,
+      shardSize: Long = 1000) {
+    val numShards: Int = (count / shardSize + 1).toInt
+  }
+
   /** Write `bytesCol` (BINARY column of serialized tf.train.Examples) under
     * `dir` as `<prefix>-SSSSS.tfrecord` shards. Returns the record count.
+    * Row i, in the frame's partition order, goes to shard i mod numShards.
     */
   def writeSharded(df: DataFrame, bytesCol: String, dir: String,
       prefix: String = "shard", shardSize: Long = 1000): Long = {
     // persist: the payload is consumed twice (count, then the write) and
     // recomputing an upstream bind/export pipeline would double all I/O
-    val payload = df.select(bytesCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val payload = DatasetShim.toInternalRdd(df.select(bytesCol))
+      .map(_.getBinary(0))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = payload.count()
-      val numShards = (n / shardSize + 1).toInt
-      // Job-level overwrite: clear previous-run shards and orphaned temp
-      // files ONCE on the driver, so tasks never have to delete a committed
-      // file (a delete-then-rename in a task would let a killed speculative
-      // attempt destroy a finished shard without replacing it).
-      Sinks.withFs(dir) { driverFs =>
-        val dirPath = new Path(dir)
-        if (driverFs.exists(dirPath)) {
-          driverFs.listStatus(dirPath).map(_.getPath).foreach { p =>
-            val name = p.getName
-            if ((name.startsWith(s"$prefix-") && name.endsWith(".tfrecord"))
-                || (name.startsWith(s".$prefix-") && name.endsWith(".tmp")))
-              driverFs.delete(p, false)
-          }
-        }
+      val counts = payload.mapPartitions(it => Iterator(it.size.toLong))
+        .collect()
+      val bases = counts.scanLeft(0L)(_ + _)
+      val indexed = payload.mapPartitionsWithIndex { (pid, it) =>
+        var i = bases(pid)
+        it.map { bytes => i += 1; ((0, i - 1), bytes) }
       }
-      // executor-side FS needs the session's Hadoop conf (s3a creds etc.)
-      val serConf = new SerializableConfiguration(Sinks.hadoopConf())
-      payload.repartition(numShards).foreachPartition {
-        (rows: Iterator[org.apache.spark.sql.Row]) =>
-          val ctx = TaskContext.get()
-          val shard = ctx.partitionId()
-          Sinks.withFs(dir, serConf.value) { fs =>
-            // write-to-temp + rename, FIRST attempt wins: rename refuses
-            // an existing destination, so a committed shard is never
-            // deleted; the losing attempt just discards its temp file
-            val finalPath = new Path(dir, f"$prefix-$shard%05d.tfrecord")
-            val tmpPath = new Path(dir,
-              f".$prefix-$shard%05d.tfrecord.${ctx.taskAttemptId()}%d.tmp")
-            val out = fs.create(tmpPath, true)
-            try rows.foreach(r =>
-              TFRecord.writeRecord(out, r.getAs[Array[Byte]](0)))
-            finally out.close()
-            if (!fs.rename(tmpPath, finalPath)) {
-              fs.delete(tmpPath, false)
-            }
-          }
-          ()
-      }
-      writeText(s"$dir/$prefix.numexamples", n.toString)
-      n
+      writeShards(indexed,
+        IndexedSeq(ShardedOutput(dir, prefix, bases.last, shardSize)))
+      bases.last
     } finally payload.unpersist()
   }
+
+  /** Write every shard of every output in one shuffle and one job.
+    * `records` are keyed by (output index, row index i within that output);
+    * row i of an output goes to its shard i mod numShards (the reference's
+    * assignment, `jigsaw/write_dataset.py:185,196`), and each shard holds
+    * its rows in row order. `count` sets an output's shard count, so it
+    * must be the number of its rows: the job checks it before any sidecar
+    * is written.
+    */
+  private[graft] def writeShards(records: RDD[((Int, Long), Array[Byte])],
+      outputs: IndexedSeq[ShardedOutput]): Unit = {
+    require(outputs.map(o => (o.dir, o.prefix)).distinct.size == outputs.size,
+      "two outputs share a directory and prefix")
+    // the job's files, output by output: file f is shard f - first(o) of
+    // the output o with first(o) <= f < first(o + 1)
+    val numShards = outputs.map(_.numShards)
+    val first = numShards.scanLeft(0)(_ + _)
+    outputs.foreach(o => clearShards(o.dir, o.prefix))
+    // executor-side FS needs the session's Hadoop conf (s3a creds etc.)
+    val serConf = new SerializableConfiguration(Sinks.hadoopConf())
+    val written = records
+      .map { case ((o, i), bytes) =>
+        ((first(o) + (i % numShards(o)).toInt, i), bytes) }
+      .repartitionAndSortWithinPartitions(new FilePartitioner(first.last))
+      .mapPartitionsWithIndex { (file, rows) =>
+        val o = first.lastIndexWhere(_ <= file)
+        val out = outputs(o)
+        Iterator(o -> commitShard(out.dir, out.prefix, file - first(o),
+          serConf)(rows.map(_._2)))
+      }
+      .collect()
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    outputs.zipWithIndex.foreach { case (o, k) =>
+      val n = written.getOrElse(k, 0L)
+      if (n != o.count) throw new IllegalStateException(
+        s"${o.dir}/${o.prefix}: wrote $n records, expected ${o.count}")
+    }
+    outputs.foreach(o =>
+      writeText(s"${o.dir}/${o.prefix}.numexamples", o.count.toString))
+  }
+
+  /** Partition = the file id that leads the (file, row) key. */
+  private final class FilePartitioner(files: Int) extends Partitioner {
+    def numPartitions: Int = files
+    def getPartition(key: Any): Int = key.asInstanceOf[(Int, Long)]._1
+  }
+
+  /** Job-level overwrite: clear previous-run shards and orphaned temp files
+    * ONCE on the driver, so tasks never have to delete a committed file (a
+    * delete-then-rename in a task would let a killed speculative attempt
+    * destroy a finished shard without replacing it).
+    */
+  private def clearShards(dir: String, prefix: String): Unit =
+    Sinks.withFs(dir) { driverFs =>
+      val dirPath = new Path(dir)
+      if (driverFs.exists(dirPath)) {
+        driverFs.listStatus(dirPath).map(_.getPath).foreach { p =>
+          val name = p.getName
+          if ((name.startsWith(s"$prefix-") && name.endsWith(".tfrecord"))
+              || (name.startsWith(s".$prefix-") && name.endsWith(".tmp")))
+            driverFs.delete(p, false)
+        }
+      }
+    }
+
+  /** Stream one shard's records to a temp file, then rename it into place.
+    * FIRST attempt wins: rename refuses an existing destination, so a
+    * committed shard is never deleted; the losing attempt just discards its
+    * temp file. Returns the number of records written.
+    */
+  private def commitShard(dir: String, prefix: String, shard: Int,
+      conf: SerializableConfiguration)(records: Iterator[Array[Byte]]): Long =
+    Sinks.withFs(dir, conf.value) { fs =>
+      val finalPath = new Path(dir, f"$prefix-$shard%05d.tfrecord")
+      val tmpPath = new Path(dir, f".$prefix-$shard%05d.tfrecord." +
+        f"${TaskContext.get().taskAttemptId()}%d.tmp")
+      var n = 0L
+      val out = fs.create(tmpPath, true)
+      try records.foreach { r => TFRecord.writeRecord(out, r); n += 1 }
+      finally out.close()
+      if (!fs.rename(tmpPath, finalPath)) {
+        fs.delete(tmpPath, false)
+      }
+      n
+    }
 
   private[sources] def writeText(path: String, content: String): Unit =
     Sinks.withFs(path) { fs =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.TagOps
+
 /** Structured Streaming extension (SURVEY.md §2.9/M7 — not a reference
   * capability; replaces its "skip files already downloaded" incremental
   * re-run, `jigsaw/io_utils.py:89,150`, with checkpointed exactly-once file
@@ -34,23 +36,13 @@ object Streams {
     * TagOps.loadMetadata. New `meta_<id>.json` files are picked up exactly
     * once per checkpoint; the batch query shape is identical.
     */
-  def tagStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = "dataset STRING, tags ARRAY<STRING>"
-    val raw = spark.readStream
-      .schema(schema)
+  def tagStream(spark: SparkSession, dir: String): DataFrame =
+    TagOps.metadataRows(spark.readStream
+      .schema(TagOps.MetadataSchema)
       .option("multiLine", "true")
       .option("pathGlobFilter", "meta_*.json")
       .option("maxFilesPerTrigger", 1000)
-      .json(dir)
-    raw
-      .withColumn("image_id",
-        regexp_extract(input_file_name(), "meta_([^/]+?)\\.json$", 1))
-      .withColumn("tags",
-        when(col("tags").isNull || size(col("tags")) === 0,
-          array(lit(graft.operators.TagOps.UntaggedTag)))
-          .otherwise(col("tags")))
-      .select("image_id", "tags")
-  }
+      .json(dir))
 
   /** Hourly tumbling-window event aggregation with late-data handling — the
     * streaming form of q12_events_hourly. Watermark bounds state: at scale

@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 
 import graft.operators.Rename
 import graft.plans.{DataModels, DatasetWriter, SemanticMaskModel}
@@ -55,6 +60,96 @@ class DatasetWriterSpec extends SparkTestBase {
       .filter(_.getName.endsWith(".tfrecord")).head
     val records = TFRecord.readAll(Files.readAllBytes(shard.toPath))
     assert(records.nonEmpty && records.forall(_.nonEmpty))
+  }
+
+  // Goldens: DatasetDigest lines of the trees the previous writer (one job
+  // per sink, round-robin shards) produced from these fixtures. Its split
+  // membership depends on how the examples are partitioned, so the
+  // fixtures pin their partitioning; the goldens were identical at 1, 2
+  // and 4 cores.
+  private val goldenNow = java.time.Instant.parse("2026-08-12T00:00:00Z")
+
+  private def golden(name: String): Seq[String] = {
+    val in = getClass.getResourceAsStream(s"/golden/dataset_writer/$name.txt")
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+    finally in.close()
+  }
+
+  private def writeCorpus(n: Int): java.io.File = {
+    val corpus = fixtureCorpus(n)
+    val out = Files.createTempDirectory("graft-out").toString
+    val bound = SemanticMaskModel.bind(spark, corpus, None)
+    val examples = SemanticMaskModel.examples(bound)
+      .repartitionByRange(2, col("image_id")).sortWithinPartitions("image_id")
+    val dict = graft.operators.LabelDictionary.fromLabels(
+      graft.sources.CorpusBinder.labels(spark, corpus))
+    DatasetWriter.write(spark, out, "ds", examples, dict,
+      user = "tester", comments = "golden",
+      trainingType = SemanticMaskModel.trainingType,
+      filters = Seq(FilterLineage("all", Seq(("or", Seq("t0", "t1"))), n)),
+      transforms = Seq(Rename("Car", "Auto")), seed = 7, now = goldenNow)
+    new java.io.File(out, "ds")
+  }
+
+  private def oneLabel: DataFrame =
+    spark.range(1).select(lit("thing").as("label"), lit(1).as("label_int"))
+
+  private def synthetic(n: Int, encode: Column => Column): DataFrame =
+    spark.range(0, n, 1, 2)
+      .select(format_string("ex%05d", col("id")).as("image_id"))
+      .withColumn("example", encode(col("image_id")))
+
+  private def writeSynthetic(examples: DataFrame): java.io.File = {
+    val out = Files.createTempDirectory("graft-out").toString
+    DatasetWriter.write(spark, out, "ds", examples, oneLabel, user = "tester",
+      comments = "golden", trainingType = "synthetic", seed = 7,
+      now = goldenNow)
+    new java.io.File(out, "ds")
+  }
+
+  test("outputs match the previous writer's: records, label map, sidecars, manifest") {
+    assert(DatasetDigest.lines(writeCorpus(10)) == golden("corpus10"))
+  }
+
+  test("n = 2: the one-row dev set becomes all train, as before") {
+    val base = writeCorpus(2)
+    assert(DatasetDigest.lines(base) == golden("corpus2"))
+    // the inner test output exists and is empty
+    assert(new java.io.File(base, "splits/complete/test.record-00000.tfrecord")
+      .length() == 0)
+  }
+
+  test("a split larger than shardSize spreads row i to shard i mod numShards") {
+    // 1600 → test 320; dev 1280 → inner test 256, train 1024 = 2 shards
+    val base = writeSynthetic(
+      synthetic(1600, id => concat(lit("example "), id).cast("binary")))
+    assert(DatasetDigest.lines(base) == golden("wide1600"))
+    val train = (0 to 1).map(k => TFRecord.readAll(Files.readAllBytes(
+      base.toPath.resolve(f"splits/complete/train.record-$k%05d.tfrecord"))))
+    assert(train.map(_.size) == Seq(512, 512))
+  }
+
+  test("write evaluates each example once, in a pinned number of jobs") {
+    val evaluated = spark.sparkContext.longAccumulator("examples_evaluated")
+    val encode = udf { (id: String) => evaluated.add(1); s"example $id".getBytes }
+    val examples = synthetic(40, id => encode(id))
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      writeSynthetic(examples)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(evaluated.value == 40) // the previous writer: 80
+    // the two split sorts each sample their input for range bounds unless
+    // they sort into one partition; the previous writer ran 27 jobs (24)
+    val samplers =
+      if (spark.conf.get("spark.sql.shuffle.partitions").toInt > 1) 2 else 0
+    assert(jobs.get == 7 + samplers)
   }
 
   test("instance model rewrites panel labels and appends per-instance masks") {

@@ -31,6 +31,24 @@ class SinksSpec extends SparkTestBase {
     assert(total == 1500)
   }
 
+  test("writeSharded puts row i on shard i mod numShards, in row order") {
+    val dir = Files.createTempDirectory("graft-tfr-mod").toString
+    def shard(k: Int) = TFRecord.readAll(Files.readAllBytes(
+      java.nio.file.Paths.get(f"$dir/shard-$k%05d.tfrecord")))
+      .map(new String(_, "UTF-8"))
+    // three input partitions; row order = id order
+    def rows(n: Int) = spark.range(0, n, 1, 3)
+      .select(col("id").cast("string").cast("binary").as("payload"))
+    assert(TFRecordSink.writeSharded(rows(2500), "payload", dir) == 2500)
+    for (k <- 0 to 2)
+      assert(shard(k) == (k until 2500 by 3).map(_.toString), s"shard $k")
+    // a smaller rerun replaces the tree: stale shards 1 and 2 are cleared
+    assert(TFRecordSink.writeSharded(rows(5), "payload", dir) == 5)
+    assert(new java.io.File(dir).listFiles().map(_.getName).sorted.toList ==
+      List("shard-00000.tfrecord", "shard.numexamples"))
+    assert(shard(0) == (0 until 5).map(_.toString))
+  }
+
   test("TFRecordDataSource reads written shards back, distributed, CRC-checked") {
     val dir = Files.createTempDirectory("graft-tfr-read").toString
     val df = (1 to 250).map(i => (i.toLong, s"payload $i"))

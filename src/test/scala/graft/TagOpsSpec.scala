@@ -35,6 +35,28 @@ class TagOpsSpec extends SparkTestBase {
     assert(rows("d") == List("untagged"))
   }
 
+  test("loadMetadata: numeric tags read as strings; a non-array tags fails") {
+    def corpus(files: (String, String)*): String = {
+      val dir = Files.createTempDirectory("graft-meta").toFile
+      dir.deleteOnExit()
+      for ((name, json) <- files)
+        Files.writeString(new java.io.File(dir, name).toPath, json)
+      dir.getAbsolutePath
+    }
+    val rows = TagOps.loadMetadata(spark, corpus(
+      "meta_n.json" -> """{"tags": [7, 2.5, true]}""",
+      "meta_s.json" -> """{"tags": ["t1"]}"""))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
+    assert(rows == Map("n" -> List("7", "2.5", "true"), "s" -> List("t1")))
+    for (bad <- Seq("\"t1\"", "{\"t\": 1}")) {
+      val df = TagOps.loadMetadata(spark, corpus(
+        "meta_a.json" -> """{"tags": ["t1"]}""",
+        "meta_bad.json" -> s"""{"tags": $bad}"""))
+      val e = intercept[org.apache.spark.SparkException](df.collect())
+      assert(e.getMessage.contains("meta_bad.json"), e.getMessage)
+    }
+  }
+
   test("andFilter keeps rows with ALL tags; orFilter with ANY tag") {
     val df = TagOps.loadMetadata(spark, fixtureCorpus())
     assert(TagOps.andFilter(df, Seq("t1", "tA"))

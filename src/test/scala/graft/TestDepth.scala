@@ -12,11 +12,14 @@ package graft
   *
   * `SPARK_GRAFT_FULL_TESTS=1 sbt test` restores the original counts for
   * local soak runs (recommended before shipping changes to the store
-  * model or the split/sampler algebra).
+  * model or the split/sampler algebra). Empty, `0` and `false` (any case)
+  * mean off.
   */
 object TestDepth {
-  val full: Boolean =
-    sys.env.get("SPARK_GRAFT_FULL_TESTS").exists(_.nonEmpty)
+  val full: Boolean = enabled(sys.env.get("SPARK_GRAFT_FULL_TESTS"))
+
+  private[graft] def enabled(value: Option[String]): Boolean =
+    value.map(_.trim.toLowerCase).exists(v => !Set("", "0", "false")(v))
 
   /** `fullCount` iterations when SPARK_GRAFT_FULL_TESTS is set, else the
     * window-sized `cut`. Seeds stay 0-based either way, so the default

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Read an interleaved-control bench directory (tools/ctrl_bench.sh):
-per-variant per-query minima, their totals, and the per-query deltas
+per-variant per-query minima, their totals, the per-query deltas
 larger than the combined spread — the BASELINE.md reading rule applied
-mechanically. Usage: ctrl_read.py <dir with ctrl_{base,head}N.json>"""
+mechanically — and the queries only one variant timed, which the totals
+leave out. Usage: ctrl_read.py <dir with ctrl_{base,head}N.json>"""
 import json, glob, os, sys
 
 d = sys.argv[1] if len(sys.argv) > 1 else "bench/ctrl"
@@ -26,6 +27,7 @@ if not base_paths or not head_paths:
 b, bs = minima(base_paths)
 h, hs = minima(head_paths)
 common = sorted(set(b) & set(h))
+one_sided = sorted(set(b) ^ set(h))
 tb, th = sum(b[q] for q in common), sum(h[q] for q in common)
 print(f"legs: {len(base_paths)} base, {len(head_paths)} head; "
       f"{len(common)} common queries")
@@ -43,3 +45,8 @@ for delta, q, bq, hq, band in sorted(rows):
           f"delta {delta:+.3f}  (spread {band:.3f})")
 if not rows:
     print("  (none — suite-flat)")
+print("queries timed in only one variant (failed or missing in the other):")
+for q in one_sided:
+    print(f"  {q:32s} {'base only' if q in b else 'head only'}")
+if not one_sided:
+    print("  (none)")
