@@ -200,8 +200,14 @@ object Bench {
     // parsed:null from r17 through r21 because of that); build.sbt now
     // forks run with `outputStrategy := StdoutOutput` so this line
     // reaches stdout BARE. Same JSON, same methodology — output-path fix
-    // only (VERDICT r21 item 2).
-    spark.stop()
+    // only (VERDICT r21 item 2). A failing stop must not lose the line:
+    // it is reported on stderr and the line still prints.
+    try spark.stop()
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] spark.stop() failed: $e")
+        e.printStackTrace()
+    }
     println(s"""{$head,"queries":$qsShort}""")
     System.out.flush()
   }

@@ -1898,36 +1898,30 @@ object Dedup {
     * that truncated) would silently break the contract.
     *
     * SCALE SHAPE per increment: the contracted graph has at most
-    * 2·|newPairs| vertices, so the iterative min-propagation — the only
-    * loop — runs on increment-sized data regardless of corpus size. The
-    * label store is touched exactly twice, both corpus-scale-shuffle-
-    * free with `broadcastIncrement` on (the default): one map-side scan
-    * pruned to (key, component) against the broadcast touched-key set,
-    * and one map-side relabel joining the broadcast (old rep → new rep)
-    * map. A batch rerun instead shuffles the FULL edge set once per
-    * propagation round. Pass `broadcastIncrement = false` when one
-    * increment's touched-key set is too large to broadcast — every join
-    * falls back to Catalyst/AQE planning (and at that point a batch
-    * rerun is usually competitive anyway).
-    *
-    * `maxIterations` / `failOnNonConvergence` / `reliableLineage` are
-    * passed to the inner contracted solve (see [[connectedComponents]];
-    * contraction never increases graph diameter, so a bound that held
-    * for batch runs holds here).
+    * 2·|newPairs| vertices, so it is solved on the driver with
+    * union-find, in four steps: the increment's edges are collected in
+    * one action; the representatives of the touched keys come back from
+    * one map-side scan of the label store filtered to the touched-key
+    * set (an IN-set predicate — a broadcast of the same keys would run
+    * a job of its own, and the predicate prunes a latest-per-key store
+    * before its aggregation); the union-find labels each merged cluster
+    * by its minimum key under Spark's ordering of the key type (UTF-8
+    * byte order for strings, as `min` orders them); and the store is
+    * relabeled map-side against the broadcast (old rep → new rep) map.
+    * The driver holds only increment-sized data — the edges, the touched
+    * keys and their representatives — and the store is never shuffled.
+    * A batch rerun instead shuffles the FULL edge set once per
+    * propagation round.
     */
   def connectedComponentsIncremental(labels: DataFrame,
-      newPairs: DataFrame, aCol: String = "key_a", bCol: String = "key_b",
-      maxIterations: Int = 25, failOnNonConvergence: Boolean = true,
-      reliableLineage: Boolean = false,
-      broadcastIncrement: Boolean = true): DataFrame = {
-    val (store, repMap, newKeyLabels, bc) = incrementalComponentsCore(
-      labels, newPairs, aCol, bCol, maxIterations, failOnNonConvergence,
-      reliableLineage, broadcastIncrement)
+      newPairs: DataFrame, aCol: String = "key_a",
+      bCol: String = "key_b"): DataFrame = {
+    val (store, remapped, newKeyLabels, _) =
+      incrementalComponentsCore(labels, newPairs, aCol, bCol)
     // relabel the store: old representative → merged representative,
     // untouched components pass through (broadcast left-outer, map-side)
     val updatedOld = store
-      .join(bc(repMap.select(col("key").as("component"),
-        col("component").as("_nc"))), Seq("component"), "left")
+      .join(broadcast(remapped), Seq("component"), "left")
       .select(col("key"), coalesce(col("_nc"), col("component"))
         .as("component"))
     updatedOld.unionByName(newKeyLabels)
@@ -1941,87 +1935,133 @@ object Dedup {
     * corpus-scale relations: a full-minus-store comparison join would
     * shuffle the corpus twice per batch, while here the changed old
     * rows fall out of one inner broadcast join of the store against the
-    * contracted solve's remapped representatives (those with a NEW
-    * representative — map-side, same shape as the relabel join) and the
-    * new keys are increment-sized by construction. The output is sized
-    * by the increment's touched clusters (a relabeled cluster
-    * necessarily surfaces all its members — their labels all change),
-    * never by the corpus.
+    * representatives the solve moved (map-side, same shape as the
+    * relabel join) and the new keys' labels are a local relation. The
+    * output is sized by the increment's touched clusters (a relabeled
+    * cluster necessarily surfaces all its members — their labels all
+    * change), never by the corpus.
     *
     * `labels` union-overridden by this delta (latest wins per key)
     * equals [[connectedComponentsIncremental]]'s full relation.
     */
   def connectedComponentsIncrementalDelta(labels: DataFrame,
-      newPairs: DataFrame, aCol: String = "key_a", bCol: String = "key_b",
-      maxIterations: Int = 25, failOnNonConvergence: Boolean = true,
-      reliableLineage: Boolean = false,
-      broadcastIncrement: Boolean = true): DataFrame = {
-    val (store, repMap, newKeyLabels, bc) = incrementalComponentsCore(
-      labels, newPairs, aCol, bCol, maxIterations, failOnNonConvergence,
-      reliableLineage, broadcastIncrement)
-    // only representatives that actually MOVED relabel anything; a
-    // contracted vertex that is already its cluster's minimum maps to
-    // itself and its members keep their labels
-    val remapped = repMap.filter(col("key") =!= col("component"))
-      .select(col("key").as("component"), col("component").as("_nc"))
-    val changedOld = store.join(bc(remapped), Seq("component"))
+      newPairs: DataFrame, aCol: String = "key_a",
+      bCol: String = "key_b"): DataFrame =
+    connectedComponentsIncrementalDeltaDetailed(labels, newPairs, aCol,
+      bCol)._1
+
+  /** [[connectedComponentsIncrementalDelta]] plus, as driver values,
+    * the keys the store has never seen whose label is another key — the
+    * solve already holds them, so a caller that needs them (the ingest's
+    * keep-set) gets them without running a job. */
+  private[graft] def connectedComponentsIncrementalDeltaDetailed(
+      labels: DataFrame, newPairs: DataFrame, aCol: String = "key_a",
+      bCol: String = "key_b"): (DataFrame, Seq[Any]) = {
+    val (store, remapped, newKeyLabels, absorbed) =
+      incrementalComponentsCore(labels, newPairs, aCol, bCol)
+    val changedOld = store.join(broadcast(remapped), Seq("component"))
       .select(col("key"), col("_nc").as("component"))
-    changedOld.unionByName(newKeyLabels)
+    (changedOld.unionByName(newKeyLabels), absorbed)
   }
 
-  /** Shared contraction pipeline of the incremental component forms:
-    * returns (store, repMap — contracted vertex → merged representative,
-    * newKeyLabels — labels for keys absent from the store, bc — the
-    * configured broadcast wrapper). */
+  /** The driver-side contracted solve shared by the incremental
+    * component forms. Returns (store; remapped — a local (component,
+    * _nc) relation of every contracted vertex whose representative
+    * moved; newKeyLabels — a local (key, component) relation of the
+    * touched keys absent from the store; absorbed — those new keys whose
+    * label is another key). Null endpoints behave as in a join: a null
+    * never matches the store and never links two keys, so its edge only
+    * makes the other endpoint a vertex, and the null key is labeled
+    * null. */
   private def incrementalComponentsCore(labels: DataFrame,
-      newPairs: DataFrame, aCol: String, bCol: String,
-      maxIterations: Int, failOnNonConvergence: Boolean,
-      reliableLineage: Boolean, broadcastIncrement: Boolean)
-      : (DataFrame, DataFrame, DataFrame, DataFrame => DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
+      newPairs: DataFrame, aCol: String, bCol: String)
+      : (DataFrame, DataFrame, DataFrame, Seq[Any]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.types.PhysicalDataType
+    import org.apache.spark.sql.types.{StructField, StructType}
     validateLabelStore(labels)
-    def bc(df: DataFrame) = if (broadcastIncrement) broadcast(df) else df
-    def pin(df: DataFrame): DataFrame =
-      if (!reliableLineage) df.localCheckpoint(false)
-      else df.persist(StorageLevel.MEMORY_AND_DISK)
+    val spark = labels.sparkSession
     val store = labels.select(col("key"), col("component"))
-    // the increment's edges are the expensive input (typically an LSH
-    // verify pipeline) with several consumers below — pin once
-    val e0 = pin(newPairs.select(col(aCol).as("_a"), col(bCol).as("_b")))
-    val touched = e0.select(col("_a").as("key"))
-      .union(e0.select(col("_b").as("key"))).distinct()
-    // representatives of the touched OLD keys: the one full scan of the
-    // store, map-side against the broadcast touched set; pinned because
-    // both endpoint-mapping joins and the new-key anti-join consume it
-    val touchedReps = pin(store.join(bc(touched), Seq("key")))
-    def repSide(as: String, rc: String) =
-      touchedReps.select(col("key").as(as), col("component").as(rc))
-    // contract: endpoint → stored representative, identity for new keys;
-    // edges internal to one existing cluster vanish here, so the solve
-    // below only ever sees genuinely merging structure
-    val mapped = e0
-      .join(bc(repSide("_a", "_ra")), Seq("_a"), "left")
-      .join(bc(repSide("_b", "_rb")), Seq("_b"), "left")
-      .select(coalesce(col("_ra"), col("_a")).as("key_a"),
-        coalesce(col("_rb"), col("_b")).as("key_b"))
-      .filter(col("key_a") =!= col("key_b"))
-    // already effectively pinned: connectedComponents returns a
-    // projection of its last checkpointed/persisted round, so both
-    // downstream consumers reuse the solved labels without re-iterating
-    val repMap = connectedComponents(mapped, "key_a", "key_b",
-      maxIterations, failOnNonConvergence, reliableLineage)
-    // keys the store has never seen label from the contracted solve
-    // directly (they are their own contracted vertex); the coalesce
-    // fallback is unreachable for well-formed pairs (a new key always
-    // carries at least one non-self contracted edge) but keeps malformed
-    // input from dropping rows
-    val newKeys = touched.join(touchedReps.select("key"), Seq("key"),
-      "left_anti")
-    val newKeyLabels = newKeys
-      .join(bc(repMap), Seq("key"), "left")
-      .select(col("key"), coalesce(col("component"), col("key"))
-        .as("component"))
-    (store, repMap, newKeyLabels, bc _)
+    val e0 = newPairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
+    // one type for every vertex: the one Spark's unions and joins
+    // coerce the endpoints and the store columns to
+    val kt = Seq(e0.select("_b"), store.select("key"),
+        store.select("component"))
+      .foldLeft(e0.select("_a"))(_ union _).schema.head.dataType
+    def local(rows: Seq[Row], names: String*): DataFrame =
+      spark.createDataFrame(rows.asJava,
+        StructType(names.map(StructField(_, kt))))
+    // distinct non-null keys in Spark's ordering of the key type — the
+    // order `min` labels a cluster by — so a key's rank orders it and
+    // a binary search finds it under Spark's equality
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(kt)
+    val ord = PhysicalDataType.ordering(kt)
+    final class Ranked(values: Iterable[Any]) {
+      private val sorted = values.iterator.map(v => (toCatalyst(v), v))
+        .toArray.sortWith((x, y) => ord.lt(x._1, y._1))
+      private val distinct = sorted.indices
+        .filter(i => i == 0 || !ord.equiv(sorted(i - 1)._1, sorted(i)._1))
+        .map(sorted(_))
+      private val cats = distinct.map(_._1)
+      val keys: IndexedSeq[Any] = distinct.map(_._2)
+      def rank(v: Any): Int = cats.search(toCatalyst(v))(ord) match {
+        case scala.collection.Searching.Found(i) => i
+        case _ => -1
+      }
+    }
+    // 1. the increment's edges, in one action
+    val edges = e0.select(col("_a").cast(kt), col("_b").cast(kt)).collect()
+      .map(r => (r.get(0), r.get(1)))
+    val touched = new Ranked(edges.iterator
+      .flatMap { case (a, b) => Iterator(a, b) }.filter(_ != null).toSeq)
+    // 2. the touched stored keys' representatives: one map-side scan of
+    // the store filtered to the touched set; a null component stands
+    // for the key itself, as the contraction's coalesce always had it
+    val reps: Map[Int, Seq[Any]] =
+      if (touched.keys.isEmpty) Map.empty
+      else store.filter(col("key").isInCollection(touched.keys))
+        .select(col("key").cast(kt),
+          coalesce(col("component"), col("key")).cast(kt))
+        .collect().toSeq
+        .groupMap(r => touched.rank(r.get(0)))(_.get(1))
+    // 3. union-find over the contracted vertices — a new key stands for
+    // itself, a stored key for its representatives. A union keeps the
+    // lower rank, so each root is its cluster's minimum key.
+    val newKeys = touched.keys.indices.filterNot(reps.contains)
+      .map(touched.keys)
+    val vertices = new Ranked(newKeys ++ reps.values.flatten)
+    val parent = Array.tabulate(vertices.keys.size)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val next = parent(j); parent(j) = r; j = next }
+      r
+    }
+    for ((a, b) <- edges if a != null && b != null) {
+      val vs = Seq(a, b).flatMap(k =>
+          reps.getOrElse(touched.rank(k), Seq(k)))
+        .map(vertices.rank).map(find)
+      val root = vs.min
+      vs.foreach(parent(_) = root)
+    }
+    def rep(k: Any): Any = vertices.keys(find(vertices.rank(k)))
+    // 4. the moved representatives and the new keys' labels, as local
+    // relations the store-side joins broadcast
+    val remapped = local(vertices.keys.indices.filter(i => find(i) != i)
+      .map(i => Row(vertices.keys(i), vertices.keys(find(i)))),
+      "component", "_nc")
+    val nullKey =
+      if (edges.exists { case (a, b) => a == null || b == null })
+        Seq(Row(null, null))
+      else Nil
+    val newKeyLabels = local(newKeys.map(k => Row(k, rep(k))) ++ nullKey,
+      "key", "component")
+    val absorbed = newKeys.filter(k => find(vertices.rank(k)) !=
+      vertices.rank(k))
+    (store, remapped, newKeyLabels, absorbed)
   }
 
   /** Cluster-correct near-duplicate REMOVAL: pair generation via MinHash,

@@ -851,6 +851,11 @@ object Similarity {
     * the operator's contract) and pushed as a partition filter on the
     * assigned store, so a [[saveIvfIndex]]-persisted index reads ONLY
     * the probed lists from disk.
+    *
+    * Applies `maxProbeRows = 4000000`: a batch whose |queries| × nprobe
+    * probe rows exceed it fails fast with an IllegalArgumentException
+    * instead of broadcasting them. Pass a cap to the 7-argument
+    * overload to change it.
     */
   def ivfTopK(index: IvfIndex, queries: DataFrame, embCol: String,
       key: String, k: Int, nprobe: Int): DataFrame =

@@ -341,14 +341,23 @@ object DedupIngest {
       maxBucketSize)
     // the delta form hands back exactly the rows to persist — a full
     // updated relation would need a corpus×corpus comparison join
-    // against the prior store every micro-batch to find them
-    val changed = Dedup.connectedComponentsIncrementalDelta(labelStore,
-        pairs.localCheckpoint(false))
+    // against the prior store every micro-batch to find them. The solve
+    // runs here, on the driver; `changed` is evaluated once, by the
+    // labels/ write below.
+    val (delta, absorbed) =
+      Dedup.connectedComponentsIncrementalDeltaDetailed(labelStore, pairs)
+    val changed = delta
       .select(col("key"), col("component"), lit(batchId).as("_v"))
-      .localCheckpoint(false)
-    val kept0 = work.join(
-      changed.filter(col("component") =!= col("key"))
-        .select(col("key").as(key)), Seq(key), "left_anti")
+    // a batch key is dropped when its cluster's label is another key.
+    // Only the delta's NEW keys can be batch keys: under the unique,
+    // monotone key contract a batch never carries a key the store holds
+    // (the key-order guard enforces it; with enforceKeyOrder = false
+    // it is trusted, as `start` documents). So the drop set is the
+    // solve's absorbed new keys, already on the driver, and this
+    // anti-join is an IN-set filter that reads no store and runs no
+    // broadcast job. A null key is never dropped, as in a join.
+    val kept0 = work.filter(
+      col(key).isNull || !col(key).isInCollection(absorbed))
     // optional LAST stage: map-only curation of the kept OUTPUT (the
     // batch chain's dedup → quality → write order; see Curate). The
     // store deltas below are written from the deduped, UN-curated

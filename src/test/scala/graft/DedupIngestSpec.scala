@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.DedupIngest
@@ -251,6 +253,36 @@ class DedupIngestSpec extends SparkTestBase {
       "compaction changed the prefilter store")
     run(batches(2), 2L) // post-compaction retry still sees the history
     assert(keptByBatch() == expected && exactRows() == 10L)
+  }
+
+  test("a batch with prior versions and the exact prefilter runs a " +
+      "pinned number of jobs") {
+    val storeRoot = Files.createTempDirectory("graft-ingest-j").toString
+    val keptDir = Files.createTempDirectory("graft-ingest-jk").toString
+    def run(b: Seq[(Long, String)], id: Long) =
+      DedupIngest.processBatch(b.toDF("doc_id", "text"), id, storeRoot,
+        keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000,
+        exactPrefilter = true)
+    run(batches(0), 0L)
+    run(batches(1), 1L)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run(batches(2), 2L)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // batch 2 bridges into the F cluster and joins the C cluster, so the
+    // solve relabels stored keys as well as labelling new ones
+    val kept = spark.read.parquet(s"$keptDir/ingest_batch=2")
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(202L), s"kept: $kept")
+    // the iterative label propagation ran 50 jobs for this batch
+    assert(jobs.get == 27, s"jobs: ${jobs.get}")
   }
 
   test("the key-order guard fails fast on a batch that reuses or " +

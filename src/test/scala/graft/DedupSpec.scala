@@ -810,6 +810,57 @@ class DedupSpec extends SparkTestBase {
       (40L, 1L), (50L, 20L), (51L, 20L)), s"delta: $lastDelta")
   }
 
+  test("incremental connected components label string clusters by " +
+      "Spark's UTF-8 byte order, not Java's UTF-16 order") {
+    // "｡" (U+FF61) sorts first in UTF-8 bytes (EF BD A1 < F0 9F 98 80);
+    // String.compareTo puts "😀" (surrogates D83D DE00) first
+    val (half, smile, grin) = ("｡", "😀", "😁")
+    assert(smile.compareTo(half) < 0)
+    val b0 = Seq((smile, grin)).toDF("key_a", "key_b")
+    val b1 = Seq((grin, half), ("zz", "ｶ")).toDF("key_a", "key_b")
+    def labelSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("key", "component").as[(String, String)].collect().toSet
+    val store = Dedup.connectedComponents(b0)
+    val full = labelSet(Dedup.connectedComponentsIncremental(store, b1))
+    assert(full == labelSet(Dedup.connectedComponents(b0.unionByName(b1))))
+    assert(full == Set(smile -> half, grin -> half, half -> half,
+      "zz" -> "zz", "ｶ" -> "zz"), s"labels: $full")
+    val delta = labelSet(Dedup.connectedComponentsIncrementalDelta(store, b1))
+    assert(delta == full, s"every row changed or is new: $delta")
+  }
+
+  test("incremental connected components keep null endpoints as the " +
+      "contracted solve did: each non-null endpoint is a vertex, and " +
+      "the null key labels itself") {
+    val store = Seq((1L, 1L), (2L, 1L), (5L, 5L)).toDF("key", "component")
+    val edges = Seq[(Option[Long], Option[Long])]((Some(2L), Some(10L)),
+      (None, Some(11L)), (Some(12L), None), (Some(5L), Some(13L)))
+      .toDF("key_a", "key_b")
+    def labelSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("key", "component").as[(Option[Long], Option[Long])]
+        .collect().toSet
+    val newRows = Set(Some(10L) -> Some(1L), Some(11L) -> Some(11L),
+      Some(12L) -> Some(12L), Some(13L) -> Some(5L), None -> None)
+    assert(labelSet(Dedup.connectedComponentsIncrementalDelta(store,
+      edges)) == newRows)
+    assert(labelSet(Dedup.connectedComponentsIncremental(store, edges)) ==
+      labelSet(store) ++ newRows)
+  }
+
+  test("an empty increment has an empty delta and leaves the store as " +
+      "it was") {
+    val store = Seq((1L, 1L), (2L, 1L), (5L, 5L)).toDF("key", "component")
+    val none = Seq.empty[(Long, Long)].toDF("key_a", "key_b")
+    def labelSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("key", "component").as[(Long, Long)].collect().toSet
+    for (s <- Seq(store, store.limit(0))) {
+      assert(labelSet(Dedup.connectedComponentsIncrementalDelta(s, none))
+        .isEmpty)
+      assert(labelSet(Dedup.connectedComponentsIncremental(s, none)) ==
+        labelSet(s))
+    }
+  }
+
   test("connectedComponentsIncremental validates the label store loudly") {
     val pairs = Seq((1L, 2L)).toDF("key_a", "key_b")
     val bad = intercept[IllegalArgumentException] {

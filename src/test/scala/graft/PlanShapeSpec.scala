@@ -731,11 +731,10 @@ class PlanShapeSpec extends SparkTestBase {
       s"q41's probe join must broadcast the probe side, not sort-merge " +
         s"the corpus:\n$p")
     // count Exchange as a node-name token regardless of tree-branch
-    // prefix (":- " branches count too — the old "+- Exchange" match
-    // undercounted; ADVICE r21)
+    // prefix: strip every leading tree-drawing character (":", "|",
+    // "+-", spaces), so lines nested under ":" bars count too
     val exchanges = p.linesIterator.count(l =>
-      l.trim.stripPrefix(":- ").stripPrefix("+- ")
-        .startsWith("Exchange"))
+      l.dropWhile(c => ":|+- ".contains(c)).startsWith("Exchange"))
     assert(exchanges <= 6,
       s"q41 should plan only query-keyed + centroid exchanges " +
         s"(got $exchanges):\n$p")

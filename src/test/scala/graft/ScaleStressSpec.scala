@@ -747,7 +747,12 @@ class ScaleStressSpec extends SparkTestBase {
             lit(v.toLong).as("_v"))
         delta.write.mode("overwrite").parquet(s"$root/labels/v=$v")
       }
-    val batch = docsDf(500, 10000000L).pinnedCheckpoint()
+    // 50 of the batch's 500 documents re-crawl stored ones, so the batch
+    // has near-dup pairs and reads the label store, as a batch that
+    // touches stored clusters does; a batch without pairs reads none
+    val batch = docsDf(450, 10000000L).union(docsDf(50, 0L)
+        .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
+      .pinnedCheckpoint()
     def run(root: String, what: String) = measured(what) {
       DedupIngest.processBatch(batch, 1000L, root, s"$root/kept",
         "text", "doc_id", 64, 16, 3, 0.7, 42, 10000)
