@@ -24,8 +24,12 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS) which vanilla Spark rejects;
-      // read as long and let Tables.load restore a timestamp column.
+      // the testdata files (all three SFs) and the benchmark's generated
+      // tables hold timestamp[us]. This flag stays for TIMESTAMP(NANOS)
+      // files from other writers, which vanilla Spark rejects: they read as
+      // long, and Tables.load restores a timestamp column. The footer read
+      // behind Tables.load (ParquetSchema) honours it through the session
+      // SQLConf, as inference does.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // testdata timestamps are parquet timestamp[us] WITHOUT the
       // adjusted-to-UTC flag; by default Spark 3.4+ infers those as

@@ -8,7 +8,9 @@ import org.apache.spark.sql.types.LongType
   *
   * At 100 TB these would be partitioned/bucketed catalog tables; here they are
   * single parquet files per table. All access funnels through `load` so a
-  * future catalog swap (or bucketing spec) is one change.
+  * future catalog swap (or bucketing spec) is one change. `load` binds a
+  * table without a Spark job: the schema comes from the file's footer on
+  * the driver ([[ParquetSchema]]), not from an inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,15 +18,12 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    // events.ts is parquet TIMESTAMP(NANOS); with nanosAsLong it arrives as
-    // raw nanos — restore a timestamp (micro precision, like Spark's own).
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(ParquetSchema(spark, path)).parquet(path)
+    // a TIMESTAMP(NANOS) events.ts arrives as raw nanos under nanosAsLong
+    // (GraftSession) — restore a timestamp (micro precision, like Spark's).
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df
   }
-
-  /** Register all tables as temp views for `spark.sql` use. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

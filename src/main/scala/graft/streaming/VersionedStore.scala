@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetSchema
+
 /** The versioned-delta store layout both streaming ingest loops ride
   * ([[DedupIngest]] for text near-dup, [[SimilarityIngest]] for
   * embedding near-dup + IVF serving): each family directory holds
@@ -173,6 +175,14 @@ private[streaming] object VersionedStore {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$versionDir/_keyrange")
 
+  /** The `_keyrange` sidecars of `rangeDirs` (non-empty) as one frame.
+    * The engine writes every sidecar of a family with one schema, so the
+    * first one's footer stands for all of them and no inference job runs. */
+  private def readKeyRanges(spark: SparkSession,
+      rangeDirs: Seq[String]): DataFrame =
+    spark.read.schema(ParquetSchema(spark, rangeDirs.head))
+      .parquet(rangeDirs: _*)
+
   /** The store-level marker recording that SOME batch ever committed
     * with the key-order guard disabled (`enforceKeyOrder = false`) —
     * from that point the monotone-key contract is merely trusted, not
@@ -255,7 +265,7 @@ private[streaming] object VersionedStore {
       .map(v => s"$famDir/v=$v/_keyrange")
       .filter(d => fs.exists(new Path(d, "_SUCCESS")))
     if (rangeDirs.nonEmpty) {
-      val viol = spark.read.parquet(rangeDirs: _*)
+      val viol = readKeyRanges(spark, rangeDirs)
         .agg(max(col("maxKey")).as("_storeMax"))
         .crossJoin(batch.agg(min(col(key)).as("_batchMin")))
         .filter(col("_batchMin") <= col("_storeMax"))
@@ -328,7 +338,7 @@ private[streaming] object VersionedStore {
     // anchored ⇔ no deleted key exceeds the all-time ingested max (an
     // empty delta is trivially anchored; a null store max never vouches)
     val anchored = rangeDirs.nonEmpty &&
-      spark.read.parquet(rangeDirs: _*)
+      readKeyRanges(spark, rangeDirs)
         .agg(max(col("maxKey")).as("_storeMax"))
         .crossJoin(keys.agg(max(col(keys.columns.head)).as("_tombMax")))
         .filter(col("_tombMax") > col("_storeMax") ||
@@ -664,7 +674,7 @@ private[streaming] object VersionedStore {
         .map(v => s"$famDir/v=$v/_keyrange")
         .filter(d => fs.exists(new Path(d, "_SUCCESS")))
       if (srcRanges.nonEmpty)
-        spark.read.parquet(srcRanges: _*)
+        readKeyRanges(spark, srcRanges)
           .agg(min(col("minKey")).as("minKey"),
             max(col("maxKey")).as("maxKey"))
           .coalesce(1).write.mode("overwrite")

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -133,23 +131,13 @@ class DatasetWriterSpec extends SparkTestBase {
     val evaluated = spark.sparkContext.longAccumulator("examples_evaluated")
     val encode = udf { (id: String) => evaluated.add(1); s"example $id".getBytes }
     val examples = synthetic(40, id => encode(id))
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      writeSynthetic(examples)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsOf(writeSynthetic(examples))
     assert(evaluated.value == 40) // the previous writer: 80
     // the two split sorts each sample their input for range bounds unless
     // they sort into one partition; the previous writer ran 27 jobs (24)
     val samplers =
       if (spark.conf.get("spark.sql.shuffle.partitions").toInt > 1) 2 else 0
-    assert(jobs.get == 7 + samplers)
+    assert(jobs == 7 + samplers)
   }
 
   test("instance model rewrites panel labels and appends per-instance masks") {

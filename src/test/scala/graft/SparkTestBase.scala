@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,4 +13,21 @@ import graft.core.GraftSession
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.get("graft-test")
+
+  /** The Spark jobs `body` starts. The listener bus delivers events
+    * asynchronously, so it is drained before and after. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }
