@@ -364,7 +364,8 @@ object Dedup {
               i => concat_ws(" ", slice(tk, i + 1, lit(n)))))))
   }
 
-  /** Exact Jaccard similarity of two shingle-set columns. */
+  /** Exact Jaccard similarity of two string-array columns, counted over
+    * their distinct elements, so arrays that are not sets count right. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = size(array_distinct(concat(a, b))).cast("double")
@@ -614,17 +615,6 @@ object Dedup {
       }
       sb.toString
     }
-
-    /** Set-based exact Jaccard, O(n+m). */
-    def jaccard(a: Seq[String], b: Seq[String]): Double = {
-      if (a.isEmpty && b.isEmpty) return 0.0
-      val sa = a.toSet
-      var inter = 0
-      val sb = new scala.collection.mutable.HashSet[String]
-      b.foreach { s => if (sb.add(s) && sa.contains(s)) inter += 1 }
-      val union = sa.size + sb.size - inter
-      if (union == 0) 0.0 else inter.toDouble / union
-    }
   }
 
   private def shinglesUdf(n: Int) =
@@ -638,20 +628,15 @@ object Dedup {
     * composition (e.g. applying to expressions inside other HOFs).
     */
   def shinglesFast(text: Column, n: Int = 3): Column = shinglesUdf(n)(text)
-  private val jaccardUdf = udf(Kernels.jaccard _)
 
   /** Exact Jaccard over DISTINCT-element arrays as a codegen expression:
     * |A∩B| / (|A|+|B|−|A∩B|), the inclusion–exclusion identity — valid
     * ONLY because both inputs are sets (array sizes are then set
-    * cardinalities). Bit-identical to [[Kernels.jaccard]] there: same
-    * integer counts, same IEEE double division, same 0.0 on empty∪empty.
-    * Used on the hot per-candidate-pair paths (r22): the UDF converted
-    * two ~shingle-set-sized string arrays from Catalyst to Scala and
-    * built a HashSet per PAIR; array_intersect stays inside codegen on
-    * UTF8String. The store-fed incremental path keeps the UDF — a
-    * stored `_sh` that violates the distinctness contract would get
-    * silently wrong values from the size arithmetic, while the kernel
-    * dedups and stays right.
+    * cardinalities). Bit-identical to [[jaccard]] there: same integer
+    * counts, same IEEE double division, same 0.0 on empty∪empty, one
+    * array_distinct fewer. The store-fed incremental path uses [[jaccard]]
+    * instead — a stored `_sh` that violates the distinctness contract
+    * would get silently wrong values from the size arithmetic.
     */
   private def jaccardSetExpr(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b))
@@ -1150,38 +1135,28 @@ object Dedup {
   }
 
   /** LSH candidate pairs: minhash-band the shingles, bucket-join on compact
-    * (band, bucket-long) keys, dedup candidate pairs, then verify with exact
-    * Jaccard, keeping pairs ≥ threshold. Output: (key_a, key_b, jaccard)
-    * with key_a < key_b. `bands` must divide `numHashes`.
+    * (band, bucket-long) keys ([[Banding.pairs]]), dedup candidate pairs,
+    * then verify with exact Jaccard, keeping pairs ≥ threshold. Output:
+    * (key_a, key_b, jaccard) with key_a < key_b. `bands` must divide
+    * `numHashes`.
     *
     * Scale shape: the band rows carry ONLY (key, band, bucket) — shingle
     * arrays never ride the band shuffle; they are re-joined by key for just
     * the deduped candidates. Verification cost is per candidate pair, not
     * per (pair × shared-band), and `maxBucketSize` caps the B² candidate
-    * blow-up of degenerate (boilerplate) buckets. `maxBucketSize <= 0` is
-    * the documented sentinel for "skip the guard window entirely" — for
-    * corpora already known to be boilerplate-free it removes the count
-    * window (and its sort) from the plan (measured: 1.20 s → 0.93 s on the
-    * sf0.1 documents fixture), at the cost of unbounded B² blow-up if the
-    * assumption is wrong.
+    * blow-up of degenerate (boilerplate) buckets; exact duplicates of
+    * boilerplate belong to the digest path anyway ([[exactByDigest]] is
+    * O(n)). `maxBucketSize <= 0` is the documented sentinel for "skip the
+    * guard window entirely" — for corpora already known to be
+    * boilerplate-free it removes the count window (and its sort) from the
+    * plan, at the cost of unbounded B² blow-up if the assumption is wrong.
     */
-  /** The minhash family's internal working names. All live in fresh
-    * select lineages (the caller's frame never rides a join here), but
-    * the key and text columns DO ride those lineages — so the two
-    * parameter names must stay clear of the set; clashes otherwise
-    * surface as obscure duplicate-column or ambiguous-reference
-    * analyzer errors deep in the banding plan. `pos`/`col` are
-    * posexplode's fixed output names. */
-  private val minhashInternal = Seq("_sh", "_buckets", "_band",
-    "_bucket", "pos", "col", "key_a", "key_b", "jaccard", "_sh_a",
-    "_sh_b", "_new")
-
   def minhashNearDuplicates(df: DataFrame, textCol: String, key: String,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       threshold: Double = 0.7, seed: Long = 42,
       cacheShingles: Boolean = true,
       maxBucketSize: Long = 10000): DataFrame = {
-    Reserved.requireFreeParams(minhashInternal, "minhashNearDuplicates",
+    Banding.requireFreeParams("minhashNearDuplicates",
       "key" -> key, "textCol" -> textCol)
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(maxBucketSize <= 0 || maxBucketSize > 1,
@@ -1208,40 +1183,11 @@ object Dedup {
       .filter(size(col("_sh")) > 0)
     val withSh =
       if (cacheShingles) projected.localCheckpoint(false) else projected
-    // Skew guard (mirrors simhashNearDuplicates): a degenerate bucket of
-    // B rows — e.g. a boilerplate cluster sharing one band signature —
-    // emits B² candidate pairs from the self-join below. Cap bucket size;
-    // recall loss is confined to pairs whose EVERY shared band is over the
-    // cap (pairs agreeing on another, smaller band still surface there).
-    // Exact duplicates of boilerplate belong to the digest path anyway
-    // ([[exactByDigest]] is O(n)). Guard shape: a count window — its
-    // (band, bucket) exchange is REUSED by the self-join on the same keys,
-    // so the guard costs a sort, not an extra pass (the aggregate +
-    // anti-join alternative recomputes the banding kernel twice and
-    // measured slower).
-    val banded0 = withSh
-      .select(col(key), posexplode(bucketsUdf(col("_sh"))))
-      .select(col(key), col("pos").as("_band"), col("col").as("_bucket"))
-    // drops are counted in GuardMetrics' accumulators (+ one warn line)
-    val banded = GuardMetrics.capCohorts(banded0,
-      Seq(col("_band"), col("_bucket")), maxBucketSize, "minhash")
-    // The bucket SELF-join rides a `merge` hint (r22): at corpus scale
-    // both sides are corpus-sized and the planner picks sort-merge anyway,
-    // but at broadcast-threshold sizes AQE chose BroadcastHashJoin — whose
-    // build side re-evaluated the whole banding subtree (the minhash
-    // kernel over every row, the explode, the guard window's sort) a
-    // second time instead of reusing the stream side's work. Pinning
-    // sort-merge makes both sides identical shuffle subtrees, so
-    // ReusedExchange computes the banding ONCE, writes one exchange and
-    // reads it twice (guide §2.4 "two operations keyed the same way can
-    // share one exchange"). Join strategy only — same pairs either way.
-    val candidates = banded.as("l")
-      .hint("merge")
-      .join(banded.as("r"), Seq("_band", "_bucket"))
-      .select(col(s"l.$key").as("key_a"), col(s"r.$key").as("key_b"))
-      .filter(col("key_a") < col("key_b"))
+    val banded = Banding.explode(withSh, Seq(key),
+      bucketsUdf(col("_sh")), "_bucket")
+    Banding.pairs(banded, key, Seq("_band", "_bucket"), Nil, maxBucketSize,
+        "minhash")
       .dropDuplicates("key_a", "key_b")
-    candidates
       .join(withSh.select(col(key).as("key_a"), col("_sh").as("_sh_a")), "key_a")
       .join(withSh.select(col(key).as("key_b"), col("_sh").as("_sh_b")), "key_b")
       // in-plan shingle arrays are sets by construction (shingleSet) —
@@ -1278,7 +1224,7 @@ object Dedup {
   def minhashSignatures(df: DataFrame, textCol: String, key: String,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       seed: Long = 42): DataFrame = {
-    Reserved.requireFreeParams(minhashInternal, "minhashSignatures",
+    Banding.requireFreeParams("minhashSignatures",
       "key" -> key, "textCol" -> textCol)
     require(numHashes % bands == 0, "bands must divide numHashes")
     val (hashA, hashB) = Kernels.minhashCoefficients(numHashes, seed)
@@ -1291,8 +1237,8 @@ object Dedup {
 
   private def validateSignatureStore(store: DataFrame, key: String): Unit = {
     import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
-    Reserved.requireFreeParams(minhashInternal,
-      "the incremental minhash operators", "key" -> key)
+    Banding.requireFreeParams("the incremental minhash operators",
+      "key" -> key)
     for (c <- Seq(key, "_buckets", "_sh"); if !store.columns.contains(c))
       throw new IllegalArgumentException(
         s"signature store is missing column '$c' — expected the " +
@@ -1337,17 +1283,13 @@ object Dedup {
     * canonicalization).
     *
     * SCALE SHAPE per increment: `newDocs` is shingled and banded once
-    * (the store's signatures are read back, never recomputed). With the
-    * guard on, the union's narrow `(key, band, bucket)` banding rows
-    * flow through ONE (band, bucket) exchange — reused by the candidate
-    * join, the batch operator's accepted guard shape — so the
-    * per-increment shuffle is O((|store| + |new|) × bands) 24-byte-ish
-    * rows, NOT the corpus text. With `maxBucketSize <= 0` (buckets
-    * known clean) the guard window disappears and the candidate join of
-    * the small new-batch banding against the store's banding is
-    * broadcastable — a map-side scan of the store with no store shuffle
-    * at all. Verification joins hit the store's `_sh` column only for
-    * candidate keys (AQE broadcasts the candidate side when small).
+    * (the store's signatures are read back, never recomputed). The
+    * candidate search is [[Banding.incrementalPairs]] over the union's
+    * narrow `(key, band, bucket)` rows: O((|store| + |new|) × bands)
+    * small rows through one reused exchange with the guard on, a
+    * broadcast against a map-side store scan with it off — never the
+    * corpus text. Verification joins hit the store's `_sh` column only
+    * for candidate keys (AQE broadcasts the candidate side when small).
     *
     * Same `cacheSignatures` tradeoff as the batch operator's
     * `cacheShingles` (the new batch's signatures have three consumers;
@@ -1398,46 +1340,20 @@ object Dedup {
     val all = store.select(col(key), col("_buckets"), col("_sh"))
       .withColumn("_new", lit(false))
       .unionByName(newSigs.withColumn("_new", lit(true)))
-    val banded0 = all
-      .select(col(key), col("_new"), posexplode(col("_buckets")))
-      .select(col(key), col("_new"), col("pos").as("_band"),
-        col("col").as("_bucket"))
-    // the SAME union-wide cohort cap as the batch run (see the
-    // minhashNearDuplicates guard note for the count-window shape)
-    val banded = GuardMetrics.capCohorts(banded0,
-      Seq(col("_band"), col("_bucket")), maxBucketSize, "minhash")
-    // candidates touching the new batch only, as (new × old) ∪
-    // (new × new) — BOTH join inputs are `_new` filters over the same
-    // capped banding relation, so all four subtrees stay canonically
-    // identical below the filters and the (band, bucket) exchange is
-    // planned ONCE and reused (pinned in PlanShapeSpec; filtering only
-    // one side would let column pruning drop `_new` from the other and
-    // break the reuse, silently doubling the banding shuffle). (new,
-    // old) pairs orient via least/greatest — the old key may sit on
-    // either side of the new one; (new, new) pairs surface in both
-    // orders and keep the batch operator's `<` filter. dropDuplicates
-    // canonicalizes multi-band hits, as in the batch operator.
-    val bandedNew = banded.filter(col("_new"))
-    val bandedOld = banded.filter(!col("_new"))
-    def side(df: DataFrame, as: String) =
-      df.select(col(key).as(as), col("_band"), col("_bucket"))
-    val crossCands = side(bandedNew, "_ka")
-      .join(side(bandedOld, "_kb"), Seq("_band", "_bucket"))
-      .select(least(col("_ka"), col("_kb")).as("key_a"),
-        greatest(col("_ka"), col("_kb")).as("key_b"))
-    val newCands = side(bandedNew, "_ka")
-      .join(side(bandedNew, "_kb"), Seq("_band", "_bucket"))
-      .filter(col("_ka") < col("_kb"))
-      .select(col("_ka").as("key_a"), col("_kb").as("key_b"))
-    val candidates = crossCands.unionByName(newCands)
+    val banded = Banding.explode(all, Seq(key, "_new"), col("_buckets"),
+      "_bucket")
+    // dropDuplicates canonicalizes multi-band hits, as in the batch
+    // operator; Dedup.jaccard counts distinct elements, so it stays right
+    // for a stored `_sh` that is not a set
+    val pairs = Banding.incrementalPairs(banded, key, Seq("_band", "_bucket"),
+        Nil, maxBucketSize, "minhash")
       .dropDuplicates("key_a", "key_b")
-    val pairs = candidates
       .join(all.select(col(key).as("key_a"), col("_sh").as("_sh_a")),
         "key_a")
       .join(all.select(col(key).as("key_b"), col("_sh").as("_sh_b")),
         "key_b")
       .select(col("key_a"), col("key_b"),
-        jaccardUdf(col("_sh_a"), col("_sh_b")).as("jaccard"))
+        jaccard(col("_sh_a"), col("_sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
     (pairs, store.select(col(key), col("_buckets"), col("_sh"))
       .unionByName(newSigs))
@@ -1498,67 +1414,40 @@ object Dedup {
       key, maxDistance, maxBucketSize, bits, "simhash")
   }
 
-  /** The banded hamming-join core behind [[simhashNearDuplicates]],
-    * public for ANY `(key, _h)` fingerprint relation with hamming-space
-    * near-dup semantics — text simhash, perceptual image hashes
-    * ([[Multimodal.perceptualHashes]]), any future 64/32-bit
-    * locality-preserving fingerprint. Bands each fingerprint into four
-    * `bits/4`-bit chunks (two hashes within hamming ≤ 3 must share a
+  /** Banded hamming near-duplicate pairs for ANY `(key, _h)` fingerprint
+    * relation with hamming-space near-dup semantics — text simhash,
+    * perceptual image hashes ([[Multimodal.perceptualHashes]]), any future
+    * 64/32-bit locality-preserving fingerprint. Bands each fingerprint into
+    * four `bits/4`-bit chunks (two hashes within hamming ≤ 3 must share a
     * chunk — pigeonhole), bucket-joins per (band, chunk) under the
-    * skew-guard cap, verifies exact hamming distance codegen-side
-    * BEFORE the dedup shuffle. Output: `(key_a, key_b, hamming)`,
-    * `key_a < key_b`. Null fingerprints never pair (SQL join-key
-    * semantics). Never all-pairs at any corpus size.
+    * skew-guard cap ([[Banding.pairs]]), verifies exact hamming distance
+    * codegen-side BEFORE the dedup shuffle. Output: `(key_a, key_b,
+    * hamming)`, `key_a < key_b`. Null fingerprints never pair (SQL
+    * join-key semantics). Never all-pairs at any corpus size.
     */
-  /** The hamming/simhash family's internal names — the key parameter
-    * rides every banding lineage, so its NAME must stay clear (the
-    * minhashInternal rationale; `_h` is also the family's own
-    * fingerprint column). */
-  private val hammingInternal = Seq("_h", "_band", "_chunk", "pos",
-    "col", "key_a", "key_b", "hamming", "_h_a", "_h_b", "_new")
-
   def hammingNearDuplicates(hashed: DataFrame, key: String,
       maxDistance: Int = 3, maxBucketSize: Long = 5000,
       bits: Int = 64, guardLabel: String = "hamming"): DataFrame = {
-    Reserved.requireFreeParams(hammingInternal, "hammingNearDuplicates",
-      "key" -> key)
+    Banding.requireFreeParams("hammingNearDuplicates", "key" -> key)
     // pigeonhole bound of 4 banded chunks: only distances <= 3 are
     // guaranteed a shared chunk — larger values would silently lose recall
     require(maxDistance <= 3,
       s"maxDistance $maxDistance exceeds the 4-band pigeonhole bound (3)")
     requireBits(bits)
-    val banded0 = hashed.select(col(key), col("_h"),
-      posexplode(bandChunks(col("_h"), bits)))
-      .select(col(key), col("_h"), col("pos").as("_band"),
-        col("col").as("_chunk"))
-    // Skew guard: a degenerate bucket of B rows emits B² candidates. Cap
-    // bucket size (recall loss only inside over-cap buckets — and near
-    // dups agreeing on another, smaller band are still found there).
-    // Count window, not aggregate+anti-join: the window's exchange is
-    // reused by the chunk self-join on the same keys (see the
-    // minhashNearDuplicates guard note). maxBucketSize <= 0 → guard off.
-    // drops are counted in GuardMetrics' accumulators (+ one warn line)
-    val banded = GuardMetrics.capCohorts(banded0,
-      Seq(col("_band"), col("_chunk")), maxBucketSize, guardLabel)
-    val l = banded.select(col(key).as("key_a"), col("_h").as("_h_a"),
-      col("_band"), col("_chunk"))
-    val r = banded.select(col(key).as("key_b"), col("_h").as("_h_b"),
-      col("_band"), col("_chunk"))
-    // `merge` hint on the self-join for the same reason as
-    // [[minhashNearDuplicates]] (r22): the broadcast plan AQE picks at
-    // small sizes re-evaluates the fingerprint kernel + banding + guard
-    // window as the build side; sort-merge makes the two sides identical
-    // exchange subtrees, so the banding computes once (ReusedExchange) —
-    // the strategy the planner picks at corpus scale anyway.
-    l.hint("merge").join(r, Seq("_band", "_chunk"))
-      .filter(col("key_a") < col("key_b"))
-      // verify hamming BEFORE the dedup shuffle: xor+bit_count is codegen'd
-      // per joined row, so only true near-dup pairs reach dropDuplicates
-      .select(col("key_a"), col("key_b"),
+    val banded = Banding.explode(hashed, Seq(key, "_h"),
+      bandChunks(col("_h"), bits), "_chunk")
+    hammingVerify(Banding.pairs(banded, key, Seq("_band", "_chunk"),
+      Seq("_h"), maxBucketSize, guardLabel), maxDistance)
+  }
+
+  /** Exact hamming verify of banded `(key_a, key_b, _h_a, _h_b)`
+    * candidates, BEFORE the dedup shuffle: xor+bit_count is codegen'd per
+    * joined row, so only true near-dup pairs reach dropDuplicates. */
+  private def hammingVerify(cands: DataFrame, maxDistance: Int): DataFrame =
+    cands.select(col("key_a"), col("key_b"),
         hammingDistance(col("_h_a"), col("_h_b")).as("hamming"))
       .filter(col("hamming") <= maxDistance)
       .dropDuplicates("key_a", "key_b")
-  }
 
   /** Persistable SimHash signature store for incremental dedup: the
     * `(key, _h)` relation [[simhashNearDuplicatesIncremental]] consumes
@@ -1580,7 +1469,7 @@ object Dedup {
     */
   def simhashSignatures(df: DataFrame, textCol: String,
       key: String, bits: Int = 64): DataFrame = {
-    Reserved.requireFreeParams(hammingInternal, "simhashSignatures",
+    Banding.requireFreeParams("simhashSignatures",
       "key" -> key, "textCol" -> textCol)
     requireBits(bits)
     df.select(col(key), simhash(col(textCol), bits).as("_h"))
@@ -1588,8 +1477,8 @@ object Dedup {
 
   private def validateSimhashStore(store: DataFrame, key: String): Unit = {
     import org.apache.spark.sql.types.LongType
-    Reserved.requireFreeParams(hammingInternal,
-      "the incremental simhash operators", "key" -> key)
+    Banding.requireFreeParams("the incremental simhash operators",
+      "key" -> key)
     for (c <- Seq(key, "_h"); if !store.columns.contains(c))
       throw new IllegalArgumentException(
         s"simhash store is missing column '$c' — expected the " +
@@ -1622,16 +1511,13 @@ object Dedup {
     * unique across batches. `bits` must equal the width the store was
     * built with (see [[simhashSignatures]]).
     *
-    * SCALE SHAPE per increment: only the new batch's text is hashed;
-    * the union's narrow `(key, _h, band, chunk)` banding rows flow
-    * through ONE (band, chunk) exchange reused by the candidate join
-    * (both join inputs are `_new` filters over the same capped banding
-    * relation — the batch operator's accepted guard shape). Hamming
-    * verification is codegen'd xor+bit_count ON the joined rows, so no
-    * verify re-join touches the store at all — with the guard off
-    * (`maxBucketSize <= 0`) the increment is a broadcast of the small
-    * new batch's banding against a map-side scan of the store, zero
-    * store shuffle.
+    * SCALE SHAPE per increment: only the new batch's text is hashed; the
+    * candidate search is [[Banding.incrementalPairs]] over the union's
+    * narrow `(key, _h, band, chunk)` rows. Hamming verification is
+    * codegen'd xor+bit_count ON the joined rows, so no verify re-join
+    * touches the store at all — with the guard off (`maxBucketSize <=
+    * 0`) the increment is a broadcast of the small new batch's banding
+    * against a map-side scan of the store, zero store shuffle.
     */
   def simhashNearDuplicatesIncremental(newDocs: DataFrame,
       store: DataFrame, textCol: String, key: String,
@@ -1684,41 +1570,11 @@ object Dedup {
     val all = store.select(col(key), col("_h"))
       .withColumn("_new", lit(false))
       .unionByName(newSigs.withColumn("_new", lit(true)))
-    val banded0 = all.select(col(key), col("_h"), col("_new"),
-      posexplode(bandChunks(col("_h"), bits)))
-      .select(col(key), col("_h"), col("_new"), col("pos").as("_band"),
-        col("col").as("_chunk"))
-    // the SAME union-wide cohort cap as the batch run; both candidate
-    // join inputs filter `_new` over this one capped relation so the
-    // (band, chunk) exchange plans once and is reused (the minhash
-    // incremental's pinned shape — see its inline note on why filtering
-    // only one side would silently double the banding shuffle)
-    val banded = GuardMetrics.capCohorts(banded0,
-      Seq(col("_band"), col("_chunk")), maxBucketSize, "simhash")
-    val bandedNew = banded.filter(col("_new"))
-    val bandedOld = banded.filter(!col("_new"))
-    def side(df: DataFrame, k: String, h: String) =
-      df.select(col(key).as(k), col("_h").as(h), col("_band"),
-        col("_chunk"))
-    // (new, old) pairs orient via least/greatest — the old key may sit
-    // on either side of the new one; hamming is symmetric so the
-    // fingerprints need no reordering. (new, new) pairs surface in both
-    // orders and keep the batch operator's `<` filter.
-    val crossPairs = side(bandedNew, "_ka", "_ha")
-      .join(side(bandedOld, "_kb", "_hb"), Seq("_band", "_chunk"))
-      .select(least(col("_ka"), col("_kb")).as("key_a"),
-        greatest(col("_ka"), col("_kb")).as("key_b"),
-        hammingDistance(col("_ha"), col("_hb")).as("hamming"))
-    val newPairs = side(bandedNew, "_ka", "_ha")
-      .join(side(bandedNew, "_kb", "_hb"), Seq("_band", "_chunk"))
-      .filter(col("_ka") < col("_kb"))
-      .select(col("_ka").as("key_a"), col("_kb").as("key_b"),
-        hammingDistance(col("_ha"), col("_hb")).as("hamming"))
-    // verify hamming BEFORE the dedup shuffle, as in the batch operator:
-    // only true near-dup pairs reach dropDuplicates
-    val pairs = crossPairs.unionByName(newPairs)
-      .filter(col("hamming") <= maxDistance)
-      .dropDuplicates("key_a", "key_b")
+    val banded = Banding.explode(all, Seq(key, "_h", "_new"),
+      bandChunks(col("_h"), bits), "_chunk")
+    val pairs = hammingVerify(Banding.incrementalPairs(banded, key,
+      Seq("_band", "_chunk"), Seq("_h"), maxBucketSize, "simhash"),
+      maxDistance)
     (pairs, store.select(col(key), col("_h")).unionByName(newSigs))
   }
 

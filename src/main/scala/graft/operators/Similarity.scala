@@ -107,48 +107,41 @@ object Similarity {
     kernel(asDouble(emb))
   }
 
-  /** LSH-bucketed near-neighbor pairs: same-bucket candidates verified with
-    * exact cosine ≥ threshold. Output: (key_a, key_b, cosine), key_a < key_b.
+  /** LSH-bucketed near-neighbor pairs: same-bucket candidates
+    * ([[Banding.pairs]]) verified with exact cosine ≥ threshold. Output:
+    * (key_a, key_b, cosine), key_a < key_b.
+    *
+    * `maxBucketSize` caps the B² blow-up of a degenerate bucket (a hot
+    * cluster the hyperplanes fail to split, or numBits sized for a smaller
+    * corpus), drops counted under the "lsh" tag; <= 0 skips it. There is
+    * no dedup pass: each vector carries exactly ONE sign-bit bucket (a
+    * single signature long, not a banded set), so a given pair can only
+    * form in one bucket and the result is duplicate-free by construction.
     */
   def lshNeighborPairs(corpus: DataFrame, embCol: String, key: String,
       dim: Int, numBits: Int = 16, threshold: Double = 0.8,
       seed: Long = 42, maxBucketSize: Long = 10000): DataFrame = {
     require(maxBucketSize <= 0 || maxBucketSize > 1,
       "maxBucketSize must be > 1 (or <= 0 to skip the skew guard)")
-    // norms hoisted per row; pair cost is one fast dot + a divide.
-    // `maxBucketSize` caps the B² blow-up of a degenerate bucket (a hot
-    // cluster the hyperplanes fail to split, or numBits sized for a
-    // smaller corpus) — same cohort guard as the minhash/simhash band
-    // joins, riding the self-join's own _bucket exchange, drops counted
-    // in GuardMetrics' accumulators under the "lsh" tag. <= 0 skips it.
     // Null (zero-norm) buckets are filtered BEFORE the guard: the
     // equi-join drops them anyway, and counting them as a "dropped
     // cohort" would fire the skew alarm for rows that never lose a
     // pair (the incremental excludes them from its totals the same
     // way).
-    val bucketed = GuardMetrics.capCohorts(
-      lshSignatures(corpus, embCol, key, dim, numBits, seed)
-        .filter(col("_bucket").isNotNull),
-      Seq(col("_bucket")), maxBucketSize, "lsh")
-    val a = bucketed.select(col(key).as("key_a"),
-      col("_emb").as("_emb_a"), col("_n").as("_n_a"), col("_bucket"))
-    val b = bucketed.select(col(key).as("key_b"),
-      col("_emb").as("_emb_b"), col("_n").as("_n_b"), col("_bucket"))
-    a.join(b, Seq("_bucket"))
-      .filter(col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"),
+    val bucketed = lshSignatures(corpus, embCol, key, dim, numBits, seed)
+      .filter(col("_bucket").isNotNull)
+    cosineVerify(Banding.pairs(bucketed, key, Seq("_bucket"),
+      Seq("_emb", "_n"), maxBucketSize, "lsh"), threshold)
+  }
+
+  /** Exact cosine verify of `(key_a, key_b, _emb_a, _emb_b, _n_a, _n_b)`
+    * candidates, norms hoisted per row: one fast dot and a divide per
+    * pair. */
+  private def cosineVerify(cands: DataFrame, threshold: Double): DataFrame =
+    cands.select(col("key_a"), col("key_b"),
         (dot(col("_emb_a"), col("_emb_b"))
           / (col("_n_a") * col("_n_b"))).as("cosine"))
       .filter(col("cosine") >= threshold)
-    // no dedup pass (r21): each vector carries exactly ONE sign-bit
-    // bucket (a single signature long, not a banded set), so a given
-    // (key_a, key_b) pair can only form in one bucket and the result is
-    // duplicate-free by construction — the former
-    // dropDuplicates(key_a, key_b) was a pure pair-relation exchange +
-    // aggregate. (The banded families — minhash, simhash chunks — DO
-    // need their dedup; the incremental form keeps its defensive one
-    // across the store/batch union.)
-  }
 
   /** LSH signature store relation for INCREMENTAL embedding dedup: one
     * row per vector — `(key, _emb array<double>, _n double, _bucket
@@ -169,7 +162,8 @@ object Similarity {
     * store).
     */
   def lshSignatures(corpus: DataFrame, embCol: String, key: String,
-      dim: Int, numBits: Int = 16, seed: Long = 42): DataFrame =
+      dim: Int, numBits: Int = 16, seed: Long = 42): DataFrame = {
+    Banding.requireFreeParams("lshSignatures", "key" -> key)
     corpus.select(col(key),
       asDouble(col(embCol)).as("_emb"),
       norm(col(embCol)).as("_n"),
@@ -183,6 +177,7 @@ object Similarity {
       // filters _n > 0 against legacy stores predating this rule).
       when(norm(col(embCol)) > 0,
         lshBucket(col(embCol), dim, numBits, seed)).as("_bucket"))
+  }
 
   /** Persist an LSH signature store hash-bucketed by `_bucket` — the
     * large-increment escape hatch for [[lshNeighborPairsIncremental]],
@@ -218,6 +213,8 @@ object Similarity {
 
   private def validateLshStore(store: DataFrame, key: String): Unit = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    Banding.requireFreeParams("the incremental LSH operators",
+      "key" -> key)
     for (c <- Seq(key, "_emb", "_n", "_bucket");
         if !store.columns.contains(c))
       throw new IllegalArgumentException(
@@ -310,7 +307,7 @@ object Similarity {
       if (maxBucketSize <= 0) (newSigs, allStoreSigs)
       else {
         // counts mirror the pairing sides exactly: null buckets AND
-        // legacy zero-norm rows (_n = 0, see `side` below) never pair,
+        // legacy zero-norm rows (_n = 0, see the filter below) never pair,
         // so neither may inflate a cohort total past the cap
         val over = GuardMetrics.recordOverCohorts(
           allStoreSigs.filter(col("_bucket").isNotNull && col("_n") > 0)
@@ -333,33 +330,19 @@ object Similarity {
     // emit bogus pairs (and, as a bogus key_b, silently drop a
     // legitimate new row downstream). Current-format rows are
     // unaffected (zero-norm ⇒ null bucket ⇒ never equi-joins).
-    def side(df: DataFrame, s: String) = df.filter(col("_n") > 0)
-      .select(col(key).as(s"key_$s"),
-        col("_emb").as(s"_emb_$s"), col("_n").as(s"_n_$s"), col("_bucket"))
-    // (new × old) ∪ (new × new): cosine is symmetric, so cross pairs
-    // verify BEFORE canonicalization and only the keys are reordered;
-    // new-new pairs keep the batch operator's `<` filter. dropDuplicates
-    // canonicalizes multi-bucket hits (possible only for null-free
-    // bucket ties here — kept for exact parity with the batch shape).
-    val cross = side(newGuarded, "a").join(side(storeSigs, "b"),
-        Seq("_bucket"))
-      .select(col("key_a"), col("key_b"),
-        (dot(col("_emb_a"), col("_emb_b"))
-          / (col("_n_a") * col("_n_b"))).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .select(least(col("key_a"), col("key_b")).as("key_a"),
-        greatest(col("key_a"), col("key_b")).as("key_b"), col("cosine"))
-    val within = side(newGuarded, "a").join(side(newGuarded, "b"),
-        Seq("_bucket"))
-      .filter(col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"),
-        (dot(col("_emb_a"), col("_emb_b"))
-          / (col("_n_a") * col("_n_b"))).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    // The guard above already ran, so the core runs with it off; its
+    // `_new` filters fold each join input back to its own side of the
+    // union, keeping the store scan map-side. The dropDuplicates is
+    // defensive across the store/batch union.
+    val all = storeSigs.withColumn("_new", lit(false))
+      .unionByName(newGuarded.withColumn("_new", lit(true)))
+      .filter(col("_n") > 0)
     // the guard affects PAIRING only — the updated store keeps every
     // signature, so a later cap raise (or compaction-time re-pair)
     // still has the full relation
-    (cross.unionByName(within).dropDuplicates("key_a", "key_b"),
+    (cosineVerify(Banding.incrementalPairs(all, key, Seq("_bucket"),
+        Seq("_emb", "_n"), 0, "lsh"), threshold)
+      .dropDuplicates("key_a", "key_b"),
       allStoreSigs.unionByName(newSigs))
   }
 
@@ -1003,6 +986,7 @@ object Similarity {
   def clusterNearDuplicatePairs(corpus: DataFrame, embCol: String,
       key: String, nlist: Int, threshold: Double = 0.95,
       kmeansIters: Int = 2, maxClusterSize: Long = 10000): DataFrame = {
+    Banding.requireFreeParams("clusterNearDuplicatePairs", "key" -> key)
     require(nlist > 0, s"nlist must be > 0, got $nlist")
     require(maxClusterSize <= 0 || maxClusterSize > 1,
       "maxClusterSize must be > 1 (or <= 0 to skip the skew guard)")
@@ -1012,20 +996,10 @@ object Similarity {
       .filter(col("_un") > 0)
       .select(col(key), col("_uemb"))
     val cents = kmeansCentroids(usable, "_uemb", key, nlist, kmeansIters)
-    val assigned = GuardMetrics.capCohorts(
-      assignTo(cents, usable, "_uemb", key),
-      Seq(col("_cid")), maxClusterSize, "semdedup")
-    val a = assigned.select(col(key).as("key_a"),
-      col("_emb").as("_emb_a"), col("_n").as("_n_a"), col("_cid"))
-    val b = assigned.select(col(key).as("key_b"),
-      col("_emb").as("_emb_b"), col("_n").as("_n_b"), col("_cid"))
-    a.join(b, Seq("_cid"))
-      .filter(col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"),
-        (dot(col("_emb_a"), col("_emb_b"))
-          / (col("_n_a") * col("_n_b"))).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .dropDuplicates("key_a", "key_b")
+    // assignTo gives each row exactly one `_cid`, so under the
+    // unique-key contract a pair forms in one cluster only: no dedup pass
+    cosineVerify(Banding.pairs(assignTo(cents, usable, "_uemb", key), key,
+      Seq("_cid"), Seq("_emb", "_n"), maxClusterSize, "semdedup"), threshold)
   }
 
   /** [[clusterNearDuplicatePairs]] collapsed to the "drop the larger

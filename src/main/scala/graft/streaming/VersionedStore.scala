@@ -380,10 +380,11 @@ private[streaming] object VersionedStore {
     val tomb =
       if (dataDirs.isEmpty) None
       else {
-        val first = spark.read.parquet(dataDirs.head)
-        Some(dataDirs.tail
-          .map(d => spark.read.schema(first.schema).parquet(d))
-          .foldLeft(first)(_.unionByName(_))
+        // the family is never partitioned, so the first delta's footer
+        // is its schema: binding runs no inference job
+        val schema = ParquetSchema(spark, dataDirs.head)
+        Some(dataDirs.map(d => spark.read.schema(schema).parquet(d))
+          .reduce(_.unionByName(_))
           .dropDuplicates())
       }
     (tomb, vs.lastOption.map(_ + 1L).getOrElse(0L))

@@ -67,6 +67,14 @@ class DedupSpec extends SparkTestBase {
         Dedup.shingles(lit("x y z w"))).as("diff")).limit(1)
     val r = df.collect().head
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 0.0)
+    // arrays that are not sets count distinct elements: {x,y} ∩ {y,z} is
+    // one element of the three in the union
+    val nonSet = docs.select(
+      Dedup.jaccard(array(lit("x"), lit("x"), lit("y")),
+        array(lit("y"), lit("z"))).as("j"),
+      Dedup.jaccard(array(lit("x"), lit("x")), array(lit("x"))).as("same"))
+      .limit(1).collect().head
+    assert(nonSet.getDouble(0) == 1.0 / 3 && nonSet.getDouble(1) == 1.0)
   }
 
   test("minhashNearDuplicates surfaces exact and near dups, not unrelated") {

@@ -93,6 +93,26 @@ class ReservedNamesSpec extends SparkTestBase {
     assert(m3.contains("hamming"), m3)
   }
 
+  test("LSH/cluster family: a key named like a banding internal fails " +
+      "loud, naming the parameter") {
+    val emb = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.9f, 0.1f)))
+      .toDF("doc_id", "embedding")
+    val m1 = loud(graft.operators.Similarity.lshNeighborPairs(
+      emb.withColumnRenamed("doc_id", "_bucket"), "embedding", "_bucket",
+      dim = 2))
+    assert(m1.contains("key='_bucket'") && m1.contains("reserved internal"),
+      m1)
+    val m2 = loud(graft.operators.Similarity.clusterNearDuplicatePairs(
+      emb.withColumnRenamed("doc_id", "_cid"), "embedding", "_cid",
+      nlist = 1))
+    assert(m2.contains("key='_cid'"), m2)
+    // negative: the frame may carry banding-named columns that are not
+    // parameters
+    assert(graft.operators.Similarity.lshNeighborPairs(
+      emb.withColumn("_band", lit(9)), "embedding", "doc_id", dim = 2)
+      .columns.sameElements(Array("key_a", "key_b", "cosine")))
+  }
+
   test("exact-digest family: key param must avoid _d1/_d2/dup_count " +
       "across batch, signature, and incremental forms") {
     val m1 = loud(Dedup.exact(

@@ -83,4 +83,18 @@ class TombstoneModelSpec extends StoreModelHarness {
         }
       }
   }
+
+  test("binding the tombstones of a store with one delete runs no Spark " +
+      "job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tomb-bind")
+      .toString
+    val v = VersionedStore.writeTombstones(spark, root,
+      Seq(2L, 5L).toDF("key"), Nil)
+    var tomb: Option[org.apache.spark.sql.DataFrame] = None
+    val jobs = jobsOf { tomb = VersionedStore.tombstones(spark, root) }
+    assert(jobs == 0, s"jobs: $jobs")
+    val delta = spark.read.parquet(s"$root/tombstones/v=$v")
+    assert(tomb.get.schema == delta.schema)
+    assert(tomb.get.as[Long].collect().toSet == Set(2L, 5L))
+  }
 }
