@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.streaming.VersionedStore.{BatchOutput, Family}
 
 /** Streaming incremental near-dup dedup — the Structured Streaming form
   * of QUICKSTART.md's crawl-batch loop (not a reference capability; the
@@ -43,17 +44,10 @@ import graft.operators.Dedup
   *     tombstoned rows from the folds it touches and keeps the
   *     tombstone rows themselves.
   * A version counts only once its `_SUCCESS` marker exists, so
-  * half-written attempts are invisible to readers. (The optional
+  * half-written attempts are invisible to readers; the exactly-once
+  * and crash-safety analysis is [[VersionedStore]]'s. (The optional
   * [[Curate]] quality/language stage adds NO family — it is a
   * stateless map-only filter of the kept output.)
-  *
-  * EXACTLY-ONCE: `foreachBatch` re-delivers a batch after failure with
-  * the SAME batchId. Every per-batch output (both deltas and the kept
-  * partition) is written with wholesale `Overwrite` into
-  * batchId-addressed directories, and the store readers consider only
-  * versions `< batchId` — a retry recomputes from exactly the same
-  * committed prefix (the operators are seeded/deterministic) and
-  * overwrites the same paths, making the batch idempotent end to end.
   *
   * SCALE SHAPE per micro-batch: the batch's text is shingled ONCE
   * (the checkpointed signature relation feeds both the pair op and the
@@ -75,64 +69,50 @@ object DedupIngest {
   // that predate the VersionedStore factoring
   val Fold = VersionedStore.Fold
 
-  private def committedVersions(spark: SparkSession, dir: String,
-      below: Long): Seq[Long] =
-    VersionedStore.committedVersions(spark, dir, below)
+  private def latestLabels(df: DataFrame): DataFrame =
+    graft.operators.AggOps.latestByKey(df, Seq("key"), "_v",
+      Seq("component")).select("key", "component", "_v")
+  // counts are additive: the fold resolves deltas by summing, so the
+  // live count per gram/line is invariant under any fold schedule
+  private def sumCounts(df: DataFrame): DataFrame =
+    df.groupBy("_h").agg(sum(col("_c")).as("_c"))
 
-  private def dirs(root: String, family: String, vs: Seq[Long]) =
-    VersionedStore.dirs(root, family, vs)
+  private val sig = Family("sig", _.dropDuplicates(), keyed = true)
+  private val exact = Family("exact", _.dropDuplicates(), keyed = true)
+  private val labels = Family("labels", latestLabels, keyed = true,
+    tombKey = Some("key"))
+  private val spanCounts = Family("spancounts", sumCounts)
+  private val lineCounts = Family("linecounts", sumCounts)
+  /** The store families (layout in the object doc): the one place this
+    * ingest declares them. */
+  private[streaming] val families =
+    Seq(sig, exact, labels, spanCounts, lineCounts)
 
   /** The live signature store from all committed deltas below `below`
-    * (empty-schema fallback derived from `batchLike`; reads are
-    * schema-pinned so an empty delta directory — a batch with no
-    * shingleable docs writes only `_SUCCESS` — cannot break schema
-    * inference). */
+    * (empty-schema fallback derived from `batchLike`). */
   private[graft] def loadSignatureStore(spark: SparkSession,
       storeRoot: String, batchLike: DataFrame, textCol: String,
-      key: String, below: Long = Long.MaxValue): DataFrame = {
-    val empty = Dedup.minhashSignatures(batchLike.limit(0), textCol, key)
-    val vs = committedVersions(spark, s"$storeRoot/sig", below)
-    if (vs.isEmpty) empty
-    else VersionedStore.antiTombstones(
-      spark.read.schema(empty.schema)
-        .parquet(dirs(storeRoot, "sig", vs): _*),
-      key, spark, storeRoot)
-  }
+      key: String, below: Long = Long.MaxValue): DataFrame =
+    VersionedStore.read(spark, storeRoot, sig,
+      Dedup.minhashSignatures(batchLike.limit(0), textCol, key), below)
 
   /** The live exact-digest store (the optional prefilter family) from
-    * all committed deltas below `below`; schema-pinned like the
-    * signature store. */
+    * all committed deltas below `below`. */
   private[graft] def loadExactStore(spark: SparkSession,
       storeRoot: String, batchLike: DataFrame, textCol: String,
-      key: String, below: Long = Long.MaxValue): DataFrame = {
-    val empty = Dedup.exactSignatures(batchLike.limit(0), Seq(textCol),
-      key)
-    val vs = committedVersions(spark, s"$storeRoot/exact", below)
-    if (vs.isEmpty) empty
-    else VersionedStore.antiTombstones(
-      spark.read.schema(empty.schema)
-        .parquet(dirs(storeRoot, "exact", vs): _*),
-      key, spark, storeRoot)
-  }
+      key: String, below: Long = Long.MaxValue): DataFrame =
+    VersionedStore.read(spark, storeRoot, exact,
+      Dedup.exactSignatures(batchLike.limit(0), Seq(textCol), key), below)
 
   /** The live label store: latest-version-per-key over all committed
     * deltas below `below`. */
   private[graft] def loadLabelStore(spark: SparkSession,
       storeRoot: String, batchLike: DataFrame, key: String,
-      below: Long = Long.MaxValue): DataFrame = {
-    val empty = batchLike.limit(0)
-      .select(col(key).as("key"), col(key).as("component"),
-        lit(0L).as("_v"))
-    val vs = committedVersions(spark, s"$storeRoot/labels", below)
-    if (vs.isEmpty) empty.select("key", "component")
-    else VersionedStore.antiTombstones(
-      graft.operators.AggOps.latestByKey(
-        spark.read.schema(empty.schema)
-          .parquet(dirs(storeRoot, "labels", vs): _*),
-        Seq("key"), "_v", Seq("component"))
-        .select("key", "component"),
-      "key", spark, storeRoot)
-  }
+      below: Long = Long.MaxValue): DataFrame =
+    latestLabels(VersionedStore.read(spark, storeRoot, labels,
+      batchLike.limit(0).select(col(key).as("key"),
+        col(key).as("component"), lit(0L).as("_v")), below))
+      .select("key", "component")
 
   /** Configuration for the optional boilerplate-stripping stage — the
     * [[graft.operators.Dedup.maskRepeatedSpansIncremental]] operator
@@ -197,29 +177,25 @@ object DedupIngest {
     * `below` (delta-valued `(_h, _c)` — readers aggregate or take
     * membership; compaction folds by summing). */
   private def loadCountStore(spark: SparkSession, storeRoot: String,
-      family: String, below: Long): DataFrame = {
+      family: Family, below: Long): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(Seq(StructField("_h", LongType),
       StructField("_c", LongType)))
-    val vs = committedVersions(spark, s"$storeRoot/$family", below)
-    if (vs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
-      .parquet(dirs(storeRoot, family, vs): _*)
+    VersionedStore.read(spark, storeRoot, family, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), below)
   }
 
   /** The live n-gram count store ([[SpanMask]]'s `spancounts/`
     * family). */
   private[graft] def loadSpanCountStore(spark: SparkSession,
       storeRoot: String, below: Long = Long.MaxValue): DataFrame =
-    loadCountStore(spark, storeRoot, "spancounts", below)
+    loadCountStore(spark, storeRoot, spanCounts, below)
 
   /** The live line-hash count store ([[LineDedup]]'s `linecounts/`
     * family). */
   private[graft] def loadLineCountStore(spark: SparkSession,
       storeRoot: String, below: Long = Long.MaxValue): DataFrame =
-    loadCountStore(spark, storeRoot, "linecounts", below)
+    loadCountStore(spark, storeRoot, lineCounts, below)
 
   /** One micro-batch, exposed for direct testing of idempotence. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
@@ -230,193 +206,168 @@ object DedupIngest {
       exactPrefilter: Boolean = false,
       spanMask: Option[SpanMask] = None,
       lineDedup: Option[LineDedup] = None,
-      curate: Option[Curate] = None): Unit = {
-    val spark = batch.sparkSession
-    if (enforceKeyOrder)
-      VersionedStore.enforceKeyOrderGuard(batch, batchId,
-        s"$storeRoot/sig", key)
-    // running unguarded latches the store out of tombstone RETIREMENT
-    // (deletes still apply) — see VersionedStore.markUnguarded
-    else VersionedStore.markUnguarded(spark, storeRoot)
-    // optional stage -2: C4/CCNet exact-line dedup against the growing
-    // crawl's line history. MUST precede the span mask — the mask
-    // kernel's uniform-output contract whitespace-normalizes text to a
-    // single-space join, which would erase the very line structure this
-    // stage keys on. Counts accrue in the `linecounts/` delta family
-    // (batchId-addressed, idempotent); the line-deduped text replaces
-    // `textCol` for every downstream stage and the kept output.
-    val lined = lineDedup match {
-      case None => batch
-      case Some(cfg) =>
-        val lineStore = loadLineCountStore(spark, storeRoot,
-          below = batchId)
-        val (res, delta) = Dedup.dedupLinesIncremental(batch, lineStore,
-          textCol, key, cfg.minChars, cfg.delim, cfg.broadcastIncrement)
-        // fully-emptied docs (all countable lines were duplicates) are
-        // dropped HERE: emptied text has no shingles, so the dedup
-        // stages below could never catch the verbatim re-crawl it came
-        // from — see the LineDedup scaladoc
-        val survived =
-          if (cfg.dropEmptied)
-            res.filter(!(col("removed_lines") > 0 &&
-              length(trim(col("text_deduped"))) === 0))
-          else res
-        val r = survived.drop(textCol, "kept_lines", "removed_lines")
-          .withColumnRenamed("text_deduped", textCol)
-          .localCheckpoint(false)
-        // bare batchId-addressed overwrite — the PER-BATCH delta
-        // discipline every family here shares (spancounts/exact/sig/
-        // labels): _SUCCESS gates commitment, redelivery overwrites
-        // idempotently, and the stream retries an uncommitted batch.
-        // The staged write-then-rename protocol is the MAINTENANCE
-        // discipline (compaction, retrain, tombstones), where a
-        // committed version is replaced while readers may exist —
-        // routing hot-path deltas through it would add a delete+rename
-        // metadata round-trip per batch for no crash-safety gain.
-        delta.write.mode("overwrite")
-          .parquet(s"$storeRoot/linecounts/v=$batchId")
-        r
-    }
-    // optional stage -1: strip corpus-repeated boilerplate spans BEFORE
-    // any dedup (the QUICKSTART pipeline order — shared headers must
-    // not glue distinct docs into near-dup pairs, and two docs
-    // differing only in boilerplate SHOULD become exact dups once it is
-    // gone). Counts accrue over this stage's INPUT text — the raw
-    // batch, or the line-deduped text when the LineDedup stage is
-    // active (deduplicated lines' grams are then absent from the
-    // boilerplate statistics, deliberately: a stripped line must not
-    // keep feeding span counts) — in the `spancounts/`
-    // delta family (batchId-addressed, idempotent); the masked text
-    // replaces `textCol` for every downstream stage and the kept
-    // output — which also means kept text is whitespace-normalized to
-    // the single-space token join (the mask kernel's uniform-output
-    // contract), span-free documents included.
-    val masked = spanMask match {
-      case None => lined
-      case Some(cfg) =>
-        val countStore = loadSpanCountStore(spark, storeRoot,
-          below = batchId)
-        val (m, delta) = Dedup.maskRepeatedSpansIncrementalDetailed(
-          lined, countStore, textCol, key, cfg.n, cfg.minCount,
-          cfg.marker, cfg.broadcastIncrement)
-        val mm = m.drop(textCol)
-          .withColumnRenamed("masked_text", textCol)
-          .localCheckpoint(false)
-        delta.write.mode("overwrite")
-          .parquet(s"$storeRoot/spancounts/v=$batchId")
-        mm
-    }
-    // optional stage 0: drop verbatim re-crawls against the digest
-    // store BEFORE any shingling — exact dups are the common case in
-    // re-crawl traffic and shingling them is pure waste; a dropped
-    // doc's near-dup future matches still work because its identical
-    // original already sits in the signature store. The `exact/`
-    // family is append-only fresh digests, batchId-addressed like the
-    // others (idempotent under redelivery).
-    val work =
-      if (!exactPrefilter) masked
-      else {
-        val exactStore = loadExactStore(spark, storeRoot, masked,
-          textCol, key, below = batchId)
-        val (exactKept, freshSigs, _) =
-          Dedup.dropExactDuplicatesIncrementalDetailed(
-            masked, exactStore, Seq(textCol), key)
-        val ek = exactKept.localCheckpoint(false)
-        // the fresh signatures ARE the delta — writing them directly
-        // avoids digesting the batch a second time
-        freshSigs.write.mode("overwrite")
-          .parquet(s"$storeRoot/exact/v=$batchId")
-        ek
+      curate: Option[Curate] = None): Unit =
+    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, sig, key,
+        enforceKeyOrder) {
+      val spark = batch.sparkSession
+      // optional stage -2: C4/CCNet exact-line dedup against the growing
+      // crawl's line history. MUST precede the span mask — the mask
+      // kernel's uniform-output contract whitespace-normalizes text to a
+      // single-space join, which would erase the very line structure this
+      // stage keys on. Counts accrue in the `linecounts/` delta family
+      // (batchId-addressed, idempotent); the line-deduped text replaces
+      // `textCol` for every downstream stage and the kept output.
+      val lined = lineDedup match {
+        case None => batch
+        case Some(cfg) =>
+          val lineStore = loadLineCountStore(spark, storeRoot,
+            below = batchId)
+          val (res, delta) = Dedup.dedupLinesIncremental(batch, lineStore,
+            textCol, key, cfg.minChars, cfg.delim, cfg.broadcastIncrement)
+          // fully-emptied docs (all countable lines were duplicates) are
+          // dropped HERE: emptied text has no shingles, so the dedup
+          // stages below could never catch the verbatim re-crawl it came
+          // from — see the LineDedup scaladoc
+          val survived =
+            if (cfg.dropEmptied)
+              res.filter(!(col("removed_lines") > 0 &&
+                length(trim(col("text_deduped"))) === 0))
+            else res
+          val r = survived.drop(textCol, "kept_lines", "removed_lines")
+            .withColumnRenamed("text_deduped", textCol)
+            .localCheckpoint(false)
+          VersionedStore.writeDelta(delta, storeRoot, lineCounts, batchId)
+          r
       }
-    val sigStore = loadSignatureStore(spark, storeRoot, batch, textCol,
-      key, below = batchId)
-    val labelStore = loadLabelStore(spark, storeRoot, batch, key,
-      below = batchId)
-    // one shingle-kernel pass: the same checkpointed signatures feed
-    // the pair op AND the store delta write below
-    val sigs = Dedup.minhashSignatures(work, textCol, key, numHashes,
-      bands, shingleSize, seed).localCheckpoint(false)
-    val (pairs, _) = Dedup.minhashNearDuplicatesIncrementalFromSigs(
-      sigs, sigStore, key, threshold, cacheSignatures = false,
-      maxBucketSize)
-    // the delta form hands back exactly the rows to persist — a full
-    // updated relation would need a corpus×corpus comparison join
-    // against the prior store every micro-batch to find them. The solve
-    // runs here, on the driver; `changed` is evaluated once, by the
-    // labels/ write below.
-    val (delta, absorbed) =
-      Dedup.connectedComponentsIncrementalDeltaDetailed(labelStore, pairs)
-    val changed = delta
-      .select(col("key"), col("component"), lit(batchId).as("_v"))
-    // a batch key is dropped when its cluster's label is another key.
-    // Only the delta's NEW keys can be batch keys: under the unique,
-    // monotone key contract a batch never carries a key the store holds
-    // (the key-order guard enforces it; with enforceKeyOrder = false
-    // it is trusted, as `start` documents). So the drop set is the
-    // solve's absorbed new keys, already on the driver, and this
-    // anti-join is an IN-set filter that reads no store and runs no
-    // broadcast job. A null key is never dropped, as in a join.
-    val kept0 = work.filter(
-      col(key).isNull || !col(key).isInCollection(absorbed))
-    // optional LAST stage: map-only curation of the kept OUTPUT (the
-    // batch chain's dedup → quality → write order; see Curate). The
-    // store deltas below are written from the deduped, UN-curated
-    // batch, deliberately: no new state, and a later near-dup of a
-    // curated-away document is still recognized as a duplicate.
-    val kept = curate match {
-      case None => kept0
-      case Some(c) =>
-        val scored = c.score(kept0)
-        // name comparisons ride the session's resolution rule: under
-        // the default case-insensitive analysis, withColumn("Text", …)
-        // REPLACES batch column "text" (and renames it) — a literal
-        // comparison would misreport that as a drop, and an appended
-        // name differing from a batch column only by case would make
-        // every later reference ambiguous without tripping a literal
-        // duplicate check (r19 advice)
-        val caseSensitive =
-          spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-        def canon(n: String): String =
-          if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-        val scoredCanon = scored.columns.map(canon).toSet
-        val reEmitted = kept0.columns.filter(b =>
-          !scored.columns.contains(b) && scoredCanon.contains(canon(b)))
-        require(reEmitted.isEmpty,
-          s"Curate.score re-emitted batch column(s) " +
-            s"${reEmitted.mkString(", ")} under a different case " +
-            "(spark.sql.caseSensitive is false, so the re-emit replaced " +
-            "and renamed the batch column) — the scoring transform may " +
-            "only APPEND new columns")
-        val missing = kept0.columns.filterNot(b =>
-          scoredCanon.contains(canon(b)))
-        require(missing.isEmpty,
-          s"Curate.score dropped batch column(s) ${missing.mkString(", ")}" +
-            " — the scoring transform may only APPEND columns")
-        // a duplicate name (literal, or case-colliding under the
-        // resolver) would pass the missing-check yet make the restore
-        // projection below (and every downstream reference) ambiguous
-        // — fail here, at the configuration, not there
-        val dup = scored.columns.groupBy(canon).collect {
-          case (_, vs) if vs.length > 1 => vs.distinct.mkString("/")
-        }.toSeq.sorted
-        require(dup.isEmpty,
-          s"Curate.score produced duplicate column(s) ${dup.mkString(", ")}" +
-            " — append NEW names, don't re-emit batch columns")
-        val filtered = scored.filter(c.keep)
-        if (c.keepScores) filtered
-        else filtered.select(kept0.columns.map(col): _*)
+      // optional stage -1: strip corpus-repeated boilerplate spans BEFORE
+      // any dedup (the QUICKSTART pipeline order — shared headers must
+      // not glue distinct docs into near-dup pairs, and two docs
+      // differing only in boilerplate SHOULD become exact dups once it is
+      // gone). Counts accrue over this stage's INPUT text — the raw
+      // batch, or the line-deduped text when the LineDedup stage is
+      // active (deduplicated lines' grams are then absent from the
+      // boilerplate statistics, deliberately: a stripped line must not
+      // keep feeding span counts) — in the `spancounts/`
+      // delta family (batchId-addressed, idempotent); the masked text
+      // replaces `textCol` for every downstream stage and the kept
+      // output — which also means kept text is whitespace-normalized to
+      // the single-space token join (the mask kernel's uniform-output
+      // contract), span-free documents included.
+      val masked = spanMask match {
+        case None => lined
+        case Some(cfg) =>
+          val countStore = loadSpanCountStore(spark, storeRoot,
+            below = batchId)
+          val (m, delta) = Dedup.maskRepeatedSpansIncrementalDetailed(
+            lined, countStore, textCol, key, cfg.n, cfg.minCount,
+            cfg.marker, cfg.broadcastIncrement)
+          val mm = m.drop(textCol)
+            .withColumnRenamed("masked_text", textCol)
+            .localCheckpoint(false)
+          VersionedStore.writeDelta(delta, storeRoot, spanCounts, batchId)
+          mm
+      }
+      // optional stage 0: drop verbatim re-crawls against the digest
+      // store BEFORE any shingling — exact dups are the common case in
+      // re-crawl traffic and shingling them is pure waste; a dropped
+      // doc's near-dup future matches still work because its identical
+      // original already sits in the signature store. The `exact/`
+      // family is append-only fresh digests.
+      val work =
+        if (!exactPrefilter) masked
+        else {
+          val exactStore = loadExactStore(spark, storeRoot, masked,
+            textCol, key, below = batchId)
+          val (exactKept, freshSigs, _) =
+            Dedup.dropExactDuplicatesIncrementalDetailed(
+              masked, exactStore, Seq(textCol), key)
+          val ek = exactKept.localCheckpoint(false)
+          // the fresh signatures ARE the delta — writing them directly
+          // avoids digesting the batch a second time
+          VersionedStore.writeDelta(freshSigs, storeRoot, exact, batchId)
+          ek
+        }
+      val sigStore = loadSignatureStore(spark, storeRoot, batch, textCol,
+        key, below = batchId)
+      val labelStore = loadLabelStore(spark, storeRoot, batch, key,
+        below = batchId)
+      // one shingle-kernel pass: the same checkpointed signatures feed
+      // the pair op AND the store delta write below
+      val sigs = Dedup.minhashSignatures(work, textCol, key, numHashes,
+        bands, shingleSize, seed).localCheckpoint(false)
+      val (pairs, _) = Dedup.minhashNearDuplicatesIncrementalFromSigs(
+        sigs, sigStore, key, threshold, cacheSignatures = false,
+        maxBucketSize)
+      // the delta form hands back exactly the rows to persist — a full
+      // updated relation would need a corpus×corpus comparison join
+      // against the prior store every micro-batch to find them. The solve
+      // runs here, on the driver; `changed` is evaluated once, by the
+      // labels/ write below.
+      val (delta, absorbed) =
+        Dedup.connectedComponentsIncrementalDeltaDetailed(labelStore, pairs)
+      val changed = delta
+        .select(col("key"), col("component"), lit(batchId).as("_v"))
+      // a batch key is dropped when its cluster's label is another key.
+      // Only the delta's NEW keys can be batch keys: under the unique,
+      // monotone key contract a batch never carries a key the store holds
+      // (the key-order guard enforces it; with enforceKeyOrder = false
+      // it is trusted, as `start` documents). So the drop set is the
+      // solve's absorbed new keys, already on the driver, and this
+      // anti-join is an IN-set filter that reads no store and runs no
+      // broadcast job. A null key is never dropped, as in a join.
+      val kept0 = work.filter(
+        col(key).isNull || !col(key).isInCollection(absorbed))
+      // optional LAST stage: map-only curation of the kept OUTPUT (the
+      // batch chain's dedup → quality → write order; see Curate). The
+      // store deltas below are written from the deduped, UN-curated
+      // batch, deliberately: no new state, and a later near-dup of a
+      // curated-away document is still recognized as a duplicate.
+      val kept = curate match {
+        case None => kept0
+        case Some(c) =>
+          val scored = c.score(kept0)
+          // name comparisons ride the session's resolution rule: under
+          // the default case-insensitive analysis, withColumn("Text", …)
+          // REPLACES batch column "text" (and renames it) — a literal
+          // comparison would misreport that as a drop, and an appended
+          // name differing from a batch column only by case would make
+          // every later reference ambiguous without tripping a literal
+          // duplicate check
+          val caseSensitive =
+            spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+          def canon(n: String): String =
+            if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+          val scoredCanon = scored.columns.map(canon).toSet
+          val reEmitted = kept0.columns.filter(b =>
+            !scored.columns.contains(b) && scoredCanon.contains(canon(b)))
+          require(reEmitted.isEmpty,
+            s"Curate.score re-emitted batch column(s) " +
+              s"${reEmitted.mkString(", ")} under a different case " +
+              "(spark.sql.caseSensitive is false, so the re-emit replaced " +
+              "and renamed the batch column) — the scoring transform may " +
+              "only APPEND new columns")
+          val missing = kept0.columns.filterNot(b =>
+            scoredCanon.contains(canon(b)))
+          require(missing.isEmpty,
+            s"Curate.score dropped batch column(s) ${missing.mkString(", ")}" +
+              " — the scoring transform may only APPEND columns")
+          // a duplicate name (literal, or case-colliding under the
+          // resolver) would pass the missing-check yet make the restore
+          // projection below (and every downstream reference) ambiguous
+          // — fail here, at the configuration, not there
+          val dup = scored.columns.groupBy(canon).collect {
+            case (_, vs) if vs.length > 1 => vs.distinct.mkString("/")
+          }.toSeq.sorted
+          require(dup.isEmpty,
+            s"Curate.score produced duplicate column(s) ${dup.mkString(", ")}" +
+              " — append NEW names, don't re-emit batch columns")
+          val filtered = scored.filter(c.keep)
+          if (c.keepScores) filtered
+          else filtered.select(kept0.columns.map(col): _*)
+      }
+      BatchOutput(sigs, kept,
+        () => VersionedStore.writeDelta(changed, storeRoot, labels, batchId))
     }
-    // all outputs are batchId-addressed wholesale overwrites — see the
-    // exactly-once note in the object doc
-    sigs.write.mode("overwrite").parquet(s"$storeRoot/sig/v=$batchId")
-    // the guard sidecar rides after the data commit: a crash between
-    // the two leaves a committed version the guard merely skips
-    VersionedStore.writeKeyRange(batch, key, s"$storeRoot/sig/v=$batchId")
-    changed.write.mode("overwrite")
-      .parquet(s"$storeRoot/labels/v=$batchId")
-    kept.write.mode("overwrite")
-      .parquet(s"$keptDir/ingest_batch=$batchId")
-  }
 
   /** Start the ingest query. `docs` is any streaming DataFrame carrying
     * `textCol` and a globally-unique `key` assigned monotonically
@@ -431,8 +382,8 @@ object DedupIngest {
     * for this store (deletes still apply; see
     * [[VersionedStore.markUnguarded]]). The minhash knobs mirror
     * [[Dedup.minhashNearDuplicates]].
-    */
-  /** @param spanMask pass `Some(SpanMask(...))` to also strip
+    *
+    * @param spanMask pass `Some(SpanMask(...))` to also strip
     *   corpus-repeated boilerplate spans per micro-batch BEFORE dedup
     *   (a fourth `spancounts/` store family accrues the raw-text n-gram
     *   counts as versioned deltas; the masked text replaces `textCol`
@@ -459,22 +410,16 @@ object DedupIngest {
       exactPrefilter: Boolean = false,
       spanMask: Option[SpanMask] = None,
       lineDedup: Option[LineDedup] = None,
-      curate: Option[Curate] = None): StreamingQuery = {
-    require(docs.isStreaming,
-      "DedupIngest.start needs a streaming DataFrame — for batch data " +
-        "use the QUICKSTART.md loop over the incremental operators")
-    for (c <- Seq(textCol, key); if !docs.columns.contains(c))
-      throw new IllegalArgumentException(
-        s"docs is missing column '$c' (have: ${docs.columns.mkString(", ")})")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      curate: Option[Curate] = None): StreamingQuery =
+    VersionedStore.startIngest(docs, "DedupIngest.start", "docs",
+        Seq(textCol, key),
+        "use the QUICKSTART.md loop over the incremental operators",
+        checkpointDir) {
+      (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, storeRoot, keptDir, textCol, key,
           numHashes, bands, shingleSize, threshold, seed, maxBucketSize,
           enforceKeyOrder, exactPrefilter, spanMask, lineDedup, curate)
-      }
-      .start()
-  }
+    }
 
   /** TOMBSTONE a set of documents — the takedown/relicensing path: the
     * keys land as a versioned delta in a `tombstones/` family
@@ -513,95 +458,14 @@ object DedupIngest {
     */
   def deleteKeys(spark: SparkSession, storeRoot: String,
       keys: DataFrame): Long =
-    VersionedStore.writeTombstones(spark, storeRoot, keys, keyedFamilies)
-
-  /** The families whose rows are keyed by document — the ones
-    * tombstones apply to, and the ones retirement must see rewritten. */
-  private val keyedFamilies = Seq("sig", "exact", "labels")
+    VersionedStore.deleteKeys(spark, storeRoot, keys, families)
 
   /** Collapse the version history (signatures unioned, labels resolved
-    * latest-per-key) under a SIZE-TIERED policy. Run with the ingest
-    * query STOPPED — compaction rewrites directories a running batch
-    * may be reading.
-    *
-    * POLICY — tiered, not monolithic: folding the whole history into
-    * one version every call is an O(store) rewrite per call, which at
-    * corpus scale means periodically rewriting the entire signature
-    * store. Instead, adjacent committed versions are grouped oldest →
-    * newest with the classic merge rule: a run of newer versions folds
-    * into the next older one only once the run's bytes reach within
-    * `sizeRatio` of it (`newerBytes × sizeRatio ≥ olderBytes`). The
-    * surviving tiers grow geometrically, so each byte is rewritten
-    * O(log_ratio(store/delta)) times over the store's lifetime and a
-    * large settled version is touched only when the data accumulated
-    * after it is comparable to it. Pass `sizeRatio =
-    * Double.PositiveInfinity` for the old fold-everything behavior.
-    * Groups are contiguous and fold into the group's own maximum
-    * version, so every directory `v=N` always holds rows from versions
-    * ≤ N and the readers' `below = batchId` prefix filter stays exact.
-    *
-    * Only versions STRICTLY BELOW the highest are ever folded. The
-    * highest version must survive untouched because `foreachBatch`
-    * commits its epoch AFTER the batch function returns — a stop in
-    * that window re-delivers the last batch on restart, and its retry
-    * reads versions `< batchId`; folding history into the max would
-    * make that retry see an empty store and overwrite the merged data
-    * with a batch-sized delta. Every version below the max has provably
-    * committed (offsets advance in order), so folding them is safe.
-    *
-    * CRASH SAFETY — staged commit: each group's merge is written to
-    * `.compact-v=<into>` (invisible to readers, with its own `_SUCCESS`
-    * once complete), then committed by unlinking `v=<into>` and
-    * atomically renaming the staging directory over it, and only then
-    * are the other source versions deleted. Every committed version
-    * therefore remains readable until the merged data is fully on
-    * disk. A crash inside the two-metadata-op unlink/rename window
-    * leaves the merge complete but unlinked — the next reader or
-    * compaction heals it by finishing the rename
-    * ([[healStagedCompactions]]). A crash after the rename but before
-    * the source deletes leaves duplicate rows across versions, which
-    * the store semantics already collapse (signatures are immutable
-    * per key; labels resolve latest-per-key) and the next compaction
-    * removes.
-    *
-    * Returns the folds performed, with the parquet bytes each rewrote
-    * — the observability hook for sizing `sizeRatio`.
-    */
+    * latest-per-key, counts summed) under the size-tiered, crash-safe
+    * policy of [[VersionedStore.compactStores]], which carries the full
+    * analysis. Run with the ingest query STOPPED. Returns the folds
+    * performed, with the parquet bytes each rewrote. */
   def compactStores(spark: SparkSession, storeRoot: String,
-      sizeRatio: Double = 4.0): Seq[Fold] = {
-    // tombstones are resolved ONCE here (one family listing + marker
-    // probe, not one per folded family — driver metadata round-trips
-    // are the read-path cost on an object store); the keyed families'
-    // folds apply them (physical removal) and record the applied floor,
-    // then fully-applied markers retire, and the tombstone family
-    // itself folds LAST so its directories are stable while the other
-    // folds read them
-    val (tomb, floor) = VersionedStore.tombstonesAndFloor(spark,
-      storeRoot)
-    def compact(family: String, resolve: DataFrame => DataFrame,
-        keyed: Boolean = false) =
-      VersionedStore.compactFamily(spark, storeRoot, family, sizeRatio,
-        resolve, tombFloor = if (keyed) Some(floor) else None)
-    def anti(df: DataFrame, keyCol: Option[String]): DataFrame =
-      VersionedStore.applyTombstones(df, tomb, keyCol)
-    val folds =
-      compact("sig", df => anti(df.dropDuplicates(), None),
-        keyed = true) ++
-      compact("exact", df => anti(df.dropDuplicates(), None),
-        keyed = true) ++
-      compact("labels", df => anti(
-        graft.operators.AggOps.latestByKey(df,
-          Seq("key"), "_v", Seq("component"))
-          .select(col("key"), col("component"), col("_v")),
-        Some("key")), keyed = true) ++
-      // counts are additive: the fold resolves deltas by summing, so
-      // the live count per gram/line is invariant under any fold
-      // schedule
-      compact("spancounts",
-        _.groupBy("_h").agg(sum(col("_c")).as("_c"))) ++
-      compact("linecounts",
-        _.groupBy("_h").agg(sum(col("_c")).as("_c")))
-    VersionedStore.retireTombstones(spark, storeRoot, keyedFamilies)
-    folds ++ compact("tombstones", _.dropDuplicates())
-  }
+      sizeRatio: Double = 4.0): Seq[Fold] =
+    VersionedStore.compactStores(spark, storeRoot, families, sizeRatio)
 }

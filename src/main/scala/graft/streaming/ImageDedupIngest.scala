@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Dedup, Multimodal}
-import graft.streaming.VersionedStore.{committedVersions, dirs}
+import graft.streaming.VersionedStore.{BatchOutput, Family}
 
 /** Streaming incremental ingest for the IMAGE family — the multimodal
   * sibling of [[DedupIngest]] (text) and [[SimilarityIngest]]
@@ -22,9 +22,8 @@ import graft.streaming.VersionedStore.{committedVersions, dirs}
   *
   * STORE LAYOUT under `storeRoot` (the shared [[VersionedStore]]
   * machinery — `_SUCCESS`-gated `v=<batchId>` deltas, committed-prefix
-  * readers, tiered crash-safe compaction, tombstones — so
-  * [[DedupIngest]]'s exactly-once and crash-safety analysis applies
-  * verbatim):
+  * readers, tiered crash-safe compaction, tombstones — with its
+  * exactly-once and crash-safety analysis):
   *   - `phash/v=<batchId>/` — the batch's perceptual fingerprints
   *     (`key, _h`; append-only — a hash is immutable per key), with the
   *     `_keyrange` guard sidecar
@@ -38,8 +37,8 @@ import graft.streaming.VersionedStore.{committedVersions, dirs}
   * or pair; persisting it would only grow the store and poison the
   * 32-bit-width tripwire's sample).
   *
-  * The monotone-unique-key contract and its per-batch `_keyrange`
-  * enforcement are [[DedupIngest]]'s, verbatim: every cross-batch
+  * The monotone-unique-key contract is enforced per batch
+  * ([[VersionedStore.runBatch]]'s `_keyrange` guard): every cross-batch
   * pair's canonical `key_b` is the later key, so dropping `key_b` per
   * batch composes to keep-first over the union.
   *
@@ -61,22 +60,20 @@ object ImageDedupIngest {
   // callers outside the package
   val Fold = VersionedStore.Fold
 
+  private val phash = Family("phash", _.dropDuplicates(), keyed = true)
+  /** The store families (layout in the object doc): the one place this
+    * ingest declares them. */
+  private[streaming] val families = Seq(phash)
+
   /** The live fingerprint store (`key, _h`) from all committed deltas
     * below `below`, tombstones applied. `batchLike` supplies the key
     * column's name and type for the empty-store schema.
     */
   private[graft] def loadHashStore(spark: SparkSession, storeRoot: String,
       batchLike: DataFrame, bytesCol: String, key: String,
-      below: Long = Long.MaxValue): DataFrame = {
-    val empty = Multimodal.perceptualHashes(batchLike.limit(0), bytesCol,
-      key)
-    val vs = committedVersions(spark, s"$storeRoot/phash", below)
-    if (vs.isEmpty) empty
-    else VersionedStore.antiTombstones(
-      spark.read.schema(empty.schema)
-        .parquet(dirs(storeRoot, "phash", vs): _*),
-      key, spark, storeRoot)
-  }
+      below: Long = Long.MaxValue): DataFrame =
+    VersionedStore.read(spark, storeRoot, phash,
+      Multimodal.perceptualHashes(batchLike.limit(0), bytesCol, key), below)
 
   /** The store records its hash method in a `phash/_method` marker and
     * every batch verifies it: dHash and aHash values for the same image
@@ -127,42 +124,30 @@ object ImageDedupIngest {
       enforceKeyOrder: Boolean = true): Unit = {
     val spark = batch.sparkSession
     enforceMethodMarker(spark, storeRoot, method)
-    if (enforceKeyOrder)
-      VersionedStore.enforceKeyOrderGuard(batch, batchId,
-        s"$storeRoot/phash", key)
-    // running unguarded latches the store out of tombstone RETIREMENT
-    // (deletes still apply) — see VersionedStore.markUnguarded
-    else VersionedStore.markUnguarded(spark, storeRoot)
-    val store = loadHashStore(spark, storeRoot, batch, bytesCol, key,
-      below = batchId)
-    // one decode+hash kernel pass: the same fingerprints feed the pair
-    // op AND the store delta write below; nulls (undecodable payloads)
-    // are excluded here — they cannot band, pair, or be searched for
-    val sigs = Multimodal.perceptualHashes(batch, bytesCol, key, method)
-      .filter(col("_h").isNotNull)
-      .localCheckpoint(false)
-    // checkStoreWidth = false: the 32-bit-width tripwire is a text-
-    // simhash heuristic (uniform fingerprints), but perceptual hashes
-    // are legitimately low-entropy — a crawl stretch of solid-color
-    // placeholders hashes to 0L (no gradient sets no bit) and would
-    // false-trip it, wedging the stream
-    val (pairs, _) = Dedup.simhashNearDuplicatesIncrementalFromSigs(
-      sigs, store, key, maxDistance, maxBucketSize,
-      checkStoreWidth = false)
-    // keep-first: every pair's canonical key_b is the later key under
-    // the monotone contract (see object doc)
-    val kept = batch.join(
-      pairs.select(col("key_b").as(key)).distinct(), Seq(key),
-      "left_anti")
-    // batchId-addressed wholesale overwrites — the DedupIngest
-    // exactly-once note applies verbatim
-    sigs.write.mode("overwrite").parquet(s"$storeRoot/phash/v=$batchId")
-    // the guard sidecar rides after the data commit: a crash between
-    // the two leaves a committed version the guard merely skips
-    VersionedStore.writeKeyRange(batch, key,
-      s"$storeRoot/phash/v=$batchId")
-    kept.write.mode("overwrite")
-      .parquet(s"$keptDir/ingest_batch=$batchId")
+    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, phash, key,
+        enforceKeyOrder) {
+      val store = loadHashStore(spark, storeRoot, batch, bytesCol, key,
+        below = batchId)
+      // one decode+hash kernel pass: the same fingerprints feed the pair
+      // op AND the store delta write; nulls (undecodable payloads) are
+      // excluded here — they cannot band, pair, or be searched for
+      val sigs = Multimodal.perceptualHashes(batch, bytesCol, key, method)
+        .filter(col("_h").isNotNull)
+        .localCheckpoint(false)
+      // checkStoreWidth = false: the 32-bit-width tripwire is a text-
+      // simhash heuristic (uniform fingerprints), but perceptual hashes
+      // are legitimately low-entropy — a crawl stretch of solid-color
+      // placeholders hashes to 0L (no gradient sets no bit) and would
+      // false-trip it, wedging the stream
+      val (pairs, _) = Dedup.simhashNearDuplicatesIncrementalFromSigs(
+        sigs, store, key, maxDistance, maxBucketSize,
+        checkStoreWidth = false)
+      // keep-first: every pair's canonical key_b is the later key under
+      // the monotone contract (see object doc)
+      BatchOutput(sigs, batch.join(
+        pairs.select(col("key_b").as(key)).distinct(), Seq(key),
+        "left_anti"))
+    }
   }
 
   /** Start the ingest query. `images` is any streaming DataFrame
@@ -176,23 +161,14 @@ object ImageDedupIngest {
       storeRoot: String, keptDir: String, checkpointDir: String,
       maxDistance: Int = 3, maxBucketSize: Long = 5000,
       method: String = "dhash",
-      enforceKeyOrder: Boolean = true): StreamingQuery = {
-    require(images.isStreaming,
-      "ImageDedupIngest.start needs a streaming DataFrame — for batch " +
-        "data use Multimodal.imageNearDuplicates or the incremental " +
-        "operators directly")
-    for (c <- Seq(bytesCol, key); if !images.columns.contains(c))
-      throw new IllegalArgumentException(
-        s"images is missing column '$c' " +
-          s"(have: ${images.columns.mkString(", ")})")
-    images.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      enforceKeyOrder: Boolean = true): StreamingQuery =
+    VersionedStore.startIngest(images, "ImageDedupIngest.start", "images",
+        Seq(bytesCol, key), "use Multimodal.imageNearDuplicates or the " +
+          "incremental operators directly", checkpointDir) {
+      (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, storeRoot, keptDir, bytesCol, key,
           maxDistance, maxBucketSize, method, enforceKeyOrder)
-      }
-      .start()
-  }
+    }
 
   /** TOMBSTONE a set of images — [[DedupIngest.deleteKeys]]'s contract
     * verbatim (its scaladoc carries the semantics: effective
@@ -202,23 +178,13 @@ object ImageDedupIngest {
     * fresh). Run with the ingest query STOPPED. */
   def deleteKeys(spark: SparkSession, storeRoot: String,
       keys: DataFrame): Long =
-    VersionedStore.writeTombstones(spark, storeRoot, keys, Seq("phash"))
+    VersionedStore.deleteKeys(spark, storeRoot, keys, families)
 
-  /** Collapse the fingerprint-store version history under the shared
-    * size-tiered crash-safe policy ([[DedupIngest.compactStores]]'s
-    * scaladoc carries the full analysis). Folds apply tombstones
-    * physically; the tombstone family itself folds last. Run with the
-    * ingest query STOPPED. */
+  /** Collapse the fingerprint-store version history under the size-
+    * tiered, crash-safe policy of [[VersionedStore.compactStores]],
+    * which carries the full analysis. Run with the ingest query
+    * STOPPED. */
   def compactStores(spark: SparkSession, storeRoot: String,
-      sizeRatio: Double = 4.0): Seq[Fold] = {
-    val (tomb, floor) = VersionedStore.tombstonesAndFloor(spark,
-      storeRoot)
-    def anti(df: DataFrame): DataFrame =
-      VersionedStore.applyTombstones(df, tomb, None)
-    val folds = VersionedStore.compactFamily(spark, storeRoot, "phash",
-      sizeRatio, df => anti(df.dropDuplicates()), tombFloor = Some(floor))
-    VersionedStore.retireTombstones(spark, storeRoot, Seq("phash"))
-    folds ++ VersionedStore.compactFamily(spark, storeRoot, "tombstones",
-      sizeRatio, _.dropDuplicates())
-  }
+      sizeRatio: Double = 4.0): Seq[Fold] =
+    VersionedStore.compactStores(spark, storeRoot, families, sizeRatio)
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Eager._
 import graft.operators.Similarity
 import graft.operators.Similarity.IvfIndex
+import graft.streaming.VersionedStore.{BatchOutput, Family}
 
 /** Streaming incremental ingest for the EMBEDDING family — the
   * similarity-side sibling of [[DedupIngest]] (not a reference
@@ -24,8 +25,8 @@ import graft.operators.Similarity.IvfIndex
   *
   * STORE LAYOUT under `storeRoot` (the [[VersionedStore]] machinery —
   * `_SUCCESS`-gated `v=<batchId>` deltas, committed-prefix readers,
-  * tiered crash-safe compaction — is shared with [[DedupIngest]];
-  * its exactly-once and crash-safety analysis applies verbatim):
+  * tiered crash-safe compaction — with its exactly-once and
+  * crash-safety analysis):
   *   - `lsh/v=<batchId>/`      — the batch's LSH signatures
   *     (`key, _emb, _n, _bucket`; append-only — signatures are
   *     immutable per key). ALL batch rows sign, kept or dropped,
@@ -60,23 +61,26 @@ object SimilarityIngest {
     * [[VersionedStore.Fold]]. */
   type Fold = VersionedStore.Fold
 
+  // signatures and assignments are append-only, immutable per key; the
+  // assigned merge keeps its `_cid` partitioning so probe pruning
+  // survives compaction; the drift log is a log, carried unchanged
+  private val lsh = Family("lsh", _.dropDuplicates(), keyed = true)
+  private val assigned = Family("assigned", _.dropDuplicates(),
+    keyed = true, partitionBy = Seq("_cid"))
+  private val drift = Family("drift", identity)
+  /** The store families (layout in the object doc; `centroids/` is one
+    * relation, not a versioned family): the one place this ingest
+    * declares them. */
+  private[streaming] val families = Seq(lsh, assigned, drift)
+
   /** The live LSH signature store from all committed deltas below
-    * `below` (schema-pinned: an empty delta directory cannot break
-    * schema inference). */
+    * `below`. */
   private[graft] def loadLshStore(spark: SparkSession, storeRoot: String,
       batchLike: DataFrame, embCol: String, key: String, dim: Int,
       numBits: Int, seed: Long,
-      below: Long = Long.MaxValue): DataFrame = {
-    val empty = Similarity.lshSignatures(batchLike.limit(0), embCol, key,
-      dim, numBits, seed)
-    val vs = VersionedStore.committedVersions(spark, s"$storeRoot/lsh",
-      below)
-    if (vs.isEmpty) empty
-    else VersionedStore.antiTombstones(
-      spark.read.schema(empty.schema)
-        .parquet(VersionedStore.dirs(storeRoot, "lsh", vs): _*),
-      key, spark, storeRoot)
-  }
+      below: Long = Long.MaxValue): DataFrame =
+    VersionedStore.read(spark, storeRoot, lsh, Similarity.lshSignatures(
+      batchLike.limit(0), embCol, key, dim, numBits, seed), below)
 
   /** The live assigned relation (IVF inverted lists) from all committed
     * deltas below `below`. Versions are read one directory at a time so
@@ -100,8 +104,7 @@ object SimilarityIngest {
     // one metadata round-trip per probe on object stores) only until
     // that first data-bearing version; the remaining versions read
     // under the pinned schema, which handles an empty (bare _SUCCESS)
-    // fold target fine — the r20 form probed EVERY version on every
-    // serving-path read (ADVICE r20).
+    // fold target fine.
     val firstIdx = vs.indexWhere(v => VersionedStore.hasData(fs,
       new Path(s"$storeRoot/assigned/v=$v")))
     if (firstIdx < 0)
@@ -136,14 +139,9 @@ object SimilarityIngest {
       StructField("count", LongType),
       StructField("mean_dist", DoubleType),
       StructField("p95_dist", DoubleType)))
-    val vs = VersionedStore.committedVersions(spark, s"$storeRoot/drift",
-      Long.MaxValue)
-    if (vs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
-      .parquet(VersionedStore.dirs(storeRoot, "drift", vs): _*)
-      .orderBy("_v")
+    VersionedStore.read(spark, storeRoot, drift, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      Long.MaxValue).orderBy("_v")
   }
 
   /** The servable index the ingest has accumulated: the stored
@@ -157,7 +155,7 @@ object SimilarityIngest {
       throw new IllegalStateException(
         s"no centroids at $cdir — this similarity store was ingested " +
           "without an IVF stage (start(..., centroids = Some(...)))")
-    IvfIndex(spark.read.parquet(cdir.toString),
+    IvfIndex(VersionedStore.readBound(spark, cdir.toString),
       loadAssignedStore(spark, storeRoot))
   }
 
@@ -230,100 +228,95 @@ object SimilarityIngest {
       dim: Int, numBits: Int, threshold: Double, seed: Long,
       centroids: Option[DataFrame],
       enforceKeyOrder: Boolean = true,
-      maxBucketSize: Long = 10000): Unit = {
-    val spark = batch.sparkSession
-    if (enforceKeyOrder)
-      VersionedStore.enforceKeyOrderGuard(batch, batchId,
-        s"$storeRoot/lsh", key)
-    // running unguarded latches the store out of tombstone RETIREMENT
-    // (deletes still apply) — see VersionedStore.markUnguarded
-    else VersionedStore.markUnguarded(spark, storeRoot)
-    val store = loadLshStore(spark, storeRoot, batch, embCol, key, dim,
-      numBits, seed, below = batchId)
-    // one bucketing-kernel pass: the same signatures feed the pair op
-    // AND the store delta write below
-    val sigs = Similarity.lshSignatures(batch, embCol, key, dim, numBits,
-      seed).localCheckpoint(false)
-    val (pairs, _) = Similarity.lshNeighborPairsIncrementalFromSigs(sigs,
-      store, key, threshold, maxBucketSize)
-    // keep-first: every pair's canonical key_b is the later key under
-    // the monotone contract, so dropping key_b per batch composes to
-    // embeddingDedupDropList over the union (see object doc)
-    val kept = batch.join(
-      pairs.select(col("key_b").as(key)).distinct(), Seq(key),
-      "left_anti")
-      .localCheckpoint(false)
-    // all outputs are batchId-addressed wholesale overwrites — the
-    // DedupIngest exactly-once note applies verbatim
-    sigs.write.mode("overwrite").parquet(s"$storeRoot/lsh/v=$batchId")
-    // the guard sidecar rides after the data commit: a crash between
-    // the two leaves a committed version the guard merely skips
-    VersionedStore.writeKeyRange(batch, key, s"$storeRoot/lsh/v=$batchId")
-    for (cents <- centroids) {
-      val fs = new Path(storeRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // once, so the store serves on its own; overwrite-idempotent
-      // under redelivery, and cheap to skip once committed. Writing is
-      // legal ONLY on a fresh store: missing centroids WITH committed
-      // list assignments means a retrainIvfIndex crashed in its
-      // centroid-commit window — silently re-committing the (likely
-      // stale) passed relation over already-rewritten lists would
-      // bless exactly the desynchronization the tripwire below exists
-      // to stop.
-      if (!fs.exists(new Path(s"$storeRoot/centroids/_SUCCESS"))) {
-        if (VersionedStore.committedVersions(spark,
-            s"$storeRoot/assigned", Long.MaxValue).nonEmpty)
-          throw new IllegalStateException(
-            s"committed list assignments exist under $storeRoot but " +
-              "no committed centroids — a retrainIvfIndex crashed in " +
-              "its centroid-commit window; re-run retrainIvfIndex " +
-              "(and restart the ingest with its centroids) before " +
-              "processing more batches")
-        cents.write.mode("overwrite").parquet(s"$storeRoot/centroids")
-      } else {
-        // tripwire: assigning against centroids that disagree with the
-        // committed relation would not error — it would silently
-        // desynchronize lists from the centroids probes rank against,
-        // a pure recall leak. The common way in is restarting the loop
-        // with a stale relation after retrainIvfIndex. Both sides are
-        // parquet round-trips of the same doubles (bit-exact), so
-        // set equality is the right check; nlist-bounded collect.
-        // Flip side (start()'s scaladoc carries the contract): a
-        // re-evaluated LIVE kmeansCentroids plan is NOT bit-stable
-        // (partition-order float addition) and can spuriously trip
-        // this — restarts must pass loadIvfIndex(storeRoot).centroids.
-        def keyOf(df: DataFrame) = df
-          .select(col("_cid"), col("_cv").cast("array<double>"))
-          .collect().map(r =>
-            (r.getInt(0), r.getSeq[Double](1).toList)).toSet
-        if (keyOf(spark.read.parquet(s"$storeRoot/centroids"))
-            != keyOf(cents))
-          throw new IllegalStateException(
-            s"the centroids passed to this ingest disagree with the " +
-              s"committed relation at $storeRoot/centroids — after " +
-              "retrainIvfIndex, restart with the retrained centroids " +
-              "(loadIvfIndex(storeRoot).centroids); assigning against " +
-              "stale centroids silently desynchronizes the lists")
-      }
-      // index the KEPT rows only — a dropped vector's near-identical
-      // twin is already (or about to be) in the lists. An all-dropped
-      // (or empty) batch writes NO delta: a partitioned empty write
-      // has no readable schema, and skipping is retry-consistent
-      // because kept is deterministic over the committed prefix
-      if (!kept.isEmpty)
-        Similarity.assignTo(cents, kept, embCol, key)
-          .write.mode("overwrite").partitionBy("_cid")
-          .parquet(s"$storeRoot/assigned/v=$batchId")
-      // drift is a property of the incoming TRAFFIC, so it is measured
-      // over the whole batch, dropped rows included
+      maxBucketSize: Long = 10000): Unit =
+    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, lsh, key,
+        enforceKeyOrder) {
+      val spark = batch.sparkSession
+      val store = loadLshStore(spark, storeRoot, batch, embCol, key, dim,
+        numBits, seed, below = batchId)
+      // one bucketing-kernel pass: the same signatures feed the pair op
+      // AND the store delta write
+      val sigs = Similarity.lshSignatures(batch, embCol, key, dim,
+        numBits, seed).localCheckpoint(false)
+      val (pairs, _) = Similarity.lshNeighborPairsIncrementalFromSigs(
+        sigs, store, key, threshold, maxBucketSize)
+      // keep-first: every pair's canonical key_b is the later key under
+      // the monotone contract, so dropping key_b per batch composes to
+      // embeddingDedupDropList over the union (see object doc)
+      val kept = batch.join(
+        pairs.select(col("key_b").as(key)).distinct(), Seq(key),
+        "left_anti")
+        .localCheckpoint(false)
+      BatchOutput(sigs, kept, () => centroids.foreach(cents =>
+        indexKept(spark, batch, batchId, storeRoot, embCol, key, cents,
+          kept)))
+    }
+
+  /** The IVF stage of a batch: commit or check the centroids, assign
+    * the kept rows to their lists and log the batch's drift. */
+  private def indexKept(spark: SparkSession, batch: DataFrame,
+      batchId: Long, storeRoot: String, embCol: String, key: String,
+      cents: DataFrame, kept: DataFrame): Unit = {
+    val fs = new Path(storeRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // once, so the store serves on its own; overwrite-idempotent
+    // under redelivery, and cheap to skip once committed. Writing is
+    // legal ONLY on a fresh store: missing centroids WITH committed
+    // list assignments means a retrainIvfIndex crashed in its
+    // centroid-commit window — silently re-committing the (likely
+    // stale) passed relation over already-rewritten lists would
+    // bless exactly the desynchronization the tripwire below exists
+    // to stop.
+    if (!fs.exists(new Path(s"$storeRoot/centroids/_SUCCESS"))) {
+      if (VersionedStore.committedVersions(spark,
+          s"$storeRoot/assigned", Long.MaxValue).nonEmpty)
+        throw new IllegalStateException(
+          s"committed list assignments exist under $storeRoot but " +
+            "no committed centroids — a retrainIvfIndex crashed in " +
+            "its centroid-commit window; re-run retrainIvfIndex " +
+            "(and restart the ingest with its centroids) before " +
+            "processing more batches")
+      cents.write.mode("overwrite").parquet(s"$storeRoot/centroids")
+    } else {
+      // tripwire: assigning against centroids that disagree with the
+      // committed relation would not error — it would silently
+      // desynchronize lists from the centroids probes rank against,
+      // a pure recall leak. The common way in is restarting the loop
+      // with a stale relation after retrainIvfIndex. Both sides are
+      // parquet round-trips of the same doubles (bit-exact), so
+      // set equality is the right check; nlist-bounded collect.
+      // Flip side (start()'s scaladoc carries the contract): a
+      // re-evaluated LIVE kmeansCentroids plan is NOT bit-stable
+      // (partition-order float addition) and can spuriously trip
+      // this — restarts must pass loadIvfIndex(storeRoot).centroids.
+      def keyOf(df: DataFrame) = df
+        .select(col("_cid"), col("_cv").cast("array<double>"))
+        .collect().map(r =>
+          (r.getInt(0), r.getSeq[Double](1).toList)).toSet
+      if (keyOf(VersionedStore.readBound(spark, s"$storeRoot/centroids"))
+          != keyOf(cents))
+        throw new IllegalStateException(
+          s"the centroids passed to this ingest disagree with the " +
+            s"committed relation at $storeRoot/centroids — after " +
+            "retrainIvfIndex, restart with the retrained centroids " +
+            "(loadIvfIndex(storeRoot).centroids); assigning against " +
+            "stale centroids silently desynchronizes the lists")
+    }
+    // index the KEPT rows only — a dropped vector's near-identical
+    // twin is already (or about to be) in the lists. An all-dropped
+    // (or empty) batch writes NO delta: a partitioned empty write
+    // has no readable schema, and skipping is retry-consistent
+    // because kept is deterministic over the committed prefix
+    if (!kept.isEmpty)
+      VersionedStore.writeDelta(Similarity.assignTo(cents, kept, embCol,
+        key), storeRoot, assigned, batchId)
+    // drift is a property of the incoming TRAFFIC, so it is measured
+    // over the whole batch, dropped rows included
+    VersionedStore.writeDelta(
       Similarity.assignmentDrift(cents, batch, embCol, key)
         .select(lit(batchId).as("_v"), col("count"), col("mean_dist"),
-          col("p95_dist"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$storeRoot/drift/v=$batchId")
-    }
-    kept.write.mode("overwrite")
-      .parquet(s"$keptDir/ingest_batch=$batchId")
+          col("p95_dist")).coalesce(1),
+      storeRoot, drift, batchId)
   }
 
   /** Start the ingest query. `docs` is any streaming DataFrame carrying
@@ -352,26 +345,21 @@ object SimilarityIngest {
       centroids: Option[DataFrame] = None,
       enforceKeyOrder: Boolean = true,
       maxBucketSize: Long = 10000): StreamingQuery = {
-    require(docs.isStreaming,
-      "SimilarityIngest.start needs a streaming DataFrame — for batch " +
-        "data use the incremental operators directly " +
-        "(Similarity.lshNeighborPairsIncremental / extendIvfIndex)")
     require(dim > 0, s"dim must be positive, got $dim")
-    for (c <- Seq(embCol, key); if !docs.columns.contains(c))
-      throw new IllegalArgumentException(
-        s"docs is missing column '$c' (have: ${docs.columns.mkString(", ")})")
-    // pin the centroid relation ON THE DRIVER — foreachBatch must not
-    // re-evaluate a live query plan against moved data on every batch,
-    // and an executor-resident pin (localCheckpoint) would die with
-    // its executor hours into the run (spot / dynamic allocation).
-    // nlist × dim doubles: the same bounded-collect class as the
-    // k-means loop's per-round centroids.
-    val pinned = centroids.map { c =>
-      (c.collect().toSeq, c.schema)
-    }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    VersionedStore.startIngest(docs, "SimilarityIngest.start", "docs",
+        Seq(embCol, key), "use the incremental operators directly " +
+          "(Similarity.lshNeighborPairsIncremental / extendIvfIndex)",
+        checkpointDir) {
+      // pin the centroid relation ON THE DRIVER — foreachBatch must not
+      // re-evaluate a live query plan against moved data on every
+      // batch, and an executor-resident pin (localCheckpoint) would die
+      // with its executor hours into the run (spot / dynamic
+      // allocation). nlist × dim doubles: the same bounded-collect
+      // class as the k-means loop's per-round centroids.
+      val pinned = centroids.map { c =>
+        (c.collect().toSeq, c.schema)
+      }
+      (batch: DataFrame, batchId: Long) => {
         import scala.jdk.CollectionConverters._
         val cents = pinned.map { case (rows, schema) =>
           batch.sparkSession.createDataFrame(rows.asJava, schema)
@@ -380,7 +368,7 @@ object SimilarityIngest {
           dim, numBits, threshold, seed, cents,
           enforceKeyOrder, maxBucketSize)
       }
-      .start()
+    }
   }
 
   /** The answer to a climbing [[driftLog]]: retrain the centroids on
@@ -440,15 +428,6 @@ object SimilarityIngest {
     IvfIndex(cents, loadAssignedStore(spark, storeRoot))
   }
 
-  /** Collapse the version history under the same size-tiered,
-    * staged-commit policy as [[DedupIngest.compactStores]] (whose
-    * scaladoc carries the full policy and crash-safety argument — the
-    * implementation is shared, [[VersionedStore.compactFamily]]). Run
-    * with the ingest query STOPPED. Signatures and assignments resolve
-    * by `dropDuplicates` (both append-only, immutable per key; the
-    * assigned merge keeps its `_cid` partitioning so probe pruning
-    * survives compaction); the drift log is a log — rows are carried
-    * unchanged. */
   /** TOMBSTONE a set of vectors — the embedding-side [[DedupIngest
     * .deleteKeys]] (whose scaladoc carries the semantics: effective
     * immediately via reader anti-joins, physically removed as
@@ -461,33 +440,12 @@ object SimilarityIngest {
     */
   def deleteKeys(spark: SparkSession, storeRoot: String,
       keys: DataFrame): Long =
-    VersionedStore.writeTombstones(spark, storeRoot, keys, keyedFamilies)
+    VersionedStore.deleteKeys(spark, storeRoot, keys, families)
 
-  /** The families whose rows are keyed by vector id — the ones
-    * tombstones apply to, and the ones retirement must see rewritten. */
-  private val keyedFamilies = Seq("lsh", "assigned")
-
+  /** Collapse the version history under the size-tiered, crash-safe
+    * policy of [[VersionedStore.compactStores]], which carries the full
+    * analysis. Run with the ingest query STOPPED. */
   def compactStores(spark: SparkSession, storeRoot: String,
-      sizeRatio: Double = 4.0): Seq[Fold] = {
-    // folds physically drop tombstoned rows (reader parity is already
-    // guaranteed by the anti-joins; this reclaims the bytes) and record
-    // the applied floor; fully-applied markers then retire, and the
-    // tombstone family folds last so its directories are stable while
-    // the other folds read them. The tombstone set resolves ONCE.
-    val (tomb, floor) = VersionedStore.tombstonesAndFloor(spark,
-      storeRoot)
-    def anti(df: DataFrame): DataFrame =
-      VersionedStore.applyTombstones(df, tomb, None)
-    val folds = VersionedStore.compactFamily(spark, storeRoot, "lsh",
-      sizeRatio, df => anti(df.dropDuplicates()),
-      tombFloor = Some(floor)) ++
-      VersionedStore.compactFamily(spark, storeRoot, "assigned",
-        sizeRatio, df => anti(df.dropDuplicates()),
-        partitionBy = Seq("_cid"), tombFloor = Some(floor)) ++
-      VersionedStore.compactFamily(spark, storeRoot, "drift", sizeRatio,
-        identity)
-    VersionedStore.retireTombstones(spark, storeRoot, keyedFamilies)
-    folds ++ VersionedStore.compactFamily(spark, storeRoot, "tombstones",
-      sizeRatio, _.dropDuplicates())
-  }
+      sizeRatio: Double = 4.0): Seq[Fold] =
+    VersionedStore.compactStores(spark, storeRoot, families, sizeRatio)
 }

@@ -3,19 +3,32 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.ParquetSchema
 
-/** The versioned-delta store layout both streaming ingest loops ride
-  * ([[DedupIngest]] for text near-dup, [[SimilarityIngest]] for
-  * embedding near-dup + IVF serving): each family directory holds
-  * `v=<batchId>/` version deltas, a version counts only once its
-  * `_SUCCESS` marker exists, readers take the committed prefix
-  * `< batchId`, and [[compactFamily]] folds committed history under a
-  * size-tiered policy with a staged, crash-safe commit. Factored here
-  * so the two ingests share one store implementation — the crash-safety
-  * and idempotence analysis in the [[DedupIngest]] scaladoc applies to
-  * every family verbatim.
+/** The versioned-delta store layout the three streaming ingest loops
+  * ride ([[DedupIngest]] for text near-dup, [[SimilarityIngest]] for
+  * embedding near-dup + IVF serving, [[ImageDedupIngest]] for image
+  * near-dup): each family directory holds `v=<batchId>/` version
+  * deltas, a version counts only once its `_SUCCESS` marker exists,
+  * readers take the committed prefix `< batchId`, and [[compactFamily]]
+  * folds committed history under a size-tiered policy with a staged,
+  * crash-safe commit. Each ingest declares its families once, as a
+  * `Seq[`[[Family]]`]`; the readers ([[read]]), the takedown
+  * ([[deleteKeys]]), the compaction order ([[compactStores]]) and the
+  * per-batch skeleton ([[runBatch]], [[startIngest]]) are derived from
+  * that declaration here, so the invariants below hold for every family
+  * of every ingest.
+  *
+  * EXACTLY-ONCE: `foreachBatch` re-delivers a batch after failure with
+  * the SAME batchId. Every per-batch output (the deltas and the kept
+  * partition) is written with wholesale `Overwrite` into
+  * batchId-addressed directories ([[writeDelta]]), and the store readers
+  * consider only versions `< batchId` — a retry recomputes from exactly
+  * the same committed prefix (the operators are seeded/deterministic)
+  * and overwrites the same paths, making the batch idempotent end to
+  * end.
   */
 private[streaming] object VersionedStore {
 
@@ -24,6 +37,18 @@ private[streaming] object VersionedStore {
     * `v=<into>` (= `versions.max`), rewriting `bytes` parquet bytes. */
   final case class Fold(family: String, versions: Seq[Long], into: Long,
       bytes: Long)
+
+  /** One store family of an ingest: the `name/` directory of `v=<n>`
+    * deltas, the `fold` that resolves a merged group of them during
+    * compaction, and the columns its deltas are partitioned by. A
+    * `keyed` family holds rows keyed by document: its readers and folds
+    * apply the tombstones (joined on `tombKey`, or on the tombstone
+    * column's own recorded name — the ingest's key column — when None),
+    * its fold targets record the applied floor, and retirement must see
+    * it rewritten. */
+  final case class Family(name: String, fold: DataFrame => DataFrame,
+      keyed: Boolean = false, tombKey: Option[String] = None,
+      partitionBy: Seq[String] = Nil)
 
   private val VersionDir = "^v=(\\d+)$".r
   private val StagingDir = "^\\.compact-v=(\\d+)$".r
@@ -125,6 +150,30 @@ private[streaming] object VersionedStore {
   def dirs(root: String, family: String, vs: Seq[Long]): Seq[String] =
     vs.map(v => s"$root/$family/v=$v")
 
+  /** The live relation of `family` from its committed deltas below
+    * `below`, tombstones applied when the family is keyed; `empty` when
+    * nothing is committed. Reads are pinned to `empty`'s schema, so an
+    * empty delta (a bare `_SUCCESS`) cannot break schema inference and
+    * binding runs no Spark job. Partitioned families need a
+    * per-directory read instead ([[SimilarityIngest.loadAssignedStore]]). */
+  def read(spark: SparkSession, storeRoot: String, family: Family,
+      empty: DataFrame, below: Long): DataFrame = {
+    val vs = committedVersions(spark, s"$storeRoot/${family.name}", below)
+    if (vs.isEmpty) empty
+    else {
+      val df = spark.read.schema(empty.schema)
+        .parquet(dirs(storeRoot, family.name, vs): _*)
+      if (family.keyed)
+        applyTombstones(df, tombstones(spark, storeRoot), family.tombKey)
+      else df
+    }
+  }
+
+  /** A non-partitioned parquet directory, its schema bound from the
+    * footer of its first data file: no inference job runs. */
+  def readBound(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(ParquetSchema(spark, dir)).parquet(dir)
+
   /** Whether a version dir holds readable data: some file outside
     * hidden (`_`/`.`) segments — `_SUCCESS`-only empty deltas and
     * sidecar dirs don't count (no schema to infer, nothing to merge). */
@@ -164,11 +213,74 @@ private[streaming] object VersionedStore {
       finally in.close()
     }
 
+  /** Write `df` as `family`'s delta `v=<batchId>`: a bare
+    * batchId-addressed overwrite — the PER-BATCH delta discipline every
+    * family shares: `_SUCCESS` gates commitment, redelivery overwrites
+    * idempotently, and the stream retries an uncommitted batch. The
+    * staged write-then-rename protocol ([[stagedReplace]]) is the
+    * MAINTENANCE discipline (compaction, retrain, tombstones), where a
+    * committed version is replaced while readers may exist — routing
+    * hot-path deltas through it would add a delete+rename metadata
+    * round-trip per batch for no crash-safety gain. */
+  def writeDelta(df: DataFrame, storeRoot: String, family: Family,
+      batchId: Long): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (family.partitionBy.nonEmpty) w.partitionBy(family.partitionBy: _*)
+      else w).parquet(s"$storeRoot/${family.name}/v=$batchId")
+  }
+
+  /** What an ingest's batch body hands [[runBatch]]: the `guarded`
+    * family's delta, the `kept` rows, and the writes (`afterDelta`)
+    * that land between the two, in the body's own order. */
+  final case class BatchOutput(delta: DataFrame, kept: DataFrame,
+      afterDelta: () => Unit = () => ())
+
+  /** One micro-batch of an ingest, in the write order every ingest
+    * shares: the key-order guard on the `guarded` family (or, with
+    * `enforceKeyOrder = false`, the [[markUnguarded]] latch — deletes
+    * still apply, retirement stops) before any work; then `body`; the
+    * guarded family's delta; its `_keyrange` sidecar AFTER the data
+    * commit (a crash between the two leaves a committed version the
+    * guard merely skips); the body's other writes; and the kept rows
+    * last, in `keptDir/ingest_batch=<batchId>`. */
+  def runBatch(batch: DataFrame, batchId: Long, storeRoot: String,
+      keptDir: String, guarded: Family, key: String,
+      enforceKeyOrder: Boolean)(body: => BatchOutput): Unit = {
+    val famDir = s"$storeRoot/${guarded.name}"
+    if (enforceKeyOrder)
+      enforceKeyOrderGuard(batch, batchId, famDir, key)
+    else markUnguarded(batch.sparkSession, storeRoot)
+    val out = body
+    writeDelta(out.delta, storeRoot, guarded, batchId)
+    writeKeyRange(batch, key, s"$famDir/v=$batchId")
+    out.afterDelta()
+    out.kept.write.mode("overwrite")
+      .parquet(s"$keptDir/ingest_batch=$batchId")
+  }
+
+  /** Start an ingest query: `data` must be streaming (`batchHint` names
+    * the batch-data alternative) and carry `columns`; every micro-batch
+    * runs `batchFn` under `foreachBatch`, checkpointed at
+    * `checkpointDir`. `batchFn` is evaluated once, after the checks. */
+  def startIngest(data: DataFrame, entry: String, dataName: String,
+      columns: Seq[String], batchHint: String, checkpointDir: String)(
+      batchFn: => (DataFrame, Long) => Unit): StreamingQuery = {
+    require(data.isStreaming,
+      s"$entry needs a streaming DataFrame — for batch data $batchHint")
+    for (c <- columns; if !data.columns.contains(c))
+      throw new IllegalArgumentException(
+        s"$dataName is missing column '$c' " +
+          s"(have: ${data.columns.mkString(", ")})")
+    val f = batchFn
+    data.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(f)
+      .start()
+  }
+
   /** Write the key-order guard's one-row range sidecar for a just-
     * committed version (underscore-prefixed — invisible to the
-    * version's data readers). Written AFTER the data commit: a crash
-    * between the two leaves a committed version the guard merely
-    * skips. */
+    * version's data readers). */
   def writeKeyRange(batch: DataFrame, key: String,
       versionDir: String): Unit =
     batch.agg(min(col(key)).as("minKey"), max(col(key)).as("maxKey"))
@@ -357,6 +469,14 @@ private[streaming] object VersionedStore {
     v
   }
 
+  /** [[writeTombstones]] over the keyed ones of an ingest's `families`. */
+  def deleteKeys(spark: SparkSession, storeRoot: String, keys: DataFrame,
+      families: Seq[Family]): Long =
+    writeTombstones(spark, storeRoot, keys, keyedNames(families))
+
+  private def keyedNames(families: Seq[Family]): Seq[String] =
+    families.filter(_.keyed).map(_.name)
+
   /** All committed tombstone keys, distinct — None when the store has
     * never seen a delete, or every delta has been retired (the
     * zero-overhead common cases: readers skip the anti-join entirely).
@@ -465,7 +585,7 @@ private[streaming] object VersionedStore {
       // hasData is a recursive listing (one metadata round-trip per
       // probe on object stores) — materialize it once per tombstone
       // version; both the retired filter and anyHusk below derive from
-      // the same map (ADVICE r20)
+      // the same map
       val dataByV = tombVs.map(vt =>
         vt -> hasData(fs, new Path(s"$famDir/v=$vt"))).toMap
       val retired = tombVs.filter { vt =>
@@ -608,8 +728,7 @@ private[streaming] object VersionedStore {
   /** Fold one family's committed history (resolved by `resolve`) under
     * the size-tiered policy, with the staged crash-safe commit and the
     * `_keyrange` sidecar carry-through — the full policy and safety
-    * argument lives on [[DedupIngest.compactStores]], which (like
-    * [[SimilarityIngest.compactStores]]) is this per family. Only
+    * argument lives on [[compactStores]], which is this per family. Only
     * versions STRICTLY BELOW the family's max are ever folded (the max
     * must survive for `foreachBatch` retry reads).
     *
@@ -660,10 +779,15 @@ private[streaming] object VersionedStore {
         fs.mkdirs(staging)
         fs.create(new Path(staging, "_SUCCESS"), true).close()
       } else {
-        val first = spark.read.parquet(readable.head)
-        val merged = readable.tail
-          .map(d => spark.read.schema(first.schema).parquet(d))
-          .foldLeft(first)(_.unionByName(_))
+        // an unpartitioned family's footer is its schema (no inference
+        // job); a partitioned one keeps inference for its partition
+        // columns
+        val schema =
+          if (partitionBy.isEmpty) ParquetSchema(spark, readable.head)
+          else spark.read.parquet(readable.head).schema
+        val merged = readable
+          .map(d => spark.read.schema(schema).parquet(d))
+          .reduce(_.unionByName(_))
         val writer = resolve(merged).write.mode("overwrite")
         (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
           else writer).parquet(staging.toString)
@@ -718,5 +842,75 @@ private[streaming] object VersionedStore {
       srcs.foreach(v => fs.delete(new Path(s"$famDir/v=$v"), true))
       Fold(family, group, vInto, fs.getContentSummary(target).getLength)
     }
+  }
+
+  /** Collapse the version history of an ingest's `families` under a
+    * SIZE-TIERED policy. Run with the ingest query STOPPED — compaction
+    * rewrites directories a running batch may be reading.
+    *
+    * ORDER: the tombstones resolve ONCE (one family listing + marker
+    * probe, not one per folded family — driver metadata round-trips are
+    * the read-path cost on an object store); each family folds in
+    * declaration order by its `fold`, the keyed ones with the tombstones
+    * applied (physical removal) and the applied floor recorded; then
+    * fully-applied tombstone deltas retire ([[retireTombstones]]), and
+    * the tombstone family itself folds LAST so its directories are
+    * stable while the other folds read them.
+    *
+    * POLICY — tiered, not monolithic: folding the whole history into
+    * one version every call is an O(store) rewrite per call, which at
+    * corpus scale means periodically rewriting the entire signature
+    * store. Instead, adjacent committed versions are grouped oldest →
+    * newest with the classic merge rule: a run of newer versions folds
+    * into the next older one only once the run's bytes reach within
+    * `sizeRatio` of it (`newerBytes × sizeRatio ≥ olderBytes`). The
+    * surviving tiers grow geometrically, so each byte is rewritten
+    * O(log_ratio(store/delta)) times over the store's lifetime and a
+    * large settled version is touched only when the data accumulated
+    * after it is comparable to it. Pass `sizeRatio =
+    * Double.PositiveInfinity` for the old fold-everything behavior.
+    * Groups are contiguous and fold into the group's own maximum
+    * version, so every directory `v=N` always holds rows from versions
+    * ≤ N and the readers' `below = batchId` prefix filter stays exact.
+    *
+    * Only versions STRICTLY BELOW the highest are ever folded. The
+    * highest version must survive untouched because `foreachBatch`
+    * commits its epoch AFTER the batch function returns — a stop in
+    * that window re-delivers the last batch on restart, and its retry
+    * reads versions `< batchId`; folding history into the max would
+    * make that retry see an empty store and overwrite the merged data
+    * with a batch-sized delta. Every version below the max has provably
+    * committed (offsets advance in order), so folding them is safe.
+    *
+    * CRASH SAFETY — staged commit: each group's merge is written to
+    * `.compact-v=<into>` (invisible to readers, with its own `_SUCCESS`
+    * once complete), then committed by unlinking `v=<into>` and
+    * atomically renaming the staging directory over it, and only then
+    * are the other source versions deleted. Every committed version
+    * therefore remains readable until the merged data is fully on
+    * disk. A crash inside the two-metadata-op unlink/rename window
+    * leaves the merge complete but unlinked — the next reader or
+    * compaction heals it by finishing the rename
+    * ([[healStagedCompactions]]). A crash after the rename but before
+    * the source deletes leaves duplicate rows across versions, which
+    * readers exclude by the target's `_folded` record and the next
+    * compaction removes.
+    *
+    * Returns the folds performed, with the parquet bytes each rewrote
+    * — the observability hook for sizing `sizeRatio`. */
+  def compactStores(spark: SparkSession, storeRoot: String,
+      families: Seq[Family], sizeRatio: Double): Seq[Fold] = {
+    val (tomb, floor) = tombstonesAndFloor(spark, storeRoot)
+    val folds = families.flatMap { f =>
+      if (f.keyed)
+        compactFamily(spark, storeRoot, f.name, sizeRatio,
+          df => applyTombstones(f.fold(df), tomb, f.tombKey),
+          f.partitionBy, tombFloor = Some(floor))
+      else compactFamily(spark, storeRoot, f.name, sizeRatio, f.fold,
+        f.partitionBy)
+    }
+    retireTombstones(spark, storeRoot, keyedNames(families))
+    folds ++ compactFamily(spark, storeRoot, "tombstones", sizeRatio,
+      _.dropDuplicates())
   }
 }

@@ -816,7 +816,7 @@ class DedupIngestSpec extends SparkTestBase {
     // compaction folds every accruing family at once, invisibly
     val folds = DedupIngest.compactStores(spark, storeRoot,
       sizeRatio = Double.PositiveInfinity)
-    for (f <- Seq("sig", "exact", "linecounts", "spancounts"))
+    for (f <- Seq("sig", "exact", "labels", "linecounts", "spancounts"))
       assert(folds.exists(_.family == f), s"expected a $f fold: $folds")
     assert(keptState() == ((kept, texts)),
       "compaction must be invisible to readers")
