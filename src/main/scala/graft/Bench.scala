@@ -33,9 +33,9 @@ object Bench {
     * sides) so AQE cannot quietly swap in a broadcast join and collapse
     * the thing being measured.
     *
-    * TWO SHAPES, because ambient drift is not one number (the round-16
-    * anchor moved 23% while the suite stayed flat — throughput drift
-    * over-predicted what latency-bound queries should feel):
+    * TWO SHAPES, because ambient drift is not one number (a throughput
+    * anchor has moved 23% while the suite stayed flat — throughput drift
+    * over-predicts what latency-bound queries feel):
     *   - `scan` + `join` (reported summed as `total`): THROUGHPUT —
     *     data-proportional CPU/IO, the right anchor for scan/agg/join
     *     queries whose cost is dominated by rows processed;
@@ -102,7 +102,7 @@ object Bench {
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     // One discarded warm-up pass over the WHOLE suite (not just one
     // query): JIT compilation, codegen class loading, and parquet footer
-    // caches all warm per query shape, and the round-7 spread widening
+    // caches all warm per query shape, and a measured spread widening
     // (p90 0.26 s → 0.50 s) tracked exactly the queries that JIT mid-run.
     // The timed runs then measure steady state.
     names.foreach { case (_, fn) =>

@@ -18,8 +18,8 @@ object MicroBench {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else Seq("q41_ivf_topk", "q71_ivf_kmeans", "q94_cluster_neardup")
-    // validate names BEFORE creating the session (ADVICE r21 — a typo
-    // used to throw a bare NoSuchElementException after spin-up)
+    // validate names BEFORE creating the session (a typo would otherwise
+    // throw a bare NoSuchElementException after spin-up)
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")} " +
       s"(known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})")
@@ -39,7 +39,7 @@ object MicroBench {
     names.foreach { n =>
       val ts = times(n).sorted
       // true median: average the two middle samples for even run counts
-      // (ADVICE r21 — the upper-middle element biased even-count reads)
+      // (the upper-middle element alone would bias even-count reads)
       val med =
         if (ts.length % 2 == 1) ts(ts.length / 2)
         else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0

@@ -381,18 +381,24 @@ object Dedup {
   private[graft] object Kernels extends Serializable {
     import scala.util.hashing.MurmurHash3
 
-    /** Word n-gram shingles in one pass (mirrors [[shingles]] semantics).
+    /** The one JVM tokenizer of the shingle, simhash and n-gram kernels:
+      * lowercased (root locale), whitespace-split, empty tokens dropped.
       * No explicit trim: `\s+` splitting plus the nonEmpty filter already
       * drops leading/trailing whitespace of ANY kind (space, tab, newline),
       * which keeps semantics aligned with the Catalyst `split`+filter
       * formulation without depending on which characters `trim` strips.
+      */
+    def tokens(text: String): Array[String] =
+      text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+
+    /** Word n-gram shingles in one pass (mirrors [[shingles]] semantics).
       * Null/empty text → EMPTY set (never a duplicate of anything): a ""
       * sentinel would make every null-text row an exact jaccard-1.0 dup of
       * every other, the same defect class the null simhash fix addressed.
       */
     def shingleSet(text: String, n: Int): Array[String] = {
       if (text == null) return Array.empty
-      val tk = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+      val tk = tokens(text)
       if (tk.length == 0) Array.empty
       else if (tk.length < n) Array(tk.mkString(" "))
       else {
@@ -476,7 +482,7 @@ object Dedup {
       */
     def simhash32(text: String): java.lang.Long = {
       if (text == null) return null
-      val tk = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+      val tk = tokens(text)
       val seen = new scala.collection.mutable.HashSet[String]
       val votes = new Array[Int](32)
       var ti = 0
@@ -514,7 +520,7 @@ object Dedup {
       */
     def simhash64(text: String): java.lang.Long = {
       if (text == null) return null
-      val tk = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+      val tk = tokens(text)
       val seen = new scala.collection.mutable.HashSet[String]
       val votes = new Array[Int](64)
       var ti = 0
@@ -550,7 +556,7 @@ object Dedup {
       */
     def ngramSpans(text: String, n: Int): Array[(Int, Int, Long)] = {
       if (text == null) return Array.empty
-      val tk = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+      val tk = tokens(text)
       if (tk.length == 0) Array.empty
       else if (tk.length < n)
         Array((0, tk.length, TextOps.ngramHash64(tk.mkString(" "))))

@@ -119,6 +119,10 @@ object GuardMetrics {
   private def tagLabel(tag: String): String =
     if (tag.isEmpty) "(untagged)" else tag
 
+  /** The two working columns [[capCohorts]] adds to its input. */
+  private[operators] val cohortCols: Seq[String] =
+    Seq("_graft_bn", "_graft_brn")
+
   /** Shared guard body: drop every row of a `keys` cohort larger than
     * `cap`, counting dropped rows and cohorts under `tag` (and in the
     * session-wide untagged pair). The count/row_number window partitions
@@ -170,7 +174,7 @@ object GuardMetrics {
         .withColumn("_graft_brn", row_number().over(w))
         .filter(col("_graft_bn") <= cap ||
           recordDrop(col("_graft_bn"), col("_graft_brn")))
-        .drop("_graft_bn", "_graft_brn")
+        .drop(cohortCols: _*)
     }
   }
 

@@ -202,6 +202,17 @@ object Joins {
   final case class RangeDim(leftAt: String, rightStart: String,
       rightEnd: String, binWidth: Long)
 
+  /** One interval-vs-interval dimension of a multi-dimensional
+    * [[intervalOverlapJoin]]: both sides' bound columns and the bin width
+    * in their BIN-IMAGE units — native for numerics, epoch MICROS for
+    * TIMESTAMP columns (binned via `unix_micros` internally), epoch DAYS
+    * for DATE columns (binned via `unix_date`; a micros-scale width on
+    * DATE bounds would silently put every row in bin 0). Size near the
+    * LONGER side's typical interval length.
+    */
+  final case class OverlapDim(leftStart: String, leftEnd: String,
+      rightStart: String, rightEnd: String, binWidth: Long)
+
   /** The numeric image a bound column bins on: timestamps map to epoch
     * micros (so `binWidth` is in micros for them), numerics to their own
     * value. The mapping is monotone and identical on both join sides,
@@ -217,21 +228,6 @@ object Joins {
     case DateType => unix_date(c)
     case _ => c
   }
-
-  /** Shared naming for the binned-join family: `_graft_bin`, `_graft_bin2`,
-    * … per dimension (these names double as the RangeJoinRewrite re-entry
-    * guard — the optimizer rule must not re-bin an already-binned join),
-    * `_r`-suffixed right-side bins, and `_graft_rk_`-prefixed right-key
-    * renames where the right side leaves the left's namespace.
-    */
-  private def binName(i: Int): String =
-    "_graft_bin" + (if (i == 0) "" else (i + 1).toString)
-  private def rBinName(i: Int): String = binName(i) + "_r"
-  private def rKeyName(k: String): String = "_graft_rk_" + k
-
-  private def requireGuardCap(maxBinSize: Long): Unit =
-    require(maxBinSize <= 0 || maxBinSize > 1,
-      "maxBinSize must be > 1 (or <= 0 to skip the skew guard)")
 
   /** The bin image is chosen per column TYPE (micros / days / native), so
     * every bound column of one dimension must come from the same family —
@@ -289,72 +285,18 @@ object Joins {
     * pairs must co-reside in ALL dimensions — the pruning a residual
     * predicate can't give. The right side explodes the cross product of
     * its per-dimension bin ranges (size the widths near the interval
-    * lengths to keep that ≤2 bins per dimension).
+    * lengths to keep that ≤2 bins per dimension). Key columns come back
+    * USING-style, first.
     *
-    * Hot-bin skew guard (`maxBinSize`, same contract as
-    * `Dedup.minhashNearDuplicates`'s `maxBucketSize`): a hot (key, bin)
-    * cohort — epoch-zero default timestamps, a flash-sale hour — makes
-    * B_l × B_r candidate pairs inside that one bin, the binned join's
-    * only quadratic failure mode. Each side's rows in a (key, bins…)
-    * cohort larger than `maxBinSize` are dropped before the join (the
-    * WHOLE cohort, mirroring the minhash guard), so per-bin work is
-    * bounded by `maxBinSize²`. This trades results for survival: matches
-    * involving a dropped cohort are lost, so the cap is sized (10 000)
-    * to engage only on pathological cohorts — `10000²` pairs in ONE bin
-    * is already a data bug to investigate, not a query to answer.
-    * `maxBinSize <= 0` is the documented sentinel for "no guard": exact
-    * results whatever the skew, at the risk of a quadratic bin. Guard
-    * shape: a count window partitioned by the join's own (key, bins…)
-    * keys, so its exchange (and sort) is exactly what the sort-merge
-    * join a real cluster plans here needs anyway — at scale the guard
-    * costs no extra shuffle. At broadcast-size inputs it does force the
-    * exchange the broadcast join would have skipped (~0.2 s on the
-    * sf0.1 bench queries); set the sentinel where inputs are known tiny
-    * AND skew-free.
+    * `maxBinSize` is the hot-bin skew guard, here on both sides: (key,
+    * bins…) cohorts larger than the cap are dropped before the join, and
+    * `maxBinSize <= 0` skips the guard. See `binnedJoin` for the trade
+    * and its cost.
     */
   def rangeJoin(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      dims: Seq[RangeDim], maxBinSize: Long = 10000): DataFrame = {
-    require(dims.nonEmpty, "rangeJoin needs at least one dimension")
-    dims.foreach(d => require(d.binWidth > 0,
-      s"binWidth must be > 0 for $d"))
-    dims.foreach(d => requireSameFamily(Seq((left, d.leftAt),
-      (right, d.rightStart), (right, d.rightEnd)), s"rangeJoin $d"))
-    requireGuardCap(maxBinSize)
-    // inverted intervals (end < start) can never contain a point, but
-    // Spark's sequence() would step BACKWARDS through them, materializing
-    // an arbitrarily large bin array per malformed row — drop them first
-    // (semantics-preserving: the containment predicate is always false)
-    val rBinned = dims.zipWithIndex.foldLeft(
-      right.filter(dims.map(d =>
-        col(d.rightEnd) >= col(d.rightStart)).reduce(_ && _))) {
-      case (df, (d, i)) => df.withColumn(binName(i),
-        explode(sequence(
-          floor(binSrc(df, d.rightStart) / d.binWidth).cast("long"),
-          floor(binSrc(df, d.rightEnd) / d.binWidth).cast("long"))))
-    }
-    val lBinned = dims.zipWithIndex.foldLeft(left) { case (df, (d, i)) =>
-      df.withColumn(binName(i),
-        floor(binSrc(df, d.leftAt) / d.binWidth).cast("long"))
-    }
-    val joinKeys = keyCols ++ dims.indices.map(binName)
-    val guard = binGuard(joinKeys, maxBinSize, "rangeJoin") _
-    guard(lBinned).join(guard(rBinned), joinKeys)
-      .filter(dims.map(d => col(d.leftAt) >= col(d.rightStart) &&
-        col(d.leftAt) < col(d.rightEnd)).reduce(_ && _))
-      .drop(dims.indices.map(binName): _*)
-  }
-
-  /** The hot-bin cap shared by the binned join family: drop every row of
-    * a (key, bin) cohort larger than `maxBinSize` (see [[rangeJoin]]'s
-    * guard doc for the trade). The count window partitions on the join's
-    * own keys, so its exchange is reused by the join itself. Drops are
-    * counted in the session's [[GuardMetrics]] accumulators — the
-    * session-wide pair plus a per-`tag` pair, so two guarded operators
-    * in one query stay attributable — and warned once per executor.
-    */
-  private def binGuard(joinKeys: Seq[String], maxBinSize: Long,
-      tag: String)(df: DataFrame): DataFrame =
-    GuardMetrics.capCohorts(df, joinKeys.map(col), maxBinSize, tag)
+      dims: Seq[RangeDim], maxBinSize: Long = 10000): DataFrame =
+    binnedJoin(left, right, keyCols, rangeDims(dims), maxBinSize)(
+      "rangeJoin", "inner", "rangeJoin")
 
   /** Left-outer [[rangeJoin]] (single dimension): every left row
     * survives; points inside no right interval carry nulls for the right
@@ -370,59 +312,21 @@ object Joins {
     * keeping events with none" — the everyday complement of the inner
     * form, which otherwise needs a hand-rolled anti-join union.
     *
-    * Shape: the point side keeps its single bin per row, the exact
-    * containment predicate moves INTO the left-outer join condition
-    * (equi keys: the keys + bins; containment becomes the residual), so
-    * unmatched left rows surface with nulls directly — no second pass,
-    * no row-id bookkeeping, same single-shuffle cost envelope as the
-    * inner form. The right side's key/bound columns must not collide
-    * with left column names (right keys are renamed internally; its
-    * value columns pass through).
+    * The point side never explodes, so the containment predicate rides
+    * the left-outer join condition and unmatched left rows surface with
+    * nulls directly — no second pass, no row-id bookkeeping, the inner
+    * form's single-shuffle cost. The output keeps the left's columns in
+    * order and drops the right's key columns; the right's bound columns
+    * must not share a name with any left column.
     *
-    * The hot-bin guard caps the RIGHT side only: a left-outer join must
-    * preserve every left row, so left cohorts are never dropped — an
-    * over-cap right cohort loses its matches and those left rows emit as
-    * unmatched (see [[rangeJoin]]'s guard doc for sizing).
+    * The hot-bin guard caps the RIGHT side only: an over-cap right cohort
+    * loses its matches and those left rows emit as unmatched.
     */
   def rangeJoinLeftOuter(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], dims: Seq[RangeDim],
-      maxBinSize: Long = 10000): DataFrame = {
-    require(dims.nonEmpty, "rangeJoinLeftOuter needs at least one dimension")
-    dims.foreach(d => require(d.binWidth > 0, s"binWidth must be > 0 for $d"))
-    dims.foreach(d => requireSameFamily(Seq((left, d.leftAt),
-      (right, d.rightStart), (right, d.rightEnd)),
-      s"rangeJoinLeftOuter $d"))
-    requireGuardCap(maxBinSize)
-    // right side: rename keys out of the left's namespace, drop inverted
-    // intervals (containment-safe, see rangeJoin), explode covered bins
-    val renamed = keyCols.foldLeft(right)(
-      (df, k) => df.withColumnRenamed(k, rKeyName(k)))
-    val rBinned = dims.zipWithIndex.foldLeft(
-      renamed.filter(dims.map(d =>
-        col(d.rightEnd) >= col(d.rightStart)).reduce(_ && _))) {
-      case (df, (d, i)) => df.withColumn(rBinName(i),
-        explode(sequence(
-          floor(binSrc(df, d.rightStart) / d.binWidth).cast("long"),
-          floor(binSrc(df, d.rightEnd) / d.binWidth).cast("long"))))
-    }
-    val rGuarded = binGuard(
-      keyCols.map(rKeyName) ++ dims.indices.map(rBinName), maxBinSize,
-      "rangeJoinOuter")(rBinned)
-    val lBinned = dims.zipWithIndex.foldLeft(left) { case (df, (d, i)) =>
-      df.withColumn(binName(i),
-        floor(binSrc(df, d.leftAt) / d.binWidth).cast("long"))
-    }
-    // a null point or key bins/equi-joins to nothing and falls out as an
-    // unmatched left row — exactly vanilla LEFT JOIN semantics
-    val cond = (keyCols.map(k => col(k) === col(rKeyName(k))) ++
-      dims.indices.map(i => col(binName(i)) === col(rBinName(i))) ++
-      dims.map(d => col(d.leftAt) >= col(d.rightStart) &&
-        col(d.leftAt) < col(d.rightEnd))).reduce(_ && _)
-    lBinned.join(rGuarded, cond, "left_outer")
-      .drop(dims.indices.map(binName): _*)
-      .drop(dims.indices.map(rBinName): _*)
-      .drop(keyCols.map(rKeyName): _*)
-  }
+      maxBinSize: Long = 10000): DataFrame =
+    binnedJoin(left, right, keyCols, rangeDims(dims), maxBinSize)(
+      "rangeJoinLeftOuter", "left_outer", "rangeJoinOuter")
 
   /** Full-outer [[rangeJoin]] (single dimension): every left point AND
     * every right interval survives; see the `dims` overload.
@@ -445,111 +349,21 @@ object Joins {
   /** Full-outer [[rangeJoin]]: matched (point, interval) pairs plus every
     * unmatched left point AND every unmatched right interval, null-extended
     * — vanilla `FULL JOIN ... ON key AND containment` semantics, which
-    * Spark would plan as a nested loop.
+    * Spark would plan as a nested loop. Key columns come back as one
+    * column per key name, coalesced across the two sides (an unmatched
+    * right row's key survives there).
     *
-    * Key columns come back USING-style: since the join condition requires
-    * key equality, the output carries ONE column per key name, coalesced
-    * across the two sides (an unmatched right row's key survives there).
-    * The right side's bound/value columns must not collide with left
-    * column names.
-    *
-    * Mechanics beyond [[rangeJoinLeftOuter]] (whose condition-resident
-    * containment already preserves the never-exploded point side): the
-    * interval side IS exploded, so its unmatched rows must emit exactly
-    * once, not once per bin copy. Each right row is stamped with a
-    * synthetic 8-byte id BEFORE the explode; after the full-outer join a
-    * count window over that id says whether ANY copy matched, and
-    * fully-unmatched rows emit from their HOME bin only (the bin of
-    * `least(start, end)`, null-safe — inverted intervals are NOT dropped
-    * here, and null-bound rows keep a null-bin copy via `explode_outer`,
-    * because both must surface as unmatched rows). Unmatched LEFT rows
-    * need no such pass (one copy each); they key the same window by a
-    * disjoint negative image of their own pre-stamped id, so the
-    * window never concentrates them into one null partition. The ids are
-    * consumed within this single linear plan — they must not cross
-    * plan-reuse boundaries (monotonically_increasing_id is
-    * recomputation-sensitive).
-    *
-    * The hot-bin guard changes shape here: dropping a cohort's ROWS would
-    * lose unmatched emissions, so the cap rides the JOIN CONDITION
-    * instead — over-cap (key, bins…) cohorts on either side match
-    * nothing and their rows surface as unmatched. No rows are ever lost;
-    * only over-cap matches are, same sizing rationale as [[rangeJoin]].
-    * Cost: one extra exchange for the id window — the price of outer
-    * semantics on the exploding side.
+    * Inverted and null-bound intervals are kept: they match nothing and
+    * surface as unmatched right rows. The exploded interval side emits
+    * each unmatched row once, at one extra exchange (the right row-id
+    * window); the hot-bin guard rides the join condition, so no row is
+    * ever lost, only over-cap matches. See `binnedJoin`.
     */
   def rangeJoinFullOuter(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], dims: Seq[RangeDim],
-      maxBinSize: Long = 10000): DataFrame = {
-    require(dims.nonEmpty, "rangeJoinFullOuter needs at least one dimension")
-    dims.foreach(d => require(d.binWidth > 0, s"binWidth must be > 0 for $d"))
-    dims.foreach(d => requireSameFamily(Seq((left, d.leftAt),
-      (right, d.rightStart), (right, d.rightEnd)),
-      s"rangeJoinFullOuter $d"))
-    requireGuardCap(maxBinSize)
-    def rSrc(d: RangeDim)(c: Column): Column =
-      binSrcOf(right.schema(d.rightStart).dataType, c)
-    def rBinOf(d: RangeDim)(c: Column): Column =
-      floor(rSrc(d)(c) / d.binWidth).cast("long")
-    val renamed = keyCols.foldLeft(right)(
-      (df, k) => df.withColumnRenamed(k, rKeyName(k)))
-    val rBinned = dims.zipWithIndex.foldLeft(
-        renamed.withColumn("_graft_rid", monotonically_increasing_id())
-          .withColumn("_graft_m", lit(1))) {
-      case (df, (d, i)) => df.withColumn(rBinName(i),
-        explode_outer(sequence(
-          rBinOf(d)(least(col(d.rightStart), col(d.rightEnd))),
-          rBinOf(d)(greatest(col(d.rightStart), col(d.rightEnd))))))
-    }
-    val lBinned = dims.zipWithIndex.foldLeft(
-        left.withColumn("_graft_lid", monotonically_increasing_id())
-          .withColumn("_graft_lm", lit(1))) { case (df, (d, i)) =>
-      df.withColumn(binName(i),
-        floor(binSrc(df, d.leftAt) / d.binWidth).cast("long"))
-    }
-    // condition-resident guard: the count windows partition on the join's
-    // own (key, bins…) keys, so their exchanges are the join's own
-    val guarded = maxBinSize > 0
-    val lG =
-      if (!guarded) lBinned
-      else lBinned.withColumn("_graft_bnl", count(lit(1)).over(
-        Window.partitionBy(
-          (keyCols ++ dims.indices.map(binName)).map(col): _*)))
-    val rG =
-      if (!guarded) rBinned
-      else rBinned.withColumn("_graft_bnr", count(lit(1)).over(
-        Window.partitionBy((keyCols.map(rKeyName) ++
-          dims.indices.map(rBinName)).map(col): _*)))
-    val cond = (keyCols.map(k => col(k) === col(rKeyName(k))) ++
-      dims.indices.map(i => col(binName(i)) === col(rBinName(i))) ++
-      dims.map(d => col(d.leftAt) >= col(d.rightStart) &&
-        col(d.leftAt) < col(d.rightEnd)) ++
-      (if (!guarded) Nil
-       else Seq(col("_graft_bnl") <= maxBinSize,
-         col("_graft_bnr") <= maxBinSize))).reduce(_ && _)
-    val atHomeR = dims.zipWithIndex.map { case (d, i) =>
-      col(rBinName(i)) <=>
-        rBinOf(d)(least(col(d.rightStart), col(d.rightEnd)))
-    }.reduce(_ && _)
-    // matched + unmatched-left rows carry _graft_lm and pass directly;
-    // right-only copies survive only when NO copy of their row matched
-    // (the count window spans all copies via the pre-explode id) and only
-    // from their home bin. Left-present rows key the window by a disjoint
-    // negative id image, so they never pile into one window partition.
-    val w = Window.partitionBy(
-      coalesce(col("_graft_rid"), -col("_graft_lid") - 1))
-    val out = lG.join(rG, cond, "full_outer")
-      .withColumn("_graft_mc", count(col("_graft_lm")).over(w))
-      .filter(col("_graft_lm").isNotNull ||
-        (col("_graft_mc") === 0 && atHomeR))
-    keyCols.foldLeft(out)((df, k) =>
-        df.withColumn(k, coalesce(col(k), col(rKeyName(k)))))
-      .drop("_graft_lid", "_graft_rid", "_graft_lm", "_graft_m",
-        "_graft_mc", "_graft_bnl", "_graft_bnr")
-      .drop(dims.indices.map(binName): _*)
-      .drop(dims.indices.map(rBinName): _*)
-      .drop(keyCols.map(rKeyName): _*)
-  }
+      maxBinSize: Long = 10000): DataFrame =
+    binnedJoin(left, right, keyCols, rangeDims(dims), maxBinSize)(
+      "rangeJoinFullOuter", "full_outer")
 
   /** Interval-overlap join: pair each left [`leftStart`, `leftEnd`)
     * interval with the right [`rightStart`, `rightEnd`) intervals it
@@ -557,13 +371,9 @@ object Joins {
     * standard half-open overlap predicate), per equality key.
     *
     * Like [[rangeJoin]] but BOTH sides carry intervals, so both sides
-    * explode to their covered bins and equi-join on the bin. A pair whose
-    * intervals span several shared bins would match once per shared bin;
-    * instead of a dedup shuffle, each pair is emitted from exactly ONE
-    * canonical bin — the bin containing `greatest(leftStart, rightStart)`
-    * (the overlap's own start, which always lies inside both intervals'
-    * covered bin ranges when the overlap predicate holds) — so the output
-    * is duplicate-free without any post-join aggregation.
+    * explode to their covered bins and equi-join on the bin; each pair is
+    * emitted from exactly one canonical bin, so the output is
+    * duplicate-free without any post-join aggregation.
     *
     * `binWidth` is in the units of the boundary columns; size it near the
     * typical interval length of the LONGER side so each interval covers
@@ -575,20 +385,12 @@ object Joins {
     * (`end < start`) are NOT dropped: the raw overlap predicate is
     * satisfiable by such a row — left (10, 5) matches right (3, 20)
     * because 10 < 20 AND 3 < 5 — so this operator matches the plain-SQL
-    * predicate exactly. Each side explodes the bins of
-    * `[least(start, end), greatest(start, end)]` (so `sequence()` never
-    * steps backwards), and the canonical bin of
-    * `greatest(leftStart, rightStart)` provably lies in both sides'
-    * covered ranges whenever the predicate holds (both sides inverted is
-    * unsatisfiable — the predicate would form a cycle).
+    * predicate exactly.
     *
-    * `maxBinSize` is the same hot-bin skew guard as [[rangeJoin]]'s (see
-    * its doc for the full trade): cohorts larger than the cap in one
-    * (key, bin) are dropped from BOTH sides before the join, bounding
-    * per-bin work at `maxBinSize²` instead of B_l × B_r. Matches whose
-    * canonical bin falls in a dropped cohort are lost — the cap is sized
-    * to engage only on pathological cohorts (boilerplate epoch-zero
-    * intervals). `maxBinSize <= 0` skips the guard entirely.
+    * `maxBinSize` is the same hot-bin skew guard as [[rangeJoin]]'s:
+    * cohorts larger than the cap in one (key, bin) are dropped from BOTH
+    * sides before the join; matches whose canonical bin falls in a
+    * dropped cohort are lost. `maxBinSize <= 0` skips the guard entirely.
     */
   def intervalOverlapJoin(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], leftStart: String, leftEnd: String,
@@ -597,17 +399,6 @@ object Joins {
     intervalOverlapJoin(left, right, keyCols,
       Seq(OverlapDim(leftStart, leftEnd, rightStart, rightEnd, binWidth)),
       maxBinSize)
-
-  /** One interval-vs-interval dimension of a multi-dimensional
-    * [[intervalOverlapJoin]]: both sides' bound columns and the bin width
-    * in their BIN-IMAGE units — native for numerics, epoch MICROS for
-    * TIMESTAMP columns (binned via `unix_micros` internally), epoch DAYS
-    * for DATE columns (binned via `unix_date`; a micros-scale width on
-    * DATE bounds would silently put every row in bin 0). Size near the
-    * LONGER side's typical interval length.
-    */
-  final case class OverlapDim(leftStart: String, leftEnd: String,
-      rightStart: String, rightEnd: String, binWidth: Long)
 
   /** Multi-dimensional interval-overlap join: each of `dims` is an
     * independent interval-overlap (e.g. a time overlap AND a value-band
@@ -618,77 +409,25 @@ object Joins {
     * explode the cross product of their per-dimension bin ranges (size
     * widths near the interval lengths to keep that ≤2 bins per
     * dimension), and each pair is emitted from its per-dimension
-    * CANONICAL bin combination — dimension i's bin of
-    * `greatest(leftStart_i, rightStart_i)` — which is unique per pair,
-    * so multi-bin overlaps never duplicate in any dimension and no dedup
-    * shuffle is needed (the 1-D canonical-bin proof applies per
-    * dimension independently).
+    * canonical bin combination, so multi-bin overlaps never duplicate in
+    * any dimension.
     *
-    * `maxBinSize` is shared across the whole (key, bins…) cohort — see
-    * the single-dimension overload's doc for the trade. (Scala permits
-    * default arguments on only one overload, so this form takes it
-    * explicitly; pass 10000 for the default behavior.)
+    * `maxBinSize` is shared across the whole (key, bins…) cohort. (Scala
+    * permits default arguments on only one overload, so this form takes
+    * it explicitly; pass 10000 for the default behavior.)
     */
   def intervalOverlapJoin(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], dims: Seq[OverlapDim],
-      maxBinSize: Long): DataFrame = {
-    require(dims.nonEmpty, "intervalOverlapJoin needs at least one dimension")
-    dims.foreach(d => require(d.binWidth > 0,
-      s"binWidth must be > 0 for $d"))
-    val lBounds = dims.flatMap(d => Seq(d.leftStart, d.leftEnd))
-    val rBounds = dims.flatMap(d => Seq(d.rightStart, d.rightEnd))
-    require(lBounds.toSet.intersect(rBounds.toSet).isEmpty,
-      "boundary column names must differ between the two sides")
-    dims.foreach(d => requireSameFamily(Seq((left, d.leftStart),
-      (left, d.leftEnd), (right, d.rightStart), (right, d.rightEnd)),
-      s"intervalOverlapJoin $d"))
-    requireGuardCap(maxBinSize)
-    def binOf(d: OverlapDim)(c: Column): Column =
-      floor(c / d.binWidth).cast("long")
-    def binned(df: DataFrame, start: OverlapDim => String,
-        end: OverlapDim => String): DataFrame =
-      dims.zipWithIndex.foldLeft(df) { case (acc, (d, i)) =>
-        acc.withColumn(binName(i),
-          explode(sequence(
-            binOf(d)(least(binSrc(acc, start(d)), binSrc(acc, end(d)))),
-            binOf(d)(greatest(binSrc(acc, start(d)), binSrc(acc, end(d)))))))
-      }
-    // the canonical bin mixes one bound from each side; their types agree
-    // (the overlap predicate compares them cross-side), so the left
-    // bound's type picks the numeric image
-    def canonSrc(d: OverlapDim)(c: Column): Column =
-      binSrcOf(left.schema(d.leftStart).dataType, c)
-    val joinKeys = keyCols ++ dims.indices.map(binName)
-    val guard = binGuard(joinKeys, maxBinSize, "overlapJoin") _
-    guard(binned(left, _.leftStart, _.leftEnd))
-      .join(guard(binned(right, _.rightStart, _.rightEnd)), joinKeys)
-      .filter(dims.zipWithIndex.map { case (d, i) =>
-        col(d.leftStart) < col(d.rightEnd) &&
-          col(d.rightStart) < col(d.leftEnd) &&
-          col(binName(i)) === binOf(d)(canonSrc(d)(greatest(
-            col(d.leftStart), col(d.rightStart))))
-      }.reduce(_ && _))
-      .drop(dims.indices.map(binName): _*)
-  }
+      maxBinSize: Long): DataFrame =
+    binnedJoin(left, right, keyCols, overlapDims(dims), maxBinSize)(
+      "intervalOverlapJoin", "inner", "overlapJoin")
 
   /** Left-outer [[intervalOverlapJoin]]: every left interval survives;
     * left rows overlapping no right interval carry nulls for the right
-    * columns.
-    *
-    * Mechanics beyond the inner form: the left side explodes to several
-    * bin copies, so "unmatched" must be decided per ROW, not per copy —
-    * a copy in bin b only sees right rows whose pair-canonical bin is b,
-    * and a matched row's other copies would otherwise emit spurious null
-    * rows. The full overlap + canonical-bin predicate moves into the
-    * left-outer join condition, then a count window partitioned by a
-    * synthetic per-row id (stamped BEFORE the explode, so all of a row's
-    * copies share it) counts each row's matches across ALL its copies:
-    * matched rows keep their matches, rows with zero matches anywhere
-    * emit exactly once from their HOME bin (the bin of
-    * `least(start, end)`, null-safe so null-bound rows — kept by
-    * `explode_outer` with a null bin — emit too). Cost vs the inner
-    * form: one extra exchange (the window over the 8-byte row id) — the
-    * price of outer semantics without a caller-supplied key.
+    * columns, once per row however many bins the row covers (null-bound
+    * rows included). Cost vs the inner form: one extra exchange, the
+    * window over an 8-byte left row id — the price of outer semantics
+    * without a caller-supplied key.
     *
     * The hot-bin guard caps the RIGHT side only (a left-outer join must
     * preserve every left row); over-cap right cohorts lose their matches
@@ -702,91 +441,16 @@ object Joins {
       Seq(OverlapDim(leftStart, leftEnd, rightStart, rightEnd, binWidth)),
       maxBinSize)
 
-  /** Multi-dimensional [[intervalOverlapJoinLeftOuter]] — the left-outer
-    * form of the multi-dimension overlap join. Mechanics are the 1-D
-    * method's, applied per dimension: the left side explodes the cross
-    * product of its per-dimension bin ranges (`explode_outer` per
-    * dimension, so a null bound keeps its row with a null bin), matches
-    * carry every dimension's bin-equality + overlap + canonical-bin
-    * conjunct in the join condition, and a count window over the left's
-    * own columns decides unmatched rows, which emit exactly once from
-    * their all-dimensions HOME bin combination (each dimension's bin of
-    * `least(start, end)`, null-safe). The hot-bin guard caps the RIGHT
-    * side only, on the full (key, bins…) cohort.
+  /** Multi-dimensional [[intervalOverlapJoinLeftOuter]]: the 1-D
+    * semantics with every dimension's overlap, as in the multi-dimension
+    * [[intervalOverlapJoin]]. The hot-bin guard caps the RIGHT side only,
+    * on the full (key, bins…) cohort.
     */
   def intervalOverlapJoinLeftOuter(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], dims: Seq[OverlapDim],
-      maxBinSize: Long): DataFrame = {
-    require(dims.nonEmpty,
-      "intervalOverlapJoinLeftOuter needs at least one dimension")
-    dims.foreach(d => require(d.binWidth > 0,
-      s"binWidth must be > 0 for $d"))
-    val lBounds = dims.flatMap(d => Seq(d.leftStart, d.leftEnd))
-    val rBounds = dims.flatMap(d => Seq(d.rightStart, d.rightEnd))
-    require(lBounds.toSet.intersect(rBounds.toSet).isEmpty,
-      "boundary column names must differ between the two sides")
-    dims.foreach(d => requireSameFamily(Seq((left, d.leftStart),
-      (left, d.leftEnd), (right, d.rightStart), (right, d.rightEnd)),
-      s"intervalOverlapJoinLeftOuter $d"))
-    requireGuardCap(maxBinSize)
-    // each dimension's four bound columns share a type family (the
-    // overlap predicate compares them cross-side), so the left start's
-    // type picks that dimension's numeric image
-    def src(d: OverlapDim)(c: Column): Column =
-      binSrcOf(left.schema(d.leftStart).dataType, c)
-    def binOf(d: OverlapDim)(c: Column): Column =
-      floor(src(d)(c) / d.binWidth).cast("long")
-    // a synthetic per-row id, added BEFORE the explode so every bin copy
-    // of a row shares it, keys the match-count window: an 8-byte key
-    // instead of the whole left payload (wide text/embedding rows would
-    // otherwise be the exchange key), and always partitionable (a
-    // map-typed left column would reject a full-row window, where the
-    // vanilla LEFT JOIN this operator replaces accepts it).
-    // monotonically_increasing_id is stable only within ONE evaluation:
-    // the id is stamped and consumed inside this single linear plan, and
-    // must never cross a plan-reuse boundary (a self-join re-evaluating
-    // lBinned could re-stamp different ids — localCheckpoint the input
-    // first if this operator ever feeds plan reuse)
-    val lBinned = dims.zipWithIndex.foldLeft(
-        left.withColumn("_graft_lid", monotonically_increasing_id())) {
-      case (df, (d, i)) =>
-        df.withColumn(binName(i),
-          explode_outer(sequence(
-            binOf(d)(least(col(d.leftStart), col(d.leftEnd))),
-            binOf(d)(greatest(col(d.leftStart), col(d.leftEnd))))))
-    }
-    val rBinned = dims.zipWithIndex.foldLeft(
-        keyCols.foldLeft(right)((df, k) => df.withColumnRenamed(k, rKeyName(k)))) {
-        case (df, (d, i)) => df.withColumn(rBinName(i),
-          explode(sequence(
-            binOf(d)(least(col(d.rightStart), col(d.rightEnd))),
-            binOf(d)(greatest(col(d.rightStart), col(d.rightEnd))))))
-      }
-      .withColumn("_graft_m", lit(1))
-    val rGuarded = binGuard(
-      keyCols.map(rKeyName) ++ dims.indices.map(rBinName), maxBinSize,
-      "overlapJoinOuter")(rBinned)
-    val cond = (keyCols.map(k => col(k) === col(rKeyName(k))) ++
-      dims.zipWithIndex.flatMap { case (d, i) => Seq(
-        col(binName(i)) === col(rBinName(i)),
-        col(d.leftStart) < col(d.rightEnd),
-        col(d.rightStart) < col(d.leftEnd),
-        col(binName(i)) === binOf(d)(greatest(col(d.leftStart),
-          col(d.rightStart))))
-      }).reduce(_ && _)
-    val atHome = dims.zipWithIndex.map { case (d, i) =>
-      col(binName(i)) <=> binOf(d)(least(col(d.leftStart), col(d.leftEnd)))
-    }.reduce(_ && _)
-    val w = Window.partitionBy(col("_graft_lid"))
-    lBinned.join(rGuarded, cond, "left_outer")
-      .withColumn("_graft_mc", count(col("_graft_m")).over(w))
-      .filter(col("_graft_m").isNotNull ||
-        (col("_graft_mc") === 0 && atHome))
-      .drop("_graft_m", "_graft_mc", "_graft_lid")
-      .drop(dims.indices.map(binName): _*)
-      .drop(dims.indices.map(rBinName): _*)
-      .drop(keyCols.map(rKeyName): _*)
-  }
+      maxBinSize: Long): DataFrame =
+    binnedJoin(left, right, keyCols, overlapDims(dims), maxBinSize)(
+      "intervalOverlapJoinLeftOuter", "left_outer", "overlapJoinOuter")
 
   /** Full-outer [[intervalOverlapJoin]] (single dimension): every left
     * AND every right interval survives; see the `dims` overload.
@@ -800,114 +464,261 @@ object Joins {
       maxBinSize)
 
   /** Full-outer [[intervalOverlapJoin]]: overlapping pairs plus every
-    * unmatched interval from BOTH sides, null-extended — vanilla
-    * `FULL JOIN ... ON key AND overlap` semantics. Key columns come back
-    * USING-style (one coalesced column per key name, as in
-    * [[rangeJoinFullOuter]]).
-    *
-    * Both sides explode to bin copies here, so BOTH need the
-    * once-per-row unmatched emission of [[intervalOverlapJoinLeftOuter]]:
-    * each side stamps a synthetic 8-byte id before its explode
-    * (`explode_outer` — null-bound rows keep a null-bin copy and must
-    * surface as unmatched), matched pairs emit once from their canonical
-    * bin combination, and each side's fully-unmatched rows emit once from
-    * their HOME bins, decided by a count window over that side's id. The
-    * two windows key on `coalesce(own id, negative image of the other
-    * side's id)`, disjoint namespaces, so neither window concentrates the
-    * other side's rows into one partition. Ids are consumed within this
-    * single linear plan (monotonically_increasing_id is
-    * recomputation-sensitive — do not feed this operator into plan
-    * reuse).
-    *
-    * The hot-bin guard rides the JOIN CONDITION (as in
-    * [[rangeJoinFullOuter]]): over-cap (key, bins…) cohorts match nothing
-    * and surface as unmatched — no rows are ever lost. Cost vs the inner
-    * form: two extra exchanges (one id window per side) — the price of
-    * full-outer semantics with both sides exploding.
+    * unmatched interval from BOTH sides, once each, null-extended —
+    * vanilla `FULL JOIN ... ON key AND overlap` semantics. Key columns
+    * come back as one coalesced column per key name, as in
+    * [[rangeJoinFullOuter]]. The hot-bin guard rides the join condition:
+    * over-cap (key, bins…) cohorts match nothing and surface as
+    * unmatched — no rows are ever lost. Cost vs the inner form: two extra
+    * exchanges (one row-id window per side).
     */
   def intervalOverlapJoinFullOuter(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], dims: Seq[OverlapDim],
-      maxBinSize: Long): DataFrame = {
-    require(dims.nonEmpty,
-      "intervalOverlapJoinFullOuter needs at least one dimension")
+      maxBinSize: Long): DataFrame =
+    binnedJoin(left, right, keyCols, overlapDims(dims), maxBinSize)(
+      "intervalOverlapJoinFullOuter", "full_outer")
+
+  /** One side's bounds in one dimension of [[binnedJoin]]. */
+  private sealed trait Bound { def cols: Seq[String] }
+  private final case class Point(at: String) extends Bound {
+    def cols: Seq[String] = Seq(at)
+  }
+  private final case class Interval(start: String, end: String)
+      extends Bound {
+    def cols: Seq[String] = Seq(start, end)
+  }
+
+  /** One dimension of [[binnedJoin]]; `shown` is the caller's
+    * [[RangeDim]] or [[OverlapDim]], for messages. The right side holds
+    * an interval in every form.
+    */
+  private final case class Dim(shown: Product, l: Bound, r: Interval,
+      binWidth: Long) {
+    def binOf(c: Column): Column = floor(c / binWidth).cast("long")
+  }
+
+  private def rangeDims(dims: Seq[RangeDim]): Seq[Dim] = dims.map(d =>
+    Dim(d, Point(d.leftAt), Interval(d.rightStart, d.rightEnd), d.binWidth))
+
+  private def overlapDims(dims: Seq[OverlapDim]): Seq[Dim] = dims.map(d =>
+    Dim(d, Interval(d.leftStart, d.leftEnd),
+      Interval(d.rightStart, d.rightEnd), d.binWidth))
+
+  /** One input of [[binnedJoin]] with the names its rows work in: its
+    * key and bin columns, its row id, its presence marker, its guard's
+    * cohort count and its unmatched-emission match count.
+    */
+  private final case class Side(df: DataFrame, bounds: Seq[Bound],
+      keep: Boolean, keys: Seq[String], bins: Seq[String], id: String,
+      mark: String, cohort: String, matches: String) {
+    def work: Seq[String] = Seq(id, mark, cohort, matches)
+    def explodes: Boolean = bounds.exists(_.isInstanceOf[Interval])
+    /** preserved AND exploded: its unmatched rows must emit once */
+    def once: Boolean = keep && explodes
+    /** the first bin of an interval: [least, greatest] never steps back */
+    def lo(d: Dim, iv: Interval): Column =
+      d.binOf(least(binSrc(df, iv.start), binSrc(df, iv.end)))
+    def hi(d: Dim, iv: Interval): Column =
+      d.binOf(greatest(binSrc(df, iv.start), binSrc(df, iv.end)))
+  }
+
+  /** Bin names `_graft_bin`, `_graft_bin2`, … per dimension (these names
+    * double as the RangeJoinRewrite re-entry guard — the optimizer rule
+    * must not re-bin an already-binned join), `_r`-suffixed right-side
+    * bins, and `_graft_rk_`-prefixed right-key renames where the right
+    * side leaves the left's namespace.
+    */
+  private def binName(i: Int): String =
+    "_graft_bin" + (if (i == 0) "" else (i + 1).toString)
+  private def rBinName(i: Int): String = binName(i) + "_r"
+  private def rKeyName(k: String): String = "_graft_rk_" + k
+
+  /** The binned-join core behind all six `dims` forms: filter by bin
+    * co-residency, verify with the exact predicate. Each form states
+    * which side holds a point or an interval per dimension, the join
+    * type and its guard tag; everything else derives from those.
+    *
+    * Binning. Every row gets one bin per dimension in its bound's BIN
+    * IMAGE ([[binSrc]]): a point its own bin, an interval EVERY bin of
+    * `[least(start, end), greatest(start, end)]`, one row copy per bin
+    * combination, so `sequence()` never steps backwards. Candidates
+    * equi-join on (keys, bins…) and the exact predicate verifies them:
+    * containment `start <= at < end`, overlap `ls < re AND rs < le`.
+    *
+    * Derivation rules:
+    *  - a side explodes iff it holds an interval; `explode_outer` iff it
+    *    is also preserved (a null-bound row keeps one null-bin copy);
+    *  - inverted intervals are dropped only on a non-preserved
+    *    containment side, where they can contain no point (and
+    *    `sequence()` would otherwise materialize a huge backward range);
+    *    an overlap side keeps them — left (10, 5) overlaps right (3, 20)
+    *    — and a preserved side must surface them as unmatched;
+    *  - the canonical-bin conjunct applies iff both sides explode;
+    *  - once-per-row emission applies to each side that is preserved and
+    *    exploded;
+    *  - the row-dropping guard applies to every non-preserved side; with
+    *    both sides preserved it moves into the join condition;
+    *  - key columns: an inner join is a USING join (keys first); outer
+    *    joins rename the right keys to `_graft_rk_` and compare them in
+    *    the condition, then drop them (left outer) or coalesce them into
+    *    the left's (full outer).
+    *
+    * Canonical bin. When both sides explode, a pair overlapping across
+    * several shared bins would match once per shared bin. Only the bin
+    * of `greatest(ls, rs)`, the overlap's own start, is kept, which is
+    * one bin per pair. Whenever the predicate holds it lies in both
+    * sides' covered ranges, inverted rows included: `ls <= g` and, as
+    * `rs < le`, `g <= greatest(ls, le)` (symmetrically on the right).
+    * Per dimension, so multi-bin overlaps never duplicate in any.
+    *
+    * Once-per-row emission. A preserved side that explodes has a copy of
+    * each row per bin, so "unmatched" is decided per ROW: a synthetic
+    * 8-byte id stamped BEFORE the explode (all copies share it) keys a
+    * count window of the other side's presence marker, and a row with
+    * no match in any copy emits once, from its HOME bin — the `lo` of
+    * every interval dimension, compared null-safe. Every row has exactly
+    * one copy there: home is the first element of its own bin sequence,
+    * a one-null-bound row covers just the other bound's bin, and a
+    * both-null row's one `explode_outer` copy has the null bin that
+    * `<=>` matches. The id is an 8-byte key instead of the whole row
+    * (wide text/embedding rows would otherwise be the exchange key) and
+    * always partitionable (a map-typed column would reject a full-row
+    * window, where vanilla outer joins accept it). When the other side
+    * is preserved too, its unmatched rows carry no id here: they key the
+    * window by a disjoint negative image of their own id, so the window
+    * never concentrates them into one null partition. Cost: one extra
+    * exchange per such side. `monotonically_increasing_id` is stable
+    * only within ONE evaluation: ids are stamped and consumed inside
+    * this single linear plan and must never cross a plan-reuse boundary
+    * (a self-join re-evaluating an input could re-stamp different ids —
+    * localCheckpoint the input first if this core ever feeds plan reuse).
+    *
+    * Hot-bin guard (`maxBinSize`, same contract as
+    * `Dedup.minhashNearDuplicates`'s `maxBucketSize`). A hot (key, bins…)
+    * cohort — epoch-zero default timestamps, a flash-sale hour — makes
+    * B_l × B_r candidates in one bin, the binned join's only quadratic
+    * failure mode. A non-preserved side drops every row of a cohort
+    * larger than the cap before the join ([[GuardMetrics.capCohorts]],
+    * counted under `guardTag`), bounding per-bin work by `maxBinSize²`.
+    * This trades results for survival: matches involving a dropped
+    * cohort are lost, so the cap is sized (10 000) to engage only on
+    * pathological cohorts — `10000²` pairs in ONE bin is already a data
+    * bug to investigate, not a query to answer. A preserved side never
+    * loses rows: opposite a non-preserved side it is simply not capped
+    * (its rows emit as unmatched), and with both sides preserved each
+    * side's cohort count rides the join condition, so over-cap cohorts
+    * match nothing and surface as unmatched. `maxBinSize <= 0` is the
+    * sentinel for "no guard": exact results whatever the skew, at the
+    * risk of a quadratic bin. The count windows partition by the join's
+    * own (key, bins…) keys, so their exchange (and sort) is the one the
+    * sort-merge join needs anyway — at scale the guard costs no extra
+    * shuffle. At broadcast-size inputs it does force the exchange the
+    * broadcast join would have skipped (~0.2 s on the sf0.1 bench
+    * queries); set the sentinel where inputs are known tiny AND
+    * skew-free.
+    *
+    * Names. Every internal name rides the joined row, which carries both
+    * inputs' columns, so each input is checked against the whole set;
+    * bound names must differ across the sides for the same reason.
+    */
+  private def binnedJoin(left: DataFrame, right: DataFrame,
+      keyCols: Seq[String], dims: Seq[Dim], maxBinSize: Long)(
+      op: String, joinType: String, guardTag: String = ""): DataFrame = {
+    require(dims.nonEmpty, s"$op needs at least one dimension")
     dims.foreach(d => require(d.binWidth > 0,
-      s"binWidth must be > 0 for $d"))
-    val lBounds = dims.flatMap(d => Seq(d.leftStart, d.leftEnd))
-    val rBounds = dims.flatMap(d => Seq(d.rightStart, d.rightEnd))
-    require(lBounds.toSet.intersect(rBounds.toSet).isEmpty,
+      s"binWidth must be > 0 for ${d.shown}"))
+    require(dims.flatMap(_.l.cols).toSet
+        .intersect(dims.flatMap(_.r.cols).toSet).isEmpty,
       "boundary column names must differ between the two sides")
-    dims.foreach(d => requireSameFamily(Seq((left, d.leftStart),
-      (left, d.leftEnd), (right, d.rightStart), (right, d.rightEnd)),
-      s"intervalOverlapJoinFullOuter $d"))
-    requireGuardCap(maxBinSize)
-    def src(d: OverlapDim)(c: Column): Column =
-      binSrcOf(left.schema(d.leftStart).dataType, c)
-    def binOf(d: OverlapDim)(c: Column): Column =
-      floor(src(d)(c) / d.binWidth).cast("long")
-    val lBinned = dims.zipWithIndex.foldLeft(
-        left.withColumn("_graft_lid", monotonically_increasing_id())
-          .withColumn("_graft_lm", lit(1))) { case (df, (d, i)) =>
-      df.withColumn(binName(i),
-        explode_outer(sequence(
-          binOf(d)(least(col(d.leftStart), col(d.leftEnd))),
-          binOf(d)(greatest(col(d.leftStart), col(d.leftEnd))))))
+    dims.foreach(d => requireSameFamily(
+      d.l.cols.map((left, _)) ++ d.r.cols.map((right, _)), s"$op ${d.shown}"))
+    require(maxBinSize <= 0 || maxBinSize > 1,
+      "maxBinSize must be > 1 (or <= 0 to skip the skew guard)")
+    val using = joinType == "inner"
+    val l = Side(left, dims.map(_.l), keep = !using, keyCols,
+      dims.indices.map(binName), "_graft_lid", "_graft_lm", "_graft_bnl",
+      "_graft_mcl")
+    val r = Side(
+      if (using) right
+      else keyCols.foldLeft(right)((df, k) =>
+        df.withColumnRenamed(k, rKeyName(k))),
+      dims.map(_.r), keep = joinType == "full_outer",
+      if (using) keyCols else keyCols.map(rKeyName),
+      if (using) l.bins else dims.indices.map(rBinName),
+      "_graft_rid", "_graft_m", "_graft_bnr", "_graft_mcr")
+    val internal = l.bins ++ dims.indices.map(rBinName) ++
+      keyCols.map(rKeyName) ++ l.work ++ r.work ++ GuardMetrics.cohortCols
+    Seq(left, right).foreach(Reserved.requireFreeColumns(_, internal, op,
+      "it works in _graft_ bin, key, row-id and guard columns"))
+    def hasId(s: Side, o: Side): Boolean = s.keep && (s.once || o.once)
+
+    def prepared(s: Side, o: Side): DataFrame = {
+      val canContain = s.bounds.zip(o.bounds).collect {
+        case (Interval(start, end), Point(_)) => col(end) >= col(start) }
+      val valid =
+        if (s.keep || canContain.isEmpty) s.df
+        else s.df.filter(canContain.reduce(_ && _))
+      val ided =
+        if (hasId(s, o)) valid.withColumn(s.id, monotonically_increasing_id())
+        else valid
+      val marked = if (o.once) ided.withColumn(s.mark, lit(1)) else ided
+      val binned = dims.zip(s.bounds).zip(s.bins).foldLeft(marked) {
+        case (df, ((d, Point(at)), b)) =>
+          df.withColumn(b, d.binOf(binSrc(df, at)))
+        case (df, ((d, iv: Interval), b)) =>
+          val bins = sequence(s.lo(d, iv), s.hi(d, iv))
+          df.withColumn(b, if (s.keep) explode_outer(bins) else explode(bins))
+      }
+      val cohort = (s.keys ++ s.bins).map(col)
+      if (maxBinSize <= 0 || (s.keep && !o.keep)) binned
+      else if (!s.keep)
+        GuardMetrics.capCohorts(binned, cohort, maxBinSize, guardTag)
+      else binned.withColumn(s.cohort,
+        count(lit(1)).over(Window.partitionBy(cohort: _*)))
     }
-    val rBinned = dims.zipWithIndex.foldLeft(
-        keyCols.foldLeft(right)(
-            (df, k) => df.withColumnRenamed(k, rKeyName(k)))
-          .withColumn("_graft_rid", monotonically_increasing_id())
-          .withColumn("_graft_m", lit(1))) { case (df, (d, i)) =>
-      df.withColumn(rBinName(i),
-        explode_outer(sequence(
-          binOf(d)(least(col(d.rightStart), col(d.rightEnd))),
-          binOf(d)(greatest(col(d.rightStart), col(d.rightEnd))))))
+
+    val verify = dims.zipWithIndex.flatMap { case (d, i) =>
+      val candidate =
+        if (using) Nil else Seq(col(l.bins(i)) === col(r.bins(i)))
+      candidate ++ ((d.l, d.r) match {
+        case (Point(at), Interval(start, end)) =>
+          Seq(col(at) >= col(start) && col(at) < col(end))
+        case (Interval(ls, le), Interval(rs, re)) =>
+          Seq(col(ls) < col(re), col(rs) < col(le), col(l.bins(i)) ===
+            d.binOf(greatest(binSrc(left, ls), binSrc(right, rs))))
+      })
     }
-    val guarded = maxBinSize > 0
-    val lG =
-      if (!guarded) lBinned
-      else lBinned.withColumn("_graft_bnl", count(lit(1)).over(
-        Window.partitionBy(
-          (keyCols ++ dims.indices.map(binName)).map(col): _*)))
-    val rG =
-      if (!guarded) rBinned
-      else rBinned.withColumn("_graft_bnr", count(lit(1)).over(
-        Window.partitionBy((keyCols.map(rKeyName) ++
-          dims.indices.map(rBinName)).map(col): _*)))
-    val cond = (keyCols.map(k => col(k) === col(rKeyName(k))) ++
-      dims.zipWithIndex.flatMap { case (d, i) => Seq(
-        col(binName(i)) === col(rBinName(i)),
-        col(d.leftStart) < col(d.rightEnd),
-        col(d.rightStart) < col(d.leftEnd),
-        col(binName(i)) === binOf(d)(greatest(col(d.leftStart),
-          col(d.rightStart))))
-      } ++
-      (if (!guarded) Nil
-       else Seq(col("_graft_bnl") <= maxBinSize,
-         col("_graft_bnr") <= maxBinSize))).reduce(_ && _)
-    val atHomeL = dims.zipWithIndex.map { case (d, i) =>
-      col(binName(i)) <=> binOf(d)(least(col(d.leftStart), col(d.leftEnd)))
-    }.reduce(_ && _)
-    val atHomeR = dims.zipWithIndex.map { case (d, i) =>
-      col(rBinName(i)) <=>
-        binOf(d)(least(col(d.rightStart), col(d.rightEnd)))
-    }.reduce(_ && _)
-    val wL = Window.partitionBy(
-      coalesce(col("_graft_lid"), -col("_graft_rid") - 1))
-    val wR = Window.partitionBy(
-      coalesce(col("_graft_rid"), -col("_graft_lid") - 1))
-    val out = lG.join(rG, cond, "full_outer")
-      .withColumn("_graft_mcl", count(col("_graft_m")).over(wL))
-      .withColumn("_graft_mcr", count(col("_graft_lm")).over(wR))
-      .filter(
-        (col("_graft_lm").isNotNull && col("_graft_m").isNotNull) ||
-        (col("_graft_m").isNull && col("_graft_mcl") === 0 && atHomeL) ||
-        (col("_graft_lm").isNull && col("_graft_mcr") === 0 && atHomeR))
-    keyCols.foldLeft(out)((df, k) =>
-        df.withColumn(k, coalesce(col(k), col(rKeyName(k)))))
-      .drop("_graft_lid", "_graft_rid", "_graft_lm", "_graft_m",
-        "_graft_mcl", "_graft_mcr", "_graft_bnl", "_graft_bnr")
-      .drop(dims.indices.map(binName): _*)
-      .drop(dims.indices.map(rBinName): _*)
-      .drop(keyCols.map(rKeyName): _*)
+    val joined =
+      if (using) prepared(l, r).join(prepared(r, l), keyCols ++ l.bins)
+        .filter(verify.reduce(_ && _))
+      else {
+        val guard =
+          if (l.keep && r.keep && maxBinSize > 0)
+            Seq(l, r).map(s => col(s.cohort) <= maxBinSize)
+          else Nil
+        prepared(l, r).join(prepared(r, l),
+          (keyCols.zip(r.keys).map { case (k, rk) => col(k) === col(rk) } ++
+            verify ++ guard).reduce(_ && _), joinType)
+      }
+
+    val once = Seq((l, r), (r, l)).filter(_._1.once)
+    val emitted =
+      if (once.isEmpty) joined
+      else once.foldLeft(joined) { case (df, (s, o)) =>
+        val rowKey =
+          if (hasId(o, s)) coalesce(col(s.id), -col(o.id) - 1) else col(s.id)
+        df.withColumn(s.matches,
+          count(col(o.mark)).over(Window.partitionBy(rowKey)))
+      }.filter(once.map { case (s, o) =>
+        val atHome = dims.zip(s.bounds).zip(s.bins).collect {
+          case ((d, iv: Interval), b) => col(b) <=> s.lo(d, iv) }
+        col(o.mark).isNotNull ||
+          (col(s.matches) === 0 && atHome.reduce(_ && _))
+      }.reduce(_ && _))
+    val keyed =
+      if (!r.keep) emitted
+      else keyCols.zip(r.keys).foldLeft(emitted) { case (df, (k, rk)) =>
+        df.withColumn(k, coalesce(col(k), col(rk))) }
+    keyed.drop(internal: _*)
   }
 }

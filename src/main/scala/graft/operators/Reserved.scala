@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
   * synthesizes internal or output columns on (or joined against) the
   * caller's frame — consolidating what [[QualityModel.score]],
   * `Dedup.lineDedupGuards`, and `Splits.exactTopQuota` each hand-rolled
-  * (round-18 advice: three slightly different lists, two corrective
-  * commits). Two distinct failure shapes, two checks:
+  * as three slightly different lists. Two distinct failure shapes, two
+  * checks:
   *
   *  - [[requireFreeColumns]] — the CALLER'S FRAME already carries a
   *    name the operator appends (`withColumn` would silently clobber

@@ -358,9 +358,9 @@ object Similarity {
     // (an unpartitioned WindowExec warns and a constant partition key is
     // constant-folded away) — sort the single partition and use the
     // in-partition row offset. coalesce(1), not repartition(1): the
-    // global limit already lands on one partition, so the old
-    // repartition planned a SinglePartition Exchange stage for a no-op
-    // (r21); coalesce keeps the single-partition guarantee exchange-free.
+    // global limit already lands on one partition, so a repartition
+    // would plan a SinglePartition Exchange stage for a no-op; coalesce
+    // keeps the single-partition guarantee exchange-free.
     .coalesce(1).sortWithinPartitions(col(key))
     .withColumn("_cid", (monotonically_increasing_id() + 1).cast("int"))
     .select("_cid", "_cv")
@@ -579,7 +579,7 @@ object Similarity {
     * Downstream joins on `_cid` pay their own exchange either way (or
     * broadcast the probe side and pay none).
     *
-    * Measured design note (r21): a LAZY one-row-broadcast variant (the
+    * Measured design note: a LAZY one-row-broadcast variant (the
     * centroid matrix riding into the kernel as array columns) avoided
     * this method's eager collect but benched ~2× SLOWER end to end —
     * the downstream join on `_cid` pushes `isnotnull(kernel(...))` into

@@ -360,7 +360,7 @@ object Splits {
     if (2.0 * expectedSliver > totalRows)
       // degenerate: most rows would survive the pre-filter anyway —
       // run the direct per-domain window (one corpus-sized exchange,
-      // nothing pinned), the pre-round-18 plan, still exact
+      // nothing pinned), still exact
       return joined.withColumn("_rk", row_number().over(w))
         .filter(col("_rk") <= col("_quota"))
         .drop(internal: _*)

@@ -757,8 +757,7 @@ object TextOps {
     */
   private def ngramCtxPairs(text: String, n: Int): Array[(Long, Long)] = {
     if (text == null) return Array.empty
-    val tk = text.toLowerCase(java.util.Locale.ROOT)
-      .split("\\s+").filter(_.nonEmpty)
+    val tk = Dedup.Kernels.tokens(text)
     if (tk.length < n) return Array.empty
     val out = new Array[(Long, Long)](tk.length - n + 1)
     var i = 0
@@ -829,7 +828,7 @@ object TextOps {
           "lmScoreRelational (the join-based form, nothing collects), " +
           "or raise maxTypes if the driver heap genuinely affords it")
     val vocab = guardAndVocab.getLong(2)
-    // ONE collect for both count tables (r21): gram and context counts
+    // ONE collect for both count tables: gram and context counts
     // share a kind-tagged union aggregation — identical per-kind counts
     // to the two separate groupBys, the same total shuffle bytes, one
     // job instead of two. Rows arrive (_side, _k)-sorted, so the two

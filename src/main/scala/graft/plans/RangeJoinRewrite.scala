@@ -120,9 +120,9 @@ import org.apache.spark.sql.types._
   * bin). Types whose non-preserved side would have to explode (LEFT
   * OUTER with the point on the right, FULL OUTER, and every outer
   * overlap) are left alone — exploding a preserved side duplicates its
-  * unmatched rows, and deduplicating them back needs the count-window
-  * machinery of `Joins.intervalOverlapJoinLeftOuter`, a cost a silent
-  * rule should not impose.
+  * unmatched rows, and deduplicating them back needs the once-per-row
+  * count-window emission of the operators' binned-join core
+  * (`Joins.binnedJoin`), a cost a silent rule should not impose.
   *
   * Guards: deterministic numeric bounds, and the
   * containment form filters inverted intervals (`end >= start` — safe

@@ -939,5 +939,20 @@ class JoinsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Joins.intervalOverlapJoin(df, df, Nil, "lo", "hi", "lo", "hi", 16)
     }
+    // every other form runs the same check: a range point named like a
+    // right bound, or a shared overlap bound, fails at the call instead
+    // of as an ambiguous reference inside Spark
+    val forms: Seq[() => Any] = Seq(
+      () => Joins.rangeJoin(df, df, Nil, "lo", "lo", "hi", 16),
+      () => Joins.rangeJoinLeftOuter(df, df, Nil, "hi", "lo", "hi", 16),
+      () => Joins.rangeJoinFullOuter(df, df, Nil, "lo", "lo", "hi", 16),
+      () => Joins.intervalOverlapJoinLeftOuter(df, df, Nil,
+        "lo", "hi", "lo", "hi", 16),
+      () => Joins.intervalOverlapJoinFullOuter(df, df, Nil,
+        "lo", "hi", "lo", "hi", 16))
+    forms.foreach { form =>
+      val e = intercept[IllegalArgumentException](form())
+      assert(e.getMessage.contains("boundary column names"), e.getMessage)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Splits, TextOps}
+import graft.operators.{Dedup, Joins, Splits, TextOps}
 
 /** Pins every operator family's reserved-name contract, consolidated on
   * `Reserved.requireFreeColumns` / `requireFreeParams` (round-18 advice:
@@ -223,6 +223,47 @@ class ReservedNamesSpec extends SparkTestBase {
       docs.withColumn("_feat", lit(1)).withColumn("label", lit(1)),
       "text", "label"))
     assert(m6.contains("_feat"), m6)
+  }
+
+  test("binned-join family: the _graft_ bin, key, row-id, marker and " +
+      "guard names are frame-reserved on both inputs of every form; " +
+      "other _columns pass") {
+    val pts = Seq(("a", 5L, 1L)).toDF("k", "at", "pid")
+    val ivs = Seq(("a", 0L, 10L, 10L)).toDF("k", "lo", "hi", "iid")
+    val l = Seq(("a", 0L, 30L, 1L)).toDF("k", "l_lo", "l_hi", "lid")
+    val r = Seq(("a", 20L, 80L, 10L)).toDF("k", "r_lo", "r_hi", "rid")
+    val m1 = loud(Joins.rangeJoin(pts.withColumn("_graft_bin", lit(1L)),
+      ivs, Seq("k"), "at", "lo", "hi", binWidth = 16))
+    assert(m1.contains("_graft_bin") && m1.contains("rangeJoin"), m1)
+    val m2 = loud(Joins.rangeJoinLeftOuter(pts,
+      ivs.withColumn("_graft_rk_k", lit("a")), Seq("k"), "at", "lo", "hi",
+      binWidth = 16))
+    assert(m2.contains("_graft_rk_k"), m2)
+    val m3 = loud(Joins.rangeJoinFullOuter(pts,
+      ivs.withColumn("_graft_bn", lit(1L)), Seq("k"), "at", "lo", "hi",
+      binWidth = 16))
+    assert(m3.contains("_graft_bn"), m3)
+    val m4 = loud(Joins.intervalOverlapJoin(l,
+      r.withColumn("_graft_bin_r", lit(1L)), Seq("k"), "l_lo", "l_hi",
+      "r_lo", "r_hi", binWidth = 64))
+    assert(m4.contains("_graft_bin_r"), m4)
+    val m5 = loud(Joins.intervalOverlapJoinLeftOuter(
+      l.withColumn("_graft_lid", lit(1L)), r, Seq("k"), "l_lo", "l_hi",
+      "r_lo", "r_hi", binWidth = 64))
+    assert(m5.contains("_graft_lid") &&
+      m5.contains("intervalOverlapJoinLeftOuter"), m5)
+    val m6 = loud(Joins.intervalOverlapJoinFullOuter(l,
+      r.withColumn("_graft_m", lit(1)), Seq("k"), "l_lo", "l_hi",
+      "r_lo", "r_hi", binWidth = 64))
+    assert(m6.contains("_graft_m"), m6)
+    // negative: unreserved underscore columns ride through untouched
+    val ok = Joins.rangeJoinFullOuter(pts.withColumn("_mine", lit(7)),
+      ivs.withColumn("_bin", lit(8)), Seq("k"), "at", "lo", "hi",
+      binWidth = 16)
+    assert(ok.columns.toSeq ==
+      Seq("k", "at", "pid", "_mine", "lo", "hi", "iid", "_bin"))
+    assert(ok.select("_mine", "_bin").as[(Int, Int)].collect().toSeq ==
+      Seq((7, 8)))
   }
 
   test("index/split family: the appended column must be free on the " +
