@@ -196,11 +196,11 @@ object Bench {
     // The one-line JSON is printed AFTER spark.stop() so it is the forked
     // JVM's final output — nothing from Spark's shutdown (stderr WARNs)
     // can land between it and the end of the driver's log capture. sbt's
-    // own logger used to prefix it "[info] " (the driver recorded
-    // parsed:null from r17 through r21 because of that); build.sbt now
+    // own logger used to prefix it "[info] ", which broke the line's
+    // parse; build.sbt now
     // forks run with `outputStrategy := StdoutOutput` so this line
     // reaches stdout BARE. Same JSON, same methodology — output-path fix
-    // only (VERDICT r21 item 2). A failing stop must not lose the line:
+    // only. A failing stop must not lose the line:
     // it is reported on stderr and the line still prints.
     try spark.stop()
     catch {

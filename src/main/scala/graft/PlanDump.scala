@@ -29,7 +29,7 @@ object PlanDump {
             // drive THIS DataFrame's own QueryExecution: df.count() would
             // plan a NEW aggregate query, leaving df's adaptive plan
             // unexecuted (isFinalPlan=false, no stage reuse visible —
-            // the r21 dumps had that flaw). toRdd executes the actual
+            // earlier dumps had that flaw). toRdd executes the actual
             // AdaptiveSparkPlanExec, so the print below is the real
             // final plan with ShuffleQueryStage / reuse nodes.
             df.queryExecution.toRdd.count()

@@ -13,6 +13,25 @@ object GraftSession {
 
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  private val ExtensionsKey = "spark.sql.extensions"
+
+  /** Why a session whose SparkContext was started with `extensions` as
+    * its `spark.sql.extensions` value lacks the engine's SQL surface, or
+    * None when the value lists [[graft.GraftExtensions]]. */
+  private[graft] def surfaceError(
+      extensions: Option[String]): Option[String] = {
+    val ext = classOf[graft.GraftExtensions].getName
+    if (extensions.exists(_.split(',').map(_.trim).contains(ext))) None
+    else Some(s"GraftSession.get found a running SparkSession started " +
+      s"without $ExtensionsKey=$ext (${extensions.getOrElse("unset")}); " +
+      "the setting is static, so the graft_* SQL functions and the " +
+      "RANGE_BIN hint cannot be added to it. Stop that session " +
+      "(spark.stop()) before GraftSession.get, or start it with " +
+      s"--conf $ExtensionsKey=$ext. On a session that cannot be " +
+      "restarted, GraftExtensions.registerAll(spark) adds the functions " +
+      "and the late range-join rule, but not the RANGE_BIN hint.")
+  }
+
   def builder(appName: String): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -21,7 +40,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // engine SQL functions + plan rewrites via the standard extension
       // point — the same line a cluster deployment puts in spark-defaults
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(ExtensionsKey, classOf[graft.GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       // the testdata files (all three SFs) and the benchmark's generated
@@ -45,8 +64,16 @@ object GraftSession {
       // to the testdata read path instead of setting it here.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
+  /** The session [[builder]] configures, or the running one — which must
+    * have been started with the engine's extensions: `getOrCreate` only
+    * applies runtime settings to a running session, and
+    * `spark.sql.extensions` is static, so a session started without it
+    * would silently lack the `graft_*` SQL functions and the `RANGE_BIN`
+    * hint. Such a session fails here, with the remedy. */
   def get(appName: String): SparkSession = {
     val spark = builder(appName).getOrCreate()
+    surfaceError(spark.sparkContext.getConf.getOption(ExtensionsKey))
+      .foreach(m => throw new IllegalStateException(m))
     spark.sparkContext.setLogLevel("WARN")
     // the extensions conf above injects RangeJoinRewrite into the
     // operator-optimization batch, which runs BEFORE RewriteSubquery turns

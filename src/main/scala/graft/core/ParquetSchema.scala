@@ -48,7 +48,7 @@ object ParquetSchema {
       new ParquetToSparkSchemaConverter(state.conf))
   }
 
-  private def isDataFile(s: FileStatus): Boolean = {
+  private[core] def isDataFile(s: FileStatus): Boolean = {
     val name = s.getPath.getName
     s.isFile && !name.startsWith("_") && !name.startsWith(".")
   }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.DatasetShim
+
+import graft.core.ParquetSchema
 
 /** The shared bucketed-store persistence protocol behind
   * [[Dedup.saveBucketedDigestStore]] and
@@ -54,7 +57,9 @@ private[operators] object BucketedStore {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           .trim.toInt
         finally in.close()
-      val ddl = spark.read.parquet(path).schema.toDDL
+      // the first file's footer, every field nullable as a file relation
+      // reads it: the inferred schema, with no inference job
+      val ddl = DatasetShim.asNullable(ParquetSchema(spark, path)).toDDL
       val colList = bucketCols.mkString(", ")
       spark.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
         s"CLUSTERED BY ($colList) SORTED BY ($colList) " +

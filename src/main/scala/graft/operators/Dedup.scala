@@ -1655,7 +1655,7 @@ object Dedup {
         p
       }
     // symmetric edge list, computed once and reused every round — EAGER
-    // deliberately (r22, measured): a lazy pin here would fold the two
+    // deliberately (measured): a lazy pin here would fold the two
     // materialization jobs into round 1's convergence count, but the
     // edge/seed relations each feed TWO independent downstream shuffle
     // stages, and un-materialized checkpoint partitions race — the
@@ -1665,7 +1665,7 @@ object Dedup {
     // +0.05–0.18 s vs eager at sf0.1); two small eager jobs are cheaper
     // than one duplicated pair pass. (The per-ROUND count below is
     // already the round's only action — the convergence check rides the
-    // materializing job, the r21 count-fusion shape.)
+    // materializing job, the count-fusion shape.)
     val edges = pin(pairs
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))

@@ -455,7 +455,7 @@ object Similarity {
       }: java.lang.Integer)
       // component-wise mean: explode to (cid, pos, x), avg — ONE
       // exchange, carrying nlist × dim rows. The per-cid array assembly
-      // happens on the driver over those same collected rows (r21: the
+      // happens on the driver over those same collected rows (the
       // former second groupBy + array_sort(collect_list) aggregation
       // re-shuffled the nlist × dim relation just to build arrays the
       // collect was about to materialize anyway — same values, one
@@ -539,7 +539,7 @@ object Similarity {
     // dim doubles — driver-bounded): it has two consumers — the probe
     // side's broadcast and the assignment kernel's collect — and without
     // this the sampled-centroid subtree (a corpus scan + top-nlist) ran
-    // once per consumer (r21; the Lloyd path was already local). Every
+    // once per consumer (the Lloyd path was already local). Every
     // downstream read — probeLists' broadcast, assignTo's collect,
     // saveIvfIndex's write — now starts from in-memory rows.
     val spark = corpus.sparkSession
@@ -564,8 +564,8 @@ object Similarity {
     IvfIndex(centroids, assignToRows(centRows, corpus, embCol, key))
   }
 
-  /** Nearest-centroid assignment of `docs` — MAP-ONLY over the corpus
-    * (r21 optimization): the centroids are collected to the driver
+  /** Nearest-centroid assignment of `docs` — MAP-ONLY over the corpus:
+    * the centroids are collected to the driver
     * (nlist × dim doubles, the same bounded-collect class as
     * [[kmeansCentroids]]'s Lloyd loop — [[buildIvfIndex]] hands every
     * consumer a LocalRelation, so the collect is a local read there) and
@@ -609,8 +609,8 @@ object Similarity {
   /** The (cid, vector) rows [[assignToRows]] consumes, in ascending-cid
     * order (the kernel's tie/null-dot rules depend on that order). One
     * bounded collect job; [[buildIvfIndex]] converts its own collected
-    * rows instead of paying this job a second time (r22 — the build path
-    * used to collect the LocalRelation it had just built). */
+    * rows instead of paying this job a second time (the build path used
+    * to collect the LocalRelation it had just built). */
   private[graft] def collectCentroidRows(
       centroids: DataFrame): Array[(Int, Seq[java.lang.Double])] =
     centroids
@@ -775,7 +775,7 @@ object Similarity {
     * [[assignmentDrift]] against the build-time row and rebuild with
     * fresh [[kmeansCentroids]] when it climbs.
     *
-    * CONTRACT (r21 assignTo redesign): assignment emits one row PER
+    * CONTRACT: assignment emits one row PER
     * INPUT ROW — duplicate keys in `newDocs` propagate into the lists
     * instead of being collapsed (the old groupBy argmin masked such
     * contract violations). Keys must be globally unique across batches,
@@ -854,7 +854,7 @@ object Similarity {
     val probes = probeLists(index.centroids, queries, embCol, key, nprobe)
     // one bounded job yields BOTH the probed list ids for partition
     // pruning AND the probe-row count for the broadcast-small guard —
-    // enforcing the contract costs no extra action here (r22; the
+    // enforcing the contract costs no extra action here (the
     // distinct() it replaces collected the same relation without the
     // counts). |probes| = |queries| × nprobe, each row carrying a query
     // embedding: past a few million rows the scoreAndRank broadcast
@@ -893,7 +893,8 @@ object Similarity {
     * exchange: with the map-only [[assignTo]] the whole corpus path is
     * scan → assign → broadcast-join → partial top-k (WindowGroupLimit
     * prunes to ≤ k rows per query per partition before the only, tiny,
-    * query-keyed exchange). Before r21 this joined sort-merge: two
+    * query-keyed exchange). Before the map-only assignment this joined
+    * sort-merge: two
     * corpus-sized exchanges per search.
     */
   private def scoreAndRank(probes: DataFrame, assigned: DataFrame,

@@ -52,7 +52,7 @@ object Splits {
     * need both — [[testDevSplit]] / [[kfold]] / [[shardAssign]], whose
     * cut/shard formulas take n — previously ran a SEPARATE `df.count()`
     * job with its own source scan before the sort; this fuses the two
-    * passes (r21, guide §1.2: don't compute the same thing twice).
+    * passes, so the same thing is not computed twice.
     */
   def withGlobalIndexCounted(df: DataFrame, sortCols: Seq[Column],
       idxCol: String = "_idx", eager: Boolean = false): (DataFrame, Long) = {

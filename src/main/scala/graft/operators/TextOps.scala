@@ -801,8 +801,8 @@ object TextOps {
       .select(explode(pairUdf(col(textCol))).as("_p"))
       .select(col("_p._1").as("_g"), col("_p._2").as("_c"))
       .localCheckpoint(false) // the aggregations below: shingle once
-    // ONE guard + vocabulary job (r21, guide §1.2 — the vocabulary used
-    // to be its own full reference re-scan): the HLL size estimate over
+    // ONE guard + vocabulary job (the vocabulary used to be its own
+    // full reference re-scan): the HLL size estimate over
     // the (lazily checkpointed) pairs and the exact distinct-token count
     // ride the same aggregation via a kind-tagged union — conditional
     // aggregates skip the other kind's null rows. Type-sized partials

@@ -1836,7 +1836,7 @@ object PipelineQueries {
       // treeAggregate jobs over it, and each source partition adds a
       // task to every iteration job with zero parallelism benefit at
       // this size — coalesce to one partition so the iteration jobs are
-      // single-task (r22; a query-local choice like the bounded slices
+      // single-task (a query-local choice like the bounded slices
       // elsewhere, not an operator default: real training sets scale)
       val clf = QualityModel.train(pos.unionByName(neg).coalesce(1), "text",
         "label", numFeatures = 1 << 14, maxIter = 20)

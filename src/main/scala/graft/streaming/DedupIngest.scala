@@ -278,14 +278,18 @@ object DedupIngest {
         else {
           val exactStore = loadExactStore(spark, storeRoot, masked,
             textCol, key, below = batchId)
-          val (exactKept, freshSigs, _) =
-            Dedup.dropExactDuplicatesIncrementalDetailed(
-              masked, exactStore, Seq(textCol), key)
-          val ek = exactKept.localCheckpoint(false)
-          // the fresh signatures ARE the delta — writing them directly
-          // avoids digesting the batch a second time
-          VersionedStore.writeDelta(freshSigs, storeRoot, exact, batchId)
-          ek
+          // the operator's fresh signatures (at most one per batch row),
+          // collected in one execution: they ARE the delta, written from
+          // the driver, and their keys are the kept set — so neither the
+          // delta write nor the kept rows re-run the store hit join
+          val freshSigs = Dedup.dropExactDuplicatesIncrementalDetailed(
+            masked, exactStore, Seq(textCol), key)._2
+          val fresh = freshSigs.collect()
+          VersionedStore.writeDelta(spark, freshSigs.schema, fresh.toSeq,
+            storeRoot, exact, batchId)
+          // the semi-join on the fresh keys as an IN-set filter (the
+          // near-dup drop set's shape below); a null key never matches
+          masked.filter(col(key).isInCollection(fresh.map(_.get(0)).toSeq))
         }
       val sigStore = loadSignatureStore(spark, storeRoot, batch, textCol,
         key, below = batchId)
@@ -377,9 +381,10 @@ object DedupIngest {
     * [[enforceKeyOrderGuard]]) — a violated contract would not error,
     * it would silently corrupt keep-first semantics and cluster
     * labels; pass `enforceKeyOrder = false` only when the upstream key
-    * assignment is trusted and the two tiny per-batch aggregates
-    * matter — doing so also PERMANENTLY disables tombstone retirement
-    * for this store (deletes still apply; see
+    * assignment is trusted and the per-batch driver read of the
+    * committed ranges matters (the batch's one range aggregate runs
+    * either way, for its sidecar) — doing so also PERMANENTLY disables
+    * tombstone retirement for this store (deletes still apply; see
     * [[VersionedStore.markUnguarded]]). The minhash knobs mirror
     * [[Dedup.minhashNearDuplicates]].
     *

@@ -1,11 +1,14 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.core.ParquetSchema
+import graft.core.{LocalParquet, ParquetSchema}
 
 /** The versioned-delta store layout the three streaming ingest loops
   * ride ([[DedupIngest]] for text near-dup, [[SimilarityIngest]] for
@@ -148,7 +151,10 @@ private[streaming] object VersionedStore {
   }
 
   def dirs(root: String, family: String, vs: Seq[Long]): Seq[String] =
-    vs.map(v => s"$root/$family/v=$v")
+    dirs(s"$root/$family", vs)
+
+  def dirs(famDir: String, vs: Seq[Long]): Seq[String] =
+    vs.map(v => s"$famDir/v=$v")
 
   /** The live relation of `family` from its committed deltas below
     * `below`, tombstones applied when the family is keyed; `empty` when
@@ -235,24 +241,36 @@ private[streaming] object VersionedStore {
   final case class BatchOutput(delta: DataFrame, kept: DataFrame,
       afterDelta: () => Unit = () => ())
 
+  /** [[writeDelta]] for rows already on the driver: written there, as one
+    * file, with no Spark job. The family must not be partitioned. */
+  def writeDelta(spark: SparkSession, schema: StructType, rows: Seq[Row],
+      storeRoot: String, family: Family, batchId: Long): Unit = {
+    require(family.partitionBy.isEmpty,
+      s"${family.name} is partitioned; write it with a DataFrame")
+    LocalParquet.write(spark, s"$storeRoot/${family.name}/v=$batchId",
+      schema, rows)
+  }
+
   /** One micro-batch of an ingest, in the write order every ingest
-    * shares: the key-order guard on the `guarded` family (or, with
-    * `enforceKeyOrder = false`, the [[markUnguarded]] latch — deletes
-    * still apply, retirement stops) before any work; then `body`; the
-    * guarded family's delta; its `_keyrange` sidecar AFTER the data
-    * commit (a crash between the two leaves a committed version the
-    * guard merely skips); the body's other writes; and the kept rows
-    * last, in `keptDir/ingest_batch=<batchId>`. */
+    * shares: the batch's key range, aggregated once; the key-order guard
+    * on the `guarded` family (or, with `enforceKeyOrder = false`, the
+    * [[markUnguarded]] latch — deletes still apply, retirement stops)
+    * before any work; then `body`; the guarded family's delta; its
+    * `_keyrange` sidecar, from the same range, AFTER the data commit (a
+    * crash between the two leaves a committed version the guard merely
+    * skips); the body's other writes; and the kept rows last, in
+    * `keptDir/ingest_batch=<batchId>`. */
   def runBatch(batch: DataFrame, batchId: Long, storeRoot: String,
       keptDir: String, guarded: Family, key: String,
       enforceKeyOrder: Boolean)(body: => BatchOutput): Unit = {
+    val spark = batch.sparkSession
     val famDir = s"$storeRoot/${guarded.name}"
-    if (enforceKeyOrder)
-      enforceKeyOrderGuard(batch, batchId, famDir, key)
-    else markUnguarded(batch.sparkSession, storeRoot)
+    val range = KeyRange.of(batch, key)
+    if (enforceKeyOrder) checkKeyOrder(spark, range, batchId, famDir)
+    else markUnguarded(spark, storeRoot)
     val out = body
     writeDelta(out.delta, storeRoot, guarded, batchId)
-    writeKeyRange(batch, key, s"$famDir/v=$batchId")
+    writeKeyRange(spark, range, s"$famDir/v=$batchId")
     out.afterDelta()
     out.kept.write.mode("overwrite")
       .parquet(s"$keptDir/ingest_batch=$batchId")
@@ -278,22 +296,76 @@ private[streaming] object VersionedStore {
       .start()
   }
 
+  /** A key range held on the driver: one `(minKey, maxKey)` row of the
+    * `_keyrange` sidecar's schema (both nullable, of the key type). */
+  private[streaming] final case class KeyRange(schema: StructType,
+      row: Row) {
+    def keyType: DataType = schema.head.dataType
+    def min: Any = row.get(0)
+    def max: Any = row.get(1)
+  }
+
+  private[streaming] object KeyRange {
+    /** `batch`'s range of `key`, aggregated in one Spark action. */
+    def of(batch: DataFrame, key: String): KeyRange = {
+      val agg = batch.agg(min(col(key)).as("minKey"),
+        max(col(key)).as("maxKey"))
+      KeyRange(agg.schema, agg.collect().head)
+    }
+  }
+
   /** Write the key-order guard's one-row range sidecar for a just-
     * committed version (underscore-prefixed — invisible to the
     * version's data readers). */
   def writeKeyRange(batch: DataFrame, key: String,
       versionDir: String): Unit =
-    batch.agg(min(col(key)).as("minKey"), max(col(key)).as("maxKey"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$versionDir/_keyrange")
+    writeKeyRange(batch.sparkSession, KeyRange.of(batch, key), versionDir)
 
-  /** The `_keyrange` sidecars of `rangeDirs` (non-empty) as one frame.
-    * The engine writes every sidecar of a family with one schema, so the
-    * first one's footer stands for all of them and no inference job runs. */
-  private def readKeyRanges(spark: SparkSession,
-      rangeDirs: Seq[String]): DataFrame =
-    spark.read.schema(ParquetSchema(spark, rangeDirs.head))
-      .parquet(rangeDirs: _*)
+  /** [[writeKeyRange]] from a range already on the driver: written there,
+    * with no Spark job. */
+  private[streaming] def writeKeyRange(spark: SparkSession, range: KeyRange,
+      versionDir: String): Unit =
+    LocalParquet.write(spark, s"$versionDir/_keyrange", range.schema,
+      Seq(range.row))
+
+  /** The span of the committed `_keyrange` sidecars of `versionDirs`: the
+    * least `minKey` and the greatest `maxKey` under Spark's ordering of the
+    * key type (UTF-8 byte order for strings), nulls ignored as `min` and
+    * `max` ignore them. None when no version carries a committed sidecar
+    * (versions written before the guard existed carry none). The sidecars
+    * are read on the driver, every one bound to the first one's footer
+    * schema (the engine writes a family's sidecars with one), so no Spark
+    * job runs; the sidecars are re-read on every call, so nothing goes
+    * stale across restarts, compactions and deletes. */
+  private[streaming] def committedKeyRange(spark: SparkSession,
+      versionDirs: Seq[String]): Option[KeyRange] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sidecars = versionDirs.map(d => new Path(d, "_keyrange"))
+      .filter(d => d.getFileSystem(conf).exists(new Path(d, "_SUCCESS")))
+      .map(_.toString)
+    sidecars.headOption.map { first =>
+      val schema = ParquetSchema(spark, first)
+      val rows = sidecars.flatMap(LocalParquet.read(spark, _, schema))
+      val kt = schema.head.dataType
+      val ord = PhysicalDataType.ordering(kt)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(kt)
+      def extreme(i: Int, better: (Any, Any) => Boolean): Any =
+        rows.map(_.get(i)).filter(_ != null)
+          .reduceOption((a, b) =>
+            if (better(toCatalyst(b), toCatalyst(a))) b else a)
+          .orNull
+      KeyRange(schema, Row(extreme(0, ord.lt), extreme(1, ord.gt)))
+    }
+  }
+
+  /** The rows of a one-row local relation of `fields` holding `values`
+    * that satisfy `pred`: Spark's comparison semantics (type coercion,
+    * null propagation, the key type's ordering), evaluated by the
+    * optimizer on the driver, with no Spark job. */
+  private def localFilter(spark: SparkSession, fields: Seq[StructField],
+      values: Seq[Any], pred: Column): Array[Row] =
+    spark.createDataFrame(java.util.List.of(Row(values: _*)),
+      StructType(fields)).filter(pred).collect()
 
   /** The store-level marker recording that SOME batch ever committed
     * with the key-order guard disabled (`enforceKeyOrder = false`) —
@@ -363,25 +435,27 @@ private[streaming] object VersionedStore {
     * min/max key; a new batch's min key must exceed the max over all
     * committed ranges, enforcing the monotonically-increasing-unique-key
     * contract the whole incremental family rides on WITHOUT ever
-    * scanning the store (metadata-sized: one tiny file per version, two
-    * one-row aggregates). Versions written before the guard existed
-    * carry no range and are skipped — best-effort for pre-existing
-    * stores. A null comparison (empty batch, or an all-null range)
-    * skips the check, mirroring SQL predicate semantics. */
+    * scanning the store (metadata-sized: one tiny file per version, read
+    * on the driver, and one aggregate of the batch). Versions written
+    * before the guard existed carry no range and are skipped —
+    * best-effort for pre-existing stores. A null comparison (empty
+    * batch, or an all-null range) skips the check, mirroring SQL
+    * predicate semantics. */
   def enforceKeyOrderGuard(batch: DataFrame, batchId: Long,
-      famDir: String, key: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(famDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rangeDirs = committedVersions(spark, famDir, batchId)
-      .map(v => s"$famDir/v=$v/_keyrange")
-      .filter(d => fs.exists(new Path(d, "_SUCCESS")))
-    if (rangeDirs.nonEmpty) {
-      val viol = readKeyRanges(spark, rangeDirs)
-        .agg(max(col("maxKey")).as("_storeMax"))
-        .crossJoin(batch.agg(min(col(key)).as("_batchMin")))
-        .filter(col("_batchMin") <= col("_storeMax"))
-        .collect()
+      famDir: String, key: String): Unit =
+    checkKeyOrder(batch.sparkSession, KeyRange.of(batch, key), batchId,
+      famDir)
+
+  /** [[enforceKeyOrderGuard]] for a batch range already on the driver:
+    * no Spark job runs. */
+  private[streaming] def checkKeyOrder(spark: SparkSession,
+      batch: KeyRange, batchId: Long, famDir: String): Unit = {
+    val vs = committedVersions(spark, famDir, batchId)
+    for (store <- committedKeyRange(spark, dirs(famDir, vs))) {
+      val viol = localFilter(spark,
+        Seq(StructField("_storeMax", store.keyType),
+          StructField("_batchMin", batch.keyType)),
+        Seq(store.max, batch.min), col("_batchMin") <= col("_storeMax"))
       if (viol.nonEmpty)
         throw new IllegalStateException(
           s"key-order contract violated: batch $batchId min key " +
@@ -443,19 +517,18 @@ private[streaming] object VersionedStore {
     // object store)
     val famVersions = keyedFamilies.map(f =>
       f -> committedVersions(spark, s"$storeRoot/$f", Long.MaxValue))
-    val rangeDirs = famVersions.flatMap { case (f, vs) =>
-      vs.map(vv => s"$storeRoot/$f/v=$vv/_keyrange")
-        .filter(d => fs.exists(new Path(d, "_SUCCESS")))
-    }
     // anchored ⇔ no deleted key exceeds the all-time ingested max (an
     // empty delta is trivially anchored; a null store max never vouches)
-    val anchored = rangeDirs.nonEmpty &&
-      readKeyRanges(spark, rangeDirs)
-        .agg(max(col("maxKey")).as("_storeMax"))
-        .crossJoin(keys.agg(max(col(keys.columns.head)).as("_tombMax")))
-        .filter(col("_tombMax") > col("_storeMax") ||
+    val anchored = committedKeyRange(spark, famVersions.flatMap {
+      case (f, vs) => dirs(storeRoot, f, vs) }).exists { store =>
+      val tombMax = keys.agg(max(col(keys.columns.head)).as("_tombMax"))
+      localFilter(spark,
+        Seq(StructField("_storeMax", store.keyType), tombMax.schema.head),
+        Seq(store.max, tombMax.collect().head.get(0)),
+        col("_tombMax") > col("_storeMax") ||
           (col("_storeMax").isNull && col("_tombMax").isNotNull))
         .isEmpty
+    }
     val cutoff =
       if (!anchored) Long.MaxValue
       else famVersions.flatMap(_._2.lastOption).foldLeft(-1L)(math.max)
@@ -793,17 +866,10 @@ private[streaming] object VersionedStore {
           else writer).parquet(staging.toString)
       }
       // carry the key-order guard's range sidecars through the fold
-      // (union of whichever sources have one — a missing source range
+      // (the span of whichever sources have one — a missing source range
       // was unguarded anyway, and understating never false-positives)
-      val srcRanges = group
-        .map(v => s"$famDir/v=$v/_keyrange")
-        .filter(d => fs.exists(new Path(d, "_SUCCESS")))
-      if (srcRanges.nonEmpty)
-        readKeyRanges(spark, srcRanges)
-          .agg(min(col("minKey")).as("minKey"),
-            max(col("maxKey")).as("maxKey"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(staging, "_keyrange").toString)
+      committedKeyRange(spark, dirs(famDir, group))
+        .foreach(writeKeyRange(spark, _, staging.toString))
       // keyed-family fold targets record which tombstone deltas their
       // resolve applied — retirement's evidence
       tombFloor.foreach(f =>

@@ -32,6 +32,10 @@ object DatasetShim {
     requireClassic[org.apache.spark.sql.classic.Dataset[Row]](
       "Dataset", df).queryExecution.toRdd
 
+  /** `schema` with every field, nested ones included, nullable — the
+    * schema a file relation reads (`StructType.asNullable`). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
   /** Wrap an InternalRow RDD as a DataFrame without converter overhead. */
   def internalCreateDataFrame(spark: SparkSession, rdd: RDD[InternalRow],
       schema: StructType): DataFrame =

@@ -1237,4 +1237,25 @@ class DedupSpec extends SparkTestBase {
       Dedup.dedupLinesIncremental(full, full, "text", "doc_id")
     }
   }
+
+  test("a bucketed digest store re-attaches from its footer: no " +
+      "inference job, and the declared DDL equals the inferred one") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-battach")
+    val path = s"$tmp/store"
+    val store = Dedup.exactSignatures(Seq((1L, "a b"), (2L, "c d"),
+      (3L, "a b")).toDF("doc_id", "text"), Seq("text"), "doc_id")
+    Dedup.saveBucketedDigestStore(store, "graft_battach_test", path,
+      numBuckets = 2)
+    // a fresh session has no catalog entry: drop it so the re-attach
+    // runs its CREATE TABLE
+    spark.sql("DROP TABLE graft_battach_test")
+    var attached: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      attached = Dedup.bucketedDigestStore(spark, "graft_battach_test", path)
+    }
+    assert(jobs == 0, s"jobs: $jobs")
+    assert(attached.schema.toDDL == spark.read.parquet(path).schema.toDDL)
+    assert(attached.collect().toSet == store.collect().toSet)
+    spark.sql("DROP TABLE graft_battach_test")
+  }
 }

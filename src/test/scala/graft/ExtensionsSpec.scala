@@ -40,6 +40,19 @@ class ExtensionsSpec extends SparkTestBase {
     }
   }
 
+  test("GraftSession.get accepts a session started with the extensions " +
+      "and refuses one started without, naming the remedy") {
+    import graft.core.GraftSession
+    assert(GraftSession.get("graft-test") eq spark)
+    assert(GraftSession.surfaceError(
+      Some("other.Ext, graft.GraftExtensions")).isEmpty)
+    for (conf <- Seq(None, Some(""), Some("other.Ext"))) {
+      val err = GraftSession.surfaceError(conf)
+      assert(err.exists(m => m.contains("spark.stop()") &&
+        m.contains("spark.sql.extensions=graft.GraftExtensions")), err)
+    }
+  }
+
   test("GraftExtensions wires every function into a SparkSessionExtensions") {
     // construction-time path (spark.sql.extensions=graft.GraftExtensions):
     // apply() must inject without throwing for all registered functions

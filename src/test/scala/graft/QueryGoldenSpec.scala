@@ -49,10 +49,13 @@ class QueryGoldenSpec extends SparkTestBase {
 
 /** The pinned queries and the golden writer. */
 object QueryGoldens {
-  /** The rows-only queries whose candidate search runs through the banded
-    * self-join core. */
+  /** The rows-only queries: those whose candidate search runs through the
+    * banded self-join core, then the samplers, hashers, packers and
+    * scorers with no oracle. */
   val pinned = Seq("q30_minhash_neardup", "q33_lsh_neighbors",
-    "q40_simhash_pairs", "q90_image_neardup", "q94_cluster_neardup")
+    "q40_simhash_pairs", "q90_image_neardup", "q94_cluster_neardup",
+    "q19_seeded_sample", "q31_simhash", "q59_weighted_sample",
+    "q91_bpe_pack", "q95_quality_score")
   val sfs = Seq("sf0.001", "sf0.01")
   val testdata = "/root/testdata"
 

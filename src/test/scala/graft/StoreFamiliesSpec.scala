@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.sql.functions.{max, min}
+
 import graft.core.ParquetSchema
 import graft.streaming.VersionedStore.Family
 
@@ -173,8 +175,10 @@ class StoreFamiliesSpec extends graft.SparkTestBase {
     val cdir = s"$root/centroids"
     assert(bound(cdir) == spark.read.parquet(cdir).schema)
     val jobs = jobsOf(simBatch(root, kept, 1L, Seq(3L, 4L)))
-    // 22 while the tripwire inferred the committed centroids' schema
-    assert(jobs == 21, s"jobs: $jobs")
+    // 22 while the tripwire inferred the committed centroids' schema; 21
+    // while the key-order guard and the _keyrange write aggregated the
+    // batch and the committed sidecars with Spark
+    assert(jobs == 17, s"jobs: $jobs")
     assert(SimilarityIngest.loadIvfIndex(spark, root).centroids.schema ==
       spark.read.parquet(cdir).schema)
   }
@@ -193,9 +197,86 @@ class StoreFamiliesSpec extends graft.SparkTestBase {
     }
     assert(folds.map(_.family).sorted == Seq("exact", "labels", "sig"),
       s"folds: $folds")
-    // 11 (one more per fold group) while the merge inferred its schema
-    assert(jobs == 8, s"jobs: $jobs")
+    // 11 (one more per fold group) while the merge inferred its schema;
+    // 8 while the sig fold's _keyrange carry aggregated with Spark
+    assert(jobs == 6, s"jobs: $jobs")
     for (f <- folds; d = s"$root/${f.family}/v=${f.into}")
       assert(bound(d) == spark.read.parquet(d).schema, d)
+  }
+
+  test("the key-order guard reads the committed sidecars on the driver " +
+      "with no job, and rejects exactly what Spark's comparison rejects, " +
+      "in UTF-8 byte order for strings") {
+    val famDir = s"${tmp("graft-fam-range")}/sig"
+    val committed = Seq("a", "\uFF61").toDF("key") // "｡", UTF-8 EF BD A1
+    committed.coalesce(1).write.mode("overwrite").parquet(s"$famDir/v=0")
+    VersionedStore.writeKeyRange(committed, "key", s"$famDir/v=0")
+    var store = Option.empty[VersionedStore.KeyRange]
+    val readJobs = jobsOf {
+      store = VersionedStore.committedKeyRange(spark,
+        VersionedStore.dirs(famDir, Seq(0L)))
+    }
+    assert(readJobs == 0, s"jobs: $readJobs")
+    assert(store.map(r => (r.min, r.max)) == Some(("a", "\uFF61")))
+    // the guard's comparison as Spark evaluates it over the files
+    def sparkRejects(batchMin: String): Boolean =
+      spark.read.parquet(s"$famDir/v=0/_keyrange")
+        .agg(max($"maxKey").as("_storeMax"))
+        .crossJoin(Seq(batchMin).toDF("_batchMin"))
+        .filter($"_batchMin" <= $"_storeMax").collect().nonEmpty
+    // "😀" (U+1F600, UTF-8 F0 9F 98 80) follows "｡" in UTF-8 byte order
+    // but precedes it in Java's UTF-16 order
+    val emoji = "\uD83D\uDE00"
+    assert(emoji.compareTo("\uFF61") < 0 && !sparkRejects(emoji))
+    for (batchMin <- Seq(emoji, "\uFF61", "b")) {
+      val range = VersionedStore.KeyRange.of(
+        Seq(batchMin, batchMin + "z").toDF("key"), "key")
+      val verdict = scala.util.Try(jobsOf(
+        VersionedStore.checkKeyOrder(spark, range, 1L, famDir)))
+      assert(verdict.isFailure == sparkRejects(batchMin), batchMin)
+      verdict.failed.foreach(e => assert(e.getMessage.contains("key-order")))
+      verdict.foreach(jobs => assert(jobs == 0, s"jobs: $jobs"))
+    }
+    // an empty batch has a null min: the comparison is null and skips
+    VersionedStore.enforceKeyOrderGuard(Seq.empty[String].toDF("key"), 1L,
+      famDir, "key")
+  }
+
+  test("a Spark-written and a driver-written _keyrange sidecar mix in one " +
+      "store: equal footer schemas, one spanned range, the same guard") {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFooterReader
+    val famDir = s"${tmp("graft-fam-mix")}/sig"
+    val b0 = Seq(1L, 5L).toDF("key")
+    val b1 = Seq(7L, 9L).toDF("key")
+    for ((b, v) <- Seq(b0, b1).zipWithIndex)
+      b.coalesce(1).write.mode("overwrite").parquet(s"$famDir/v=$v")
+    // v=0: the sidecar as the Spark write left it; v=1: the driver's
+    b0.agg(min($"key").as("minKey"), max($"key").as("maxKey"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$famDir/v=0/_keyrange")
+    VersionedStore.writeKeyRange(b1, "key", s"$famDir/v=1")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(v: Int) = {
+      val dir = new Path(s"$famDir/v=$v/_keyrange")
+      val file = dir.getFileSystem(conf).listStatus(dir)
+        .filter(_.getPath.getName.startsWith("part-")).head
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+        ParquetMetadataConverter.NO_FILTER).getFileMetaData
+    }
+    assert(footer(0).getSchema == footer(1).getSchema)
+    assert(footer(0).getKeyValueMetaData == footer(1).getKeyValueMetaData)
+    assert(ParquetSchema(spark, s"$famDir/v=0/_keyrange") ==
+      ParquetSchema(spark, s"$famDir/v=1/_keyrange"))
+    assert(VersionedStore.committedKeyRange(spark,
+      VersionedStore.dirs(famDir, Seq(0L, 1L))).map(r => (r.min, r.max)) ==
+      Some((1L, 9L)))
+    intercept[IllegalStateException] {
+      VersionedStore.enforceKeyOrderGuard(Seq(9L).toDF("key"), 2L, famDir,
+        "key")
+    }
+    VersionedStore.enforceKeyOrderGuard(Seq(10L).toDF("key"), 2L, famDir,
+      "key")
   }
 }
