@@ -1661,7 +1661,7 @@ object Dedup {
     // stages, and un-materialized checkpoint partitions race — the
     // stages run concurrently and can each compute the O(n²) pair
     // kernel before the first result lands in the block store. The
-    // lazy variant benched consistently slower (interleaved MicroBench,
+    // lazy variant benched consistently slower (interleaved A/B runs,
     // +0.05–0.18 s vs eager at sf0.1); two small eager jobs are cheaper
     // than one duplicated pair pass. (The per-ROUND count below is
     // already the round's only action — the convergence check rides the

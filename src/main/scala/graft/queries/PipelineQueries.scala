@@ -312,11 +312,11 @@ object PipelineQueries {
 
     // --- SimHash near-dup pairing at scale (chunk banding + pigeonhole);
     //     hash-based → rows-only (planted dups guarantee rows). 64-bit
-    //     default since round 15: the pairs are now only the true
-    //     near-identical-token-set population (the 32-bit birthday
-    //     coincidences this query used to surface are gone). Bounded to a
-    //     corpus slice: this synthetic corpus draws from a tiny shared
-    //     vocabulary, so near-identical token sets are the common case —
+    //     fingerprints by default: the pairs are only the true
+    //     near-identical-token-set population, with no 32-bit birthday
+    //     coincidences. Bounded to a corpus slice: this synthetic corpus
+    //     draws from a tiny shared vocabulary, so near-identical token
+    //     sets are the common case —
     //     the full-corpus result is quadratic by construction, which says
     //     nothing about the operator's scaling on real (diverse) text.
     Query.noOracle("q40_simhash_pairs") { (s, d) =>

@@ -202,13 +202,12 @@ object DedupIngest {
       storeRoot: String, keptDir: String, textCol: String, key: String,
       numHashes: Int, bands: Int, shingleSize: Int, threshold: Double,
       seed: Long, maxBucketSize: Long,
-      enforceKeyOrder: Boolean = true,
       exactPrefilter: Boolean = false,
       spanMask: Option[SpanMask] = None,
       lineDedup: Option[LineDedup] = None,
       curate: Option[Curate] = None): Unit =
-    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, sig, key,
-        enforceKeyOrder) {
+    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, sig,
+        key) {
       val spark = batch.sparkSession
       // optional stage -2: C4/CCNet exact-line dedup against the growing
       // crawl's line history. MUST precede the span mask — the mask
@@ -314,8 +313,7 @@ object DedupIngest {
       // a batch key is dropped when its cluster's label is another key.
       // Only the delta's NEW keys can be batch keys: under the unique,
       // monotone key contract a batch never carries a key the store holds
-      // (the key-order guard enforces it; with enforceKeyOrder = false
-      // it is trusted, as `start` documents). So the drop set is the
+      // (the key-order guard enforces it). So the drop set is the
       // solve's absorbed new keys, already on the driver, and this
       // anti-join is an IN-set filter that reads no store and runs no
       // broadcast job. A null key is never dropped, as in a join.
@@ -376,16 +374,11 @@ object DedupIngest {
   /** Start the ingest query. `docs` is any streaming DataFrame carrying
     * `textCol` and a globally-unique `key` assigned monotonically
     * increasing across batches (the keep-first contract — see
-    * QUICKSTART.md). That contract is ENFORCED per batch by default
-    * via metadata-sized version key ranges (see
-    * [[enforceKeyOrderGuard]]) — a violated contract would not error,
-    * it would silently corrupt keep-first semantics and cluster
-    * labels; pass `enforceKeyOrder = false` only when the upstream key
-    * assignment is trusted and the per-batch driver read of the
-    * committed ranges matters (the batch's one range aggregate runs
-    * either way, for its sidecar) — doing so also PERMANENTLY disables
-    * tombstone retirement for this store (deletes still apply; see
-    * [[VersionedStore.markUnguarded]]). The minhash knobs mirror
+    * QUICKSTART.md). That contract is ENFORCED on every batch via
+    * metadata-sized version key ranges (see [[enforceKeyOrderGuard]]):
+    * a batch that breaks it fails before it writes anything, where it
+    * would otherwise silently corrupt keep-first semantics and cluster
+    * labels. The minhash knobs mirror
     * [[Dedup.minhashNearDuplicates]].
     *
     * @param spanMask pass `Some(SpanMask(...))` to also strip
@@ -411,7 +404,6 @@ object DedupIngest {
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       threshold: Double = 0.9, seed: Long = 42,
       maxBucketSize: Long = 10000,
-      enforceKeyOrder: Boolean = true,
       exactPrefilter: Boolean = false,
       spanMask: Option[SpanMask] = None,
       lineDedup: Option[LineDedup] = None,
@@ -423,7 +415,7 @@ object DedupIngest {
       (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, storeRoot, keptDir, textCol, key,
           numHashes, bands, shingleSize, threshold, seed, maxBucketSize,
-          enforceKeyOrder, exactPrefilter, spanMask, lineDedup, curate)
+          exactPrefilter, spanMask, lineDedup, curate)
     }
 
   /** TOMBSTONE a set of documents — the takedown/relicensing path: the

@@ -120,12 +120,11 @@ object ImageDedupIngest {
   /** One micro-batch, exposed for direct testing of idempotence. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
       storeRoot: String, keptDir: String, bytesCol: String, key: String,
-      maxDistance: Int, maxBucketSize: Long, method: String,
-      enforceKeyOrder: Boolean = true): Unit = {
+      maxDistance: Int, maxBucketSize: Long, method: String): Unit = {
     val spark = batch.sparkSession
     enforceMethodMarker(spark, storeRoot, method)
-    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, phash, key,
-        enforceKeyOrder) {
+    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, phash,
+        key) {
       val store = loadHashStore(spark, storeRoot, batch, bytesCol, key,
         below = batchId)
       // one decode+hash kernel pass: the same fingerprints feed the pair
@@ -153,21 +152,20 @@ object ImageDedupIngest {
   /** Start the ingest query. `images` is any streaming DataFrame
     * carrying a binary `bytesCol` payload column and a globally-unique
     * `key` assigned monotonically increasing across batches — the
-    * keep-first contract, ENFORCED per batch by default exactly as in
+    * keep-first contract, ENFORCED on every batch exactly as in
     * [[DedupIngest.start]]. The hamming knobs mirror
     * [[Multimodal.imageNearDuplicates]].
     */
   def start(images: DataFrame, bytesCol: String, key: String,
       storeRoot: String, keptDir: String, checkpointDir: String,
       maxDistance: Int = 3, maxBucketSize: Long = 5000,
-      method: String = "dhash",
-      enforceKeyOrder: Boolean = true): StreamingQuery =
+      method: String = "dhash"): StreamingQuery =
     VersionedStore.startIngest(images, "ImageDedupIngest.start", "images",
         Seq(bytesCol, key), "use Multimodal.imageNearDuplicates or the " +
           "incremental operators directly", checkpointDir) {
       (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, storeRoot, keptDir, bytesCol, key,
-          maxDistance, maxBucketSize, method, enforceKeyOrder)
+          maxDistance, maxBucketSize, method)
     }
 
   /** TOMBSTONE a set of images — [[DedupIngest.deleteKeys]]'s contract

@@ -227,10 +227,8 @@ object SimilarityIngest {
       storeRoot: String, keptDir: String, embCol: String, key: String,
       dim: Int, numBits: Int, threshold: Double, seed: Long,
       centroids: Option[DataFrame],
-      enforceKeyOrder: Boolean = true,
       maxBucketSize: Long = 10000): Unit =
-    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, lsh, key,
-        enforceKeyOrder) {
+    VersionedStore.runBatch(batch, batchId, storeRoot, keptDir, lsh, key) {
       val spark = batch.sparkSession
       val store = loadLshStore(spark, storeRoot, batch, embCol, key, dim,
         numBits, seed, below = batchId)
@@ -322,8 +320,8 @@ object SimilarityIngest {
   /** Start the ingest query. `docs` is any streaming DataFrame carrying
     * an `embCol` vector column (castable to `array<double>`, dimension
     * `dim`) and a globally-unique `key` assigned monotonically
-    * increasing across batches — the keep-first contract, ENFORCED per
-    * batch by default via metadata-sized version key ranges exactly as
+    * increasing across batches — the keep-first contract, ENFORCED on
+    * every batch via metadata-sized version key ranges exactly as
     * in [[DedupIngest.start]]. Pass `centroids` (e.g. a built index's
     * `centroids` relation, or `loadIvfIndex(dir).centroids`) to also
     * maintain the servable IVF index + drift log; leave it `None` for
@@ -343,7 +341,6 @@ object SimilarityIngest {
       storeRoot: String, keptDir: String, checkpointDir: String,
       numBits: Int = 16, threshold: Double = 0.95, seed: Long = 42,
       centroids: Option[DataFrame] = None,
-      enforceKeyOrder: Boolean = true,
       maxBucketSize: Long = 10000): StreamingQuery = {
     require(dim > 0, s"dim must be positive, got $dim")
     VersionedStore.startIngest(docs, "SimilarityIngest.start", "docs",
@@ -365,8 +362,7 @@ object SimilarityIngest {
           batch.sparkSession.createDataFrame(rows.asJava, schema)
         }
         processBatch(batch, batchId, storeRoot, keptDir, embCol, key,
-          dim, numBits, threshold, seed, cents,
-          enforceKeyOrder, maxBucketSize)
+          dim, numBits, threshold, seed, cents, maxBucketSize)
       }
     }
   }

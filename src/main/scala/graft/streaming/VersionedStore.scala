@@ -33,7 +33,7 @@ import graft.core.{LocalParquet, ParquetSchema}
   * and overwrites the same paths, making the batch idempotent end to
   * end.
   */
-private[streaming] object VersionedStore {
+private[graft] object VersionedStore {
 
   /** One merged group from [[compactFamily]]: the committed, adjacent
     * `versions` (all strictly below the family's max) were folded into
@@ -253,21 +253,18 @@ private[streaming] object VersionedStore {
 
   /** One micro-batch of an ingest, in the write order every ingest
     * shares: the batch's key range, aggregated once; the key-order guard
-    * on the `guarded` family (or, with `enforceKeyOrder = false`, the
-    * [[markUnguarded]] latch — deletes still apply, retirement stops)
-    * before any work; then `body`; the guarded family's delta; its
-    * `_keyrange` sidecar, from the same range, AFTER the data commit (a
-    * crash between the two leaves a committed version the guard merely
-    * skips); the body's other writes; and the kept rows last, in
-    * `keptDir/ingest_batch=<batchId>`. */
+    * on the `guarded` family before any work; then `body`; the guarded
+    * family's delta; its `_keyrange` sidecar, from the same range, AFTER
+    * the data commit (a crash between the two leaves a committed version
+    * the guard merely skips); the body's other writes; and the kept rows
+    * last, in `keptDir/ingest_batch=<batchId>`. */
   def runBatch(batch: DataFrame, batchId: Long, storeRoot: String,
-      keptDir: String, guarded: Family, key: String,
-      enforceKeyOrder: Boolean)(body: => BatchOutput): Unit = {
+      keptDir: String, guarded: Family, key: String)(
+      body: => BatchOutput): Unit = {
     val spark = batch.sparkSession
     val famDir = s"$storeRoot/${guarded.name}"
     val range = KeyRange.of(batch, key)
-    if (enforceKeyOrder) checkKeyOrder(spark, range, batchId, famDir)
-    else markUnguarded(spark, storeRoot)
+    checkKeyOrder(spark, range, batchId, famDir)
     val out = body
     writeDelta(out.delta, storeRoot, guarded, batchId)
     writeKeyRange(spark, range, s"$famDir/v=$batchId")
@@ -328,35 +325,58 @@ private[streaming] object VersionedStore {
     LocalParquet.write(spark, s"$versionDir/_keyrange", range.schema,
       Seq(range.row))
 
-  /** The span of the committed `_keyrange` sidecars of `versionDirs`: the
-    * least `minKey` and the greatest `maxKey` under Spark's ordering of the
-    * key type (UTF-8 byte order for strings), nulls ignored as `min` and
-    * `max` ignore them. None when no version carries a committed sidecar
-    * (versions written before the guard existed carry none). The sidecars
-    * are read on the driver, every one bound to the first one's footer
-    * schema (the engine writes a family's sidecars with one), so no Spark
-    * job runs; the sidecars are re-read on every call, so nothing goes
+  /** The span of the committed `_keyrange` sidecars of `versionDirs` (one
+    * store's version dirs, each family's oldest first; only the guarded
+    * family carries sidecars): the least `minKey` and the greatest
+    * `maxKey` under Spark's ordering of the key type (UTF-8 byte order for
+    * strings), nulls ignored as `min` and `max` ignore them. None when no
+    * version carries a committed sidecar (versions written before the
+    * guard existed carry none).
+    *
+    * Every batch of a store passed the key-order guard, and every fold
+    * target carries the span of its sources, so the committed ranges
+    * increase with the version: the oldest non-null range holds the least
+    * min and the newest non-null one the greatest max. Only those are read,
+    * walking in from each end, so the cost does not grow with the history.
+    * A store with the `_unguarded` marker (an older build ran it without
+    * the guard) may hold ranges in any order, and all of them are read.
+    * The sidecars are read on the driver, every one bound to the oldest
+    * one's footer schema (the engine writes a family's sidecars with one),
+    * so no Spark job runs; they are re-read on every call, so nothing goes
     * stale across restarts, compactions and deletes. */
   private[streaming] def committedKeyRange(spark: SparkSession,
-      versionDirs: Seq[String]): Option[KeyRange] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sidecars = versionDirs.map(d => new Path(d, "_keyrange"))
-      .filter(d => d.getFileSystem(conf).exists(new Path(d, "_SUCCESS")))
-      .map(_.toString)
-    sidecars.headOption.map { first =>
-      val schema = ParquetSchema(spark, first)
-      val rows = sidecars.flatMap(LocalParquet.read(spark, _, schema))
-      val kt = schema.head.dataType
-      val ord = PhysicalDataType.ordering(kt)
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(kt)
-      def extreme(i: Int, better: (Any, Any) => Boolean): Any =
-        rows.map(_.get(i)).filter(_ != null)
-          .reduceOption((a, b) =>
-            if (better(toCatalyst(b), toCatalyst(a))) b else a)
-          .orNull
-      KeyRange(schema, Row(extreme(0, ord.lt), extreme(1, ord.gt)))
+      versionDirs: Seq[String]): Option[KeyRange] =
+    versionDirs.headOption.flatMap { head =>
+      val storeRoot = new Path(head).getParent.getParent
+      val fs = storeRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def sidecars(ds: Seq[String]): Iterator[String] = ds.iterator
+        .map(d => new Path(d, "_keyrange"))
+        .filter(p => fs.exists(new Path(p, "_SUCCESS"))).map(_.toString)
+      sidecars(versionDirs).nextOption().map { first =>
+        val schema = ParquetSchema(spark, first)
+        def rows(ds: Seq[String]): Iterator[Row] =
+          sidecars(ds).flatMap(LocalParquet.read(spark, _, schema))
+        def nonNull(rs: Iterator[Row], i: Int): Iterator[Any] =
+          rs.map(_.get(i)).filter(_ != null)
+        val span =
+          if (fs.exists(new Path(storeRoot, "_unguarded"))) {
+            val all = rows(versionDirs).toList
+            val kt = schema.head.dataType
+            val ord = PhysicalDataType.ordering(kt)
+            val toCatalyst =
+              CatalystTypeConverters.createToCatalystConverter(kt)
+            def extreme(i: Int, better: (Any, Any) => Boolean): Any =
+              nonNull(all.iterator, i)
+                .reduceOption((a, b) =>
+                  if (better(toCatalyst(b), toCatalyst(a))) b else a)
+                .orNull
+            Row(extreme(0, ord.lt), extreme(1, ord.gt))
+          } else
+            Row(nonNull(rows(versionDirs), 0).nextOption().orNull,
+              nonNull(rows(versionDirs.reverse), 1).nextOption().orNull)
+        KeyRange(schema, span)
+      }
     }
-  }
 
   /** The rows of a one-row local relation of `fields` holding `values`
     * that satisfy `pred`: Spark's comparison semantics (type coercion,
@@ -367,76 +387,14 @@ private[streaming] object VersionedStore {
     spark.createDataFrame(java.util.List.of(Row(values: _*)),
       StructType(fields)).filter(pred).collect()
 
-  /** The store-level marker recording that SOME batch ever committed
-    * with the key-order guard disabled (`enforceKeyOrder = false`) —
-    * from that point the monotone-key contract is merely trusted, not
-    * enforced, and [[retireTombstones]]' version-id evidence
-    * (`v > cutoff` ⇒ cannot carry a deleted key) is no longer sound:
-    * an unguarded later batch could legitimately re-carry a deleted
-    * key, and retiring the tombstone would resurrect it. The marker is
-    * a one-way latch (never removed — guard history cannot be
-    * re-established after the fact); it only disables RETIREMENT, not
-    * tombstoning: deletes still apply via the readers' anti-join and
-    * compaction still physically removes rows and dropDuplicates the
-    * family, which then stays O(all deleted keys) instead of O(live
-    * deleted keys) — the documented price of running unguarded.
-    *
-    * The latch is written BEFORE the unguarded batch commits anything
-    * (deliberately conservative): a batch attempt that fails pre-commit
-    * — even a momentary misconfiguration of `enforceKeyOrder` — still
-    * latches retirement off permanently, because the alternative
-    * (latching after the first successful commit) leaves a crash window
-    * in which unguarded data is committed but unmarked. A transient
-    * `enforceKeyOrder = false` run is therefore irreversible for
-    * retirement; treat the knob as a store-lifetime decision.
-    *
-    * FAIL-FAST ON PRIOR RETIREMENT: retirement under the guard deletes
-    * tombstone data on the strength of the very contract this latch
-    * suspends — if this store has EVER retired a delta (the `_retired`
-    * marker [[retireTombstones]] records), an unguarded batch could
-    * re-carry a key whose tombstone is already gone, silently
-    * resurrecting a takedown with no record anywhere that it happened.
-    * That is not a storage-cost trade like the latch itself, so it
-    * fails loudly here instead: re-issue every takedown this store must
-    * honor (fresh tombstones — which, under the latch, will simply
-    * never retire), then touch `<storeRoot>/_unguarded` manually to
-    * acknowledge (a pre-existing latch short-circuits this check), and
-    * only then run unguarded. */
-  def markUnguarded(spark: SparkSession, storeRoot: String): Unit = {
-    val p = new Path(storeRoot, "_unguarded")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // already latched: nothing left to protect (retirement is off, and
-    // the _retired marker cannot appear after the latch) — skip the
-    // evidence probes on every steady-state unguarded batch
-    if (fs.exists(p)) return
-    val famDir = s"$storeRoot/tombstones"
-    // marker first (O(1)); committed empty-husk versions are the
-    // fallback evidence for the marker's own crash window (husks are
-    // produced ONLY by retirement — empty takedown deltas still carry
-    // a zero-row parquet part)
-    if (fs.exists(new Path(storeRoot, "_retired")) ||
-        committedVersions(spark, famDir, Long.MaxValue)
-          .exists(v => !hasData(fs, new Path(s"$famDir/v=$v"))))
-      throw new IllegalStateException(
-        s"store $storeRoot has retired tombstone deltas under the " +
-          "key-order guard (the _retired marker / committed empty-husk " +
-          "versions) — running with enforceKeyOrder = false now could " +
-          "silently resurrect already-deleted keys whose tombstone " +
-          "data is gone; re-issue the store's takedowns (deleteKeys) " +
-          s"and then touch $storeRoot/_unguarded manually to " +
-          "acknowledge (the latch disables further retirement, so the " +
-          "re-issued tombstones stay live), or keep the guard on")
-    fs.mkdirs(new Path(storeRoot))
-    fs.create(p, true).close()
-  }
-
   /** The micro-batch key-order guard: every committed version of the
     * guarded family carries a one-row `_keyrange` sidecar recording its
     * min/max key; a new batch's min key must exceed the max over all
     * committed ranges, enforcing the monotonically-increasing-unique-key
     * contract the whole incremental family rides on WITHOUT ever
-    * scanning the store (metadata-sized: one tiny file per version, read
-    * on the driver, and one aggregate of the batch). Versions written
+    * scanning the store (metadata-sized: the two end sidecars
+    * [[committedKeyRange]] reads on the driver, and one aggregate of the
+    * batch). Versions written
     * before the guard existed carry no range and are skipped —
     * best-effort for pre-existing stores. A null comparison (empty
     * batch, or an all-null range) skips the check, mirroring SQL
@@ -462,8 +420,7 @@ private[streaming] object VersionedStore {
             s"${viol(0).get(1)} does not exceed the store's max key " +
             s"${viol(0).get(0)} — keys must be globally unique and " +
             "monotonically increasing across batches (the keep-first " +
-            "contract; see the ingest's start doc); pass " +
-            "enforceKeyOrder = false to disable the guard")
+            "contract; see the ingest's start doc)")
     }
   }
 
@@ -601,44 +558,18 @@ private[streaming] object VersionedStore {
     * everywhere: a missing or unreadable sidecar never vouches, so
     * pre-sidecar deltas simply never retire.
     *
-    * GUARD HISTORY: the `v > cutoff` evidence rides the monotone-key
-    * contract, which is only ENFORCED while every batch runs with the
-    * key-order guard on. A store that ever committed a batch with
-    * `enforceKeyOrder = false` carries the [[markUnguarded]] latch, and
-    * this method then retires NOTHING (returns empty): an unguarded
-    * post-cutoff batch could legitimately re-carry a deleted key, so no
-    * version-id argument can prove a delete fully applied. Tombstones
-    * still apply (readers anti-join; compaction removes rows and
-    * dropDuplicates the family) — the family just never shrinks below
-    * all-deletes-ever on such stores.
+    * The `v > cutoff` evidence rides the key-order guard. A store that
+    * carries the `_unguarded` marker (an older build ran batches without
+    * the guard) retires NOTHING: a post-cutoff batch there could have
+    * re-carried a deleted key. Its tombstones still apply (readers
+    * anti-join; compaction removes rows and dropDuplicates the family).
     *
     * A retired delta is replaced by an empty committed husk (staged,
     * crash-safe) rather than deleted: the family's version counter must
     * stay monotone, because `_tombfloor` values already recorded on
     * fold targets would falsely vouch for a reused id. Husks read as
     * nothing ([[tombstones]] skips them) and fold away under the
-    * family's normal tiered compaction. Any retirement also records a
-    * store-level `_retired` marker (one-way, written BEFORE the husks
-    * commit so no crash schedule can husk data unmarked; pre-existing
-    * unmarked husks re-record it on the next pass), which
-    * [[markUnguarded]] checks: once tombstone data has been deleted on
-    * the guard's evidence, switching the store to
-    * `enforceKeyOrder = false` would forfeit those past takedowns, so
-    * the switch fails loudly instead.
-    *
-    * MIGRATION EDGES (stores from older builds): the `_unguarded`
-    * latch is written at batch time, so a store that ran unguarded
-    * batches on a build PREDATING the latch carries no marker — its
-    * unguarded versions do carry `_keyrange` sidecars (written
-    * unconditionally), which is indistinguishable from guarded
-    * history. Before the first compaction of such a store, touch
-    * `<storeRoot>/_unguarded` manually; otherwise this method would
-    * retire on evidence the store's actual history never established.
-    * Symmetrically, a store that RETIRED deltas on a build predating
-    * the `_retired` marker AND whose husks have since folded away
-    * carries no retirement evidence — touch `<storeRoot>/_retired`
-    * manually before ever running it unguarded (husks still on disk
-    * self-heal the marker here). Returns the retired ids. */
+    * family's normal tiered compaction. Returns the retired ids. */
   def retireTombstones(spark: SparkSession, storeRoot: String,
       keyedFamilies: Seq[String]): Seq[Long] = {
     val famDir = s"$storeRoot/tombstones"
@@ -655,14 +586,8 @@ private[streaming] object VersionedStore {
             new Path(s"$storeRoot/$f/v=$v/_tombfloor"))
         }
       }
-      // hasData is a recursive listing (one metadata round-trip per
-      // probe on object stores) — materialize it once per tombstone
-      // version; both the retired filter and anyHusk below derive from
-      // the same map
-      val dataByV = tombVs.map(vt =>
-        vt -> hasData(fs, new Path(s"$famDir/v=$vt"))).toMap
       val retired = tombVs.filter { vt =>
-        dataByV(vt) &&
+        hasData(fs, new Path(s"$famDir/v=$vt")) &&
           readLongSidecar(fs,
             new Path(s"$famDir/v=$vt/_cutoff")).exists(cut =>
             cut != Long.MaxValue &&
@@ -670,23 +595,6 @@ private[streaming] object VersionedStore {
                 floor.exists(_ > vt) || (v > cut && floor.isEmpty)
               }))
       }
-      // the one-way retirement record — markUnguarded refuses to
-      // suspend the guard once it exists — rides BEFORE the husks
-      // commit (marker-first, the same conservative ordering the
-      // unguarded latch itself uses): a crash between marker and husks
-      // leaves an over-cautious marker on a store that lost nothing,
-      // which is safe, whereas the reverse order would lose the marker
-      // in a window NO re-run can heal — a re-run recomputes `retired`
-      // with hasData as a precondition, so an already-husked delta no
-      // longer qualifies, and the husk evidence itself is erased once
-      // a tombstone-family fold merges it into a data-bearing target.
-      // Pre-existing husks without a marker (that crash window on an
-      // older build, or retirements from a build predating the marker)
-      // heal here before the folds can erase them.
-      val anyHusk = tombVs.exists(vt => !dataByV(vt))
-      if ((retired.nonEmpty || anyHusk) &&
-          !fs.exists(new Path(storeRoot, "_retired")))
-        fs.create(new Path(storeRoot, "_retired"), true).close()
       retired.foreach { vt =>
         stagedReplace(spark, famDir, vt) { staging =>
           val s = new Path(staging)
@@ -866,8 +774,8 @@ private[streaming] object VersionedStore {
           else writer).parquet(staging.toString)
       }
       // carry the key-order guard's range sidecars through the fold
-      // (the span of whichever sources have one — a missing source range
-      // was unguarded anyway, and understating never false-positives)
+      // (the span of whichever sources have one — a source without one
+      // predates the guard, and understating never false-positives)
       committedKeyRange(spark, dirs(famDir, group))
         .foreach(writeKeyRange(spark, _, staging.toString))
       // keyed-family fold targets record which tombstone deltas their

@@ -218,7 +218,7 @@ class DedupIngestSpec extends SparkTestBase {
     def run(b: Seq[(Long, String)], id: Long) =
       DedupIngest.processBatch(b.toDF("doc_id", "text"), id, storeRoot,
         keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000,
-        enforceKeyOrder = true, exactPrefilter = true)
+        exactPrefilter = true)
     for ((b, i) <- batches.zipWithIndex) run(b, i.toLong)
     def keptByBatch(): Map[Long, Set[Long]] =
       spark.read.parquet(keptDir)
@@ -281,11 +281,9 @@ class DedupIngestSpec extends SparkTestBase {
       "precedes committed keys") {
     val storeRoot = Files.createTempDirectory("graft-ingest-k").toString
     val keptDir = Files.createTempDirectory("graft-ingest-kk").toString
-    def run(rows: Seq[(Long, String)], id: Long,
-        enforce: Boolean = true) =
+    def run(rows: Seq[(Long, String)], id: Long) =
       DedupIngest.processBatch(rows.toDF("doc_id", "text"), id,
-        storeRoot, keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000,
-        enforceKeyOrder = enforce)
+        storeRoot, keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000)
     run(batches.head, 0L)
     // key 2 was committed by batch 0 — a re-used key must fail before
     // any store/dedup work happens
@@ -299,8 +297,6 @@ class DedupIngestSpec extends SparkTestBase {
       run(Seq((3L, "never seen but below the high-water mark")), 1L)
     }
     assert(stale.getMessage.contains("key-order"), stale.getMessage)
-    // the opt-out lets a trusted pipeline skip the check
-    run(Seq((2L, "explicitly waved through")), 1L, enforce = false)
     // a valid successor batch passes, and a retry of it (reading only
     // versions below its own id) still passes
     run(batches(1), 2L)
@@ -331,7 +327,7 @@ class DedupIngestSpec extends SparkTestBase {
           id: Long) =
         DedupIngest.processBatch(b.toDF("doc_id", "text"), id, root,
           kept, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000,
-          enforceKeyOrder = true, exactPrefilter = true)
+          exactPrefilter = true)
       for ((b, i) <- fuzzBatches.zipWithIndex) {
         run(rootA, keptA, b, i.toLong)
         run(rootB, keptB, b, i.toLong)
@@ -999,17 +995,14 @@ class DedupIngestSpec extends SparkTestBase {
       s"legacy takedown of key 100 must stay in force: ${sigKeys()}")
   }
 
-  test("a store that ever ran with enforceKeyOrder = false latches out " +
-      "of tombstone retirement (deletes still apply): unguarded " +
-      "batches void the monotone-key evidence retirement rides " +
-      "(r18 advice, low)") {
+  test("a store carrying the _unguarded marker of an older build never " +
+      "retires tombstones, and its deletes still apply") {
     val storeRoot = Files.createTempDirectory("graft-unguard-tomb").toString
     val keptDir = Files.createTempDirectory("graft-unguard-kept").toString
     def doc(tag: String) = (1 to 30).map(i => s"$tag$i").mkString(" ")
-    def run(rows: Seq[(Long, String)], id: Long, guard: Boolean = true) =
+    def run(rows: Seq[(Long, String)], id: Long) =
       DedupIngest.processBatch(rows.toDF("doc_id", "text"), id, storeRoot,
-        keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000,
-        enforceKeyOrder = guard)
+        keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000)
     def sigKeys(): Set[Long] = DedupIngest.loadSignatureStore(spark,
         storeRoot, Seq((0L, "x")).toDF("doc_id", "text"), "text",
         "doc_id")
@@ -1024,17 +1017,16 @@ class DedupIngestSpec extends SparkTestBase {
 
     run(Seq((1L, doc("ua")), (2L, doc("ub"))), 0L)
     DedupIngest.deleteKeys(spark, storeRoot, Seq(1L).toDF("doc_id"))
-    // one unguarded batch — the monotone-key contract is now merely
-    // trusted; the store carries the one-way latch from here on
-    run(Seq((3L, doc("uc")), (4L, doc("ud"))), 1L, guard = false)
-    assert(new java.io.File(s"$storeRoot/_unguarded").exists(),
-      "an unguarded batch must latch the store")
+    // the marker an older build left after running batches without the
+    // key-order guard: the store's history is no evidence of key order
+    assert(new java.io.File(s"$storeRoot/_unguarded").createNewFile())
+    run(Seq((3L, doc("uc")), (4L, doc("ud"))), 1L)
     run(Seq((5L, doc("ue")), (6L, doc("uf"))), 2L)
     // this compaction folds every pre-delete version (floor above the
     // marker) and leaves only a post-cutoff raw delta — WITHOUT the
-    // latch the marker would retire here on exactly that evidence; an
-    // unguarded post-cutoff batch could have re-carried key 1, so the
-    // evidence is void and the marker must survive
+    // marker the tombstone would retire here on exactly that evidence;
+    // an unguarded post-cutoff batch could have re-carried key 1, so
+    // the evidence is void and the tombstone must survive
     DedupIngest.compactStores(spark, storeRoot,
       sizeRatio = Double.PositiveInfinity)
     assert(tombstoneDataFiles() > 0,
@@ -1042,51 +1034,5 @@ class DedupIngestSpec extends SparkTestBase {
     // ...while the delete itself stays fully in force and compaction
     // still applied it physically to the folds
     assert(sigKeys() == Set(2L, 3L, 4L, 5L, 6L), sigKeys())
-  }
-
-  test("a store that has RETIRED tombstones refuses to go unguarded " +
-      "(r19 advice): retirement deleted tombstone data on the guard's " +
-      "evidence, so suspending the guard could silently resurrect " +
-      "takedowns — fail loud, with a manual-latch acknowledgment path") {
-    val storeRoot = Files.createTempDirectory("graft-retired-ug").toString
-    val keptDir = Files.createTempDirectory("graft-retired-ug-k").toString
-    def doc(tag: String) = (1 to 30).map(i => s"$tag$i").mkString(" ")
-    def run(rows: Seq[(Long, String)], id: Long, guard: Boolean = true) =
-      DedupIngest.processBatch(rows.toDF("doc_id", "text"), id, storeRoot,
-        keptDir, "text", "doc_id", 64, 16, 3, 0.7, 42, 10000,
-        enforceKeyOrder = guard)
-    run(Seq((1L, doc("ra")), (2L, doc("rb"))), 0L)
-    DedupIngest.deleteKeys(spark, storeRoot, Seq(1L).toDF("doc_id"))
-    run(Seq((3L, doc("rc")), (4L, doc("rd"))), 1L)
-    run(Seq((5L, doc("re")), (6L, doc("rf"))), 2L)
-    // folds every pre-delete version (floor above the marker), leaves
-    // v=2 as a post-cutoff raw delta — the anchored marker retires
-    DedupIngest.compactStores(spark, storeRoot,
-      sizeRatio = Double.PositiveInfinity)
-    assert(new java.io.File(s"$storeRoot/_retired").exists(),
-      "retirement must record the store-level _retired marker")
-    val err = intercept[IllegalStateException] {
-      run(Seq((7L, doc("rg"))), 3L, guard = false)
-    }
-    assert(err.getMessage.contains("resurrect"), err.getMessage)
-    // the marker's own crash window: even with it gone, the committed
-    // empty-husk versions are evidence enough
-    assert(new java.io.File(s"$storeRoot/_retired").delete())
-    val err2 = intercept[IllegalStateException] {
-      run(Seq((7L, doc("rg"))), 3L, guard = false)
-    }
-    assert(err2.getMessage.contains("empty-husk"), err2.getMessage)
-    // ...and the next retirement pass re-records the marker from the
-    // husk evidence BEFORE any tombstone-family fold could erase it
-    DedupIngest.compactStores(spark, storeRoot,
-      sizeRatio = Double.PositiveInfinity)
-    assert(new java.io.File(s"$storeRoot/_retired").exists(),
-      "an unmarked husk must self-heal the _retired marker")
-    // the documented acknowledgment: touch the latch manually (after
-    // re-issuing takedowns) — markUnguarded then short-circuits
-    assert(new java.io.File(s"$storeRoot/_unguarded").createNewFile())
-    run(Seq((7L, doc("rg")), (8L, doc("rh"))), 3L, guard = false)
-    assert(spark.read.parquet(s"$keptDir/ingest_batch=3")
-      .select("doc_id").as[Long].collect().toSet == Set(7L, 8L))
   }
 }

@@ -43,12 +43,11 @@ class SimilarityStoreModelSpec extends StoreModelHarness {
         (1, Seq.tabulate(dim)(i => if (i == 1) 1.0 else 0.0)))
         .toDF("_cid", "_cv")
 
-      def ingestBatch(keys: Seq[Long], id: Long,
-          guard: Boolean): Unit =
+      def ingestBatch(keys: Seq[Long], id: Long): Unit =
         SimilarityIngest.processBatch(
           keys.map(k => (k, emb(k))).toDF("key", "emb"), id, root,
           keptDir, "emb", "key", dim, numBits, threshold = 0.95,
-          seed = 42L, centroids = Some(cents), enforceKeyOrder = guard)
+          seed = 42L, centroids = Some(cents))
 
       def compact(ratio: Double): Unit =
         SimilarityIngest.compactStores(spark, root, ratio)
@@ -116,12 +115,11 @@ class ImageStoreModelSpec extends StoreModelHarness {
       private val keptDir =
         Files.createTempDirectory("graft-sm-imgk").toString
 
-      def ingestBatch(keys: Seq[Long], id: Long,
-          guard: Boolean): Unit =
+      def ingestBatch(keys: Seq[Long], id: Long): Unit =
         ImageDedupIngest.processBatch(
           keys.map(k => (k, png(k))).toDF("key", "img"), id, root,
           keptDir, "img", "key", maxDistance = 3, maxBucketSize = 5000,
-          method = "dhash", enforceKeyOrder = guard)
+          method = "dhash")
 
       def compact(ratio: Double): Unit =
         ImageDedupIngest.compactStores(spark, root, ratio)

@@ -717,11 +717,13 @@ class ScaleStressSpec extends SparkTestBase {
 
   test("ingest per-batch cost vs version-history width: wide label " +
       "history taxes every batch; compaction returns it to the floor") {
-    import graft.streaming.DedupIngest
+    import graft.streaming.{DedupIngest, VersionedStore}
     // Same LIVE store content throughout — n signature rows, n live
     // labels; only the version-history SHAPE varies. Histories are
     // synthesized directly (the reader cost under test is a function
-    // of the directories on disk, not of how they accrued): the first
+    // of the directories on disk, not of how they accrued), each `sig/`
+    // version with the `_keyrange` sidecar a batch leaves, so the
+    // key-order guard reads the history too: the first
     // label version carries the live mapping, each later version the
     // churn rows a relabel-heavy batch leaves behind, which the
     // latest-per-key reconstruction must shuffle on EVERY subsequent
@@ -736,8 +738,9 @@ class ScaleStressSpec extends SparkTestBase {
       .pinnedCheckpoint()
     def buildStore(root: String, width: Int): Unit =
       for (v <- 1 to width) {
-        sigs.filter(col("doc_id") % width === (v - 1))
-          .write.mode("overwrite").parquet(s"$root/sig/v=$v")
+        val slice = sigs.filter(col("doc_id") % width === (v - 1))
+        slice.write.mode("overwrite").parquet(s"$root/sig/v=$v")
+        VersionedStore.writeKeyRange(slice, "doc_id", s"$root/sig/v=$v")
         val delta =
           if (v == 1) spark.range(n).select(col("id").as("key"),
             col("id").as("component"), lit(1L).as("_v"))

@@ -510,11 +510,6 @@ class SimilarityIngestSpec extends SparkTestBase {
         Seq((2L, base(7))).toDF("vec_id", "embedding"), 1L, storeRoot,
         keptDir, "embedding", "vec_id", dim, 4, 0.95, 42L, None))
     assert(stale.getMessage.contains("key-order"), stale.getMessage)
-    // and the override lets a trusted upstream through
-    SimilarityIngest.processBatch(
-      Seq((2L, base(7))).toDF("vec_id", "embedding"), 1L, storeRoot,
-      keptDir, "embedding", "vec_id", dim, 4, 0.95, 42L, None,
-      enforceKeyOrder = false)
   }
 
   test("tombstones: deleted vectors vanish from the LSH and assigned " +

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{max, min}
 
 import graft.core.ParquetSchema
@@ -278,5 +279,69 @@ class StoreFamiliesSpec extends graft.SparkTestBase {
     }
     VersionedStore.enforceKeyOrderGuard(Seq(10L).toDF("key"), 2L, famDir,
       "key")
+  }
+
+  /** The `_keyrange` schema of a long key. */
+  private lazy val longRange =
+    VersionedStore.KeyRange.of(Seq(0L).toDF("key"), "key").schema
+
+  /** A committed version `v` of `famDir` holding no rows, with the
+    * `_keyrange` sidecar of `range` (None: an empty batch's null range). */
+  private def commitRange(famDir: String, v: Long,
+      range: Option[(Long, Long)]): Unit = {
+    val dir = new java.io.File(s"$famDir/v=$v")
+    dir.mkdirs()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    VersionedStore.writeKeyRange(spark, VersionedStore.KeyRange(longRange,
+      range.fold(Row(null, null)) { case (lo, hi) => Row(lo, hi) }),
+      dir.toString)
+  }
+
+  test("the key-order guard reads the two end sidecars of a wide " +
+      "history, skipping null ranges, and none in between") {
+    val famDir = s"${tmp("graft-fam-wide")}/sig"
+    // v=0 and v=199 are empty batches; v=1..198 span [10v, 10v + 5]
+    for (v <- 0L until 200L)
+      commitRange(famDir, v,
+        if (v == 0L || v == 199L) None else Some((10 * v, 10 * v + 5)))
+    // every sidecar the guard must not need is no longer parquet
+    for (v <- 2L to 197L;
+        f <- new java.io.File(s"$famDir/v=$v/_keyrange").listFiles();
+        if f.getName.startsWith("part-"))
+      Files.write(f.toPath, "not a parquet file".getBytes("UTF-8"))
+    assert(VersionedStore.committedKeyRange(spark,
+      VersionedStore.dirs(famDir, 0L until 200L))
+      .map(r => (r.min, r.max)) == Some((10L, 1985L)))
+    def guard(batchMin: Long): Unit =
+      VersionedStore.enforceKeyOrderGuard(Seq(batchMin, batchMin + 1)
+        .toDF("key"), 200L, famDir, "key")
+    // a reused key (committed in v=150's span) and a stale one (in no
+    // span, but below the store's max)
+    for (batchMin <- Seq(1500L, 1007L)) {
+      val e = intercept[IllegalStateException](guard(batchMin))
+      assert(e.getMessage.contains("key-order") &&
+        e.getMessage.contains("max key 1985"), e.getMessage)
+    }
+    guard(1986L)
+  }
+
+  test("a store with an older build's _unguarded marker reads every " +
+      "sidecar: its ranges need not increase with the version") {
+    val root = tmp("graft-fam-latched")
+    val famDir = s"$root/sig"
+    commitRange(famDir, 0L, Some((1L, 100L)))
+    commitRange(famDir, 1L, Some((5L, 6L)))
+    def span = VersionedStore.committedKeyRange(spark,
+      VersionedStore.dirs(famDir, Seq(0L, 1L))).map(r => (r.min, r.max))
+    // without the marker the history is taken as guarded: its ends hold
+    // the span
+    assert(span == Some((1L, 6L)))
+    assert(new java.io.File(s"$root/_unguarded").createNewFile())
+    assert(span == Some((1L, 100L)))
+    val e = intercept[IllegalStateException] {
+      VersionedStore.enforceKeyOrderGuard(Seq(50L, 51L).toDF("key"), 2L,
+        famDir, "key")
+    }
+    assert(e.getMessage.contains("max key 100"), e.getMessage)
   }
 }

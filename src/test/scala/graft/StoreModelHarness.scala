@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
-
 import graft.SparkTestBase
 
 /** Shared model-based randomized harness for the tombstone/compaction
@@ -27,19 +25,15 @@ import graft.SparkTestBase
   * (anchored keys can never legitimately re-arrive — the key-order
   * guard never frees key space; pre-emptive/legacy keys MAY arrive
   * later but their markers never retire, so they stay anti-joined), so
-  * no interleaving of folds, retirements, redeliveries, or guard
-  * latches may ever change the visible set beyond ingest/delete
-  * themselves. Any over-eager retirement, lost tombstone, partial
-  * `_cutoff` carry, fold double-count, or crash-healing slip shows up
-  * as a model mismatch with the seed and full trace in the failure
-  * message.
+  * no interleaving of folds, retirements or redeliveries may ever
+  * change the visible set beyond ingest/delete themselves. Any
+  * over-eager retirement, lost tombstone, partial `_cutoff` carry, fold
+  * double-count, or crash-healing slip shows up as a model mismatch with
+  * the seed and full trace in the failure message.
   *
   * Ops vocabulary (fixed across descriptors, same draw sequence as the
-  * original round-18 harness): ingest (monotone keys; 1-in-8 batches
-  * run with the key-order guard DISABLED, which latches retirement off
-  * — unless the store has RETIRED tombstones, where `markUnguarded` now
-  * fails loud (r20) and the model mirrors the operator remedy by
-  * keeping the guard on), redelivery of the newest batch, anchored
+  * original round-18 harness): ingest (monotone keys, under the
+  * key-order guard), redelivery of the newest batch, anchored
   * deletes, PRE-EMPTIVE deletes (key not yet ingested — the r18 bug-(a)
   * window), LEGACY sidecar-less tombstone deltas (the r19
   * `_cutoff`-carry advice), full compaction at random size ratios (the
@@ -54,8 +48,8 @@ abstract class StoreModelHarness extends SparkTestBase {
     /** The keyed families tombstones apply to (retirement evidence). */
     def keyedFamilies: Seq[String]
     /** Commit one micro-batch of fresh keys at version `id`, exactly
-      * as the ingest writes it (`guard = false` latches the store). */
-    def ingestBatch(keys: Seq[Long], id: Long, guard: Boolean): Unit
+      * as the ingest writes it. */
+    def ingestBatch(keys: Seq[Long], id: Long): Unit
     /** The ingest's full compactStores order at `ratio`. */
     def compact(ratio: Double): Unit
     /** The visible key set per the ingest's own committed-prefix
@@ -83,8 +77,6 @@ abstract class StoreModelHarness extends SparkTestBase {
     val rnd = new scala.util.Random(seed)
     val root = Files.createTempDirectory(s"graft-sm-$seed").toString
     val ops = mk(root)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // ---- model ----
     val ingested = scala.collection.mutable.Set.empty[Long]
@@ -99,14 +91,11 @@ abstract class StoreModelHarness extends SparkTestBase {
       val keys = (0 until 1 + rnd.nextInt(3)).map(_ => {
         val k = nextKey; nextKey += 1; k
       })
-      // 1-in-8 batches run unguarded — unless the store has retired
-      // tombstones, where markUnguarded fails loud (r20) and the
-      // operator remedy is keeping the guard on
-      val wantUnguarded = rnd.nextInt(8) == 0
-      val guard = !wantUnguarded ||
-        fs.exists(new Path(root, "_retired"))
-      trace ++= s"ingest(${keys.mkString(",")},guard=$guard) "
-      ops.ingestBatch(keys, nextBatch, guard)
+      // the draw that once picked 1-in-8 batches to run without the
+      // guard: still taken, so every seed keeps its op schedule
+      rnd.nextInt(8)
+      trace ++= s"ingest(${keys.mkString(",")}) "
+      ops.ingestBatch(keys, nextBatch)
       lastBatch = Some(keys)
       ingested ++= keys
       nextBatch += 1
@@ -115,8 +104,8 @@ abstract class StoreModelHarness extends SparkTestBase {
       trace ++= s"redeliver(${keys.mkString(",")}) "
       // the foreachBatch retry re-runs the guard against versions
       // BELOW its own id (its first attempt's range is excluded), so
-      // it passes — and it never latches the unguarded marker
-      ops.ingestBatch(keys, nextBatch - 1, guard = true)
+      // it passes
+      ops.ingestBatch(keys, nextBatch - 1)
     }
     def delete(keys: Seq[Long]): Unit = {
       VersionedStore.writeTombstones(spark, root,

@@ -38,14 +38,11 @@ class TombstoneModelSpec extends StoreModelHarness {
         val keyedFamilies = Seq("sig")
         private val famDir = s"$root/sig"
 
-        // writing exactly as the ingests write: guard (or latch), data
-        // commit, then the _keyrange sidecar
-        def ingestBatch(keys: Seq[Long], id: Long,
-            guard: Boolean): Unit = {
+        // writing exactly as the ingests write: guard, data commit,
+        // then the _keyrange sidecar
+        def ingestBatch(keys: Seq[Long], id: Long): Unit = {
           val df = keys.map(k => (k, s"p$k")).toDF("key", "payload")
-          if (guard)
-            VersionedStore.enforceKeyOrderGuard(df, id, famDir, "key")
-          else VersionedStore.markUnguarded(spark, root)
+          VersionedStore.enforceKeyOrderGuard(df, id, famDir, "key")
           df.coalesce(1).write.mode("overwrite")
             .parquet(s"$famDir/v=$id")
           VersionedStore.writeKeyRange(df, "key", s"$famDir/v=$id")
